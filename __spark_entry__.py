@@ -924,111 +924,42 @@ _VDICT_CC_CACHE: dict = {}
 # ---------------------------------------------------------------------------
 # The correctness driver certifies the FIRST 50 registered queries each
 # round.  Registration order is therefore an evidence-allocation decision:
-# entries that have never earned a driver row go first (heaviest families
-# leading), then previously-certified entries oldest-round-first so the
+# entries that have never earned a green driver row go first (in
+# registration order), then certified entries oldest-round-first, so the
 # whole surface rotates through the window over successive rounds.  The
-# round each name last received a green driver row (union of
-# CORRECTNESS_r01-r04.json; r01's 36 were all re-certified later):
+# rounds are read from the driver's own CORRECTNESS_rNN.json files next
+# to this module, so the order needs no hand-kept table.
 
-_LAST_DRIVER_ROUND: dict[str, int] = {
-    **dict.fromkeys(
-        ["audio_features", "decode_images", "events_hourly_counts",
-         "events_props", "events_sessions", "events_sessions_native",
-         "resize_images", "video_frames"], 2),
-    **dict.fromkeys(
-        ["ann_ivf_topk", "ann_topk", "bm25_search", "classifier_scores",
-         "containment_pairs", "cosine_lsh_pairs", "cosine_near_pairs",
-         "dedup_exact", "dedup_fingerprint", "embedding_dedup",
-         "fuzzy_term_search", "hybrid_search_rrf", "ivfpq_topk",
-         "lang_id_counts", "minhash_lsh_pairs", "near_dedup",
-         "ngram_jaccard_pairs", "ngram_shingle_metrics", "pq_topk",
-         "quality_bands", "semantic_dedup", "simhash_docs",
-         "simhash_pairs", "tf_idf_terms", "token_stats",
-         "winnow_fingerprints", "winnow_pairs"], 3),
-    **dict.fromkeys(
-        ["affine_gap_scan", "block_split_pairs", "candidate_pairs_k2",
-         "candidate_pairs_k3", "candidate_pairs_k4",
-         "candidate_pairs_passjoin", "dict_build", "dict_match",
-         "dict_prefix", "dict_range_ge_lt", "dict_range_gt_le",
-         "er_bcubed", "er_blocking_cost", "er_canopies",
-         "er_cluster_cohesion", "er_cluster_metrics", "er_cluster_sizes",
-         "er_components", "er_fs_calibration", "er_fs_em",
-         "er_fs_leveled", "er_fs_leveled_weights", "er_fs_match_metrics",
-         "er_fs_resolve", "er_fs_weights", "er_golden_records",
-         "er_greedy_link", "er_group_linkage", "er_incremental",
-         "er_merge_center", "er_mutual_best", "er_pair_metrics",
-         "er_pivot_clusters", "er_scored_pairs", "er_star_clusters",
-         "er_threshold_sweep", "fst_file_roundtrip", "fuzzy_damerau_k2",
-         "fuzzy_hit_count", "fuzzy_join_parts", "fuzzy_lev_k2",
-         "fuzzy_lev_k2_dfa", "fuzzy_multi_lookup", "fuzzy_osa_k2",
-         "fuzzy_prefix_pinned", "index_fuzzy_scan",
-         "phonetic_block_pairs", "qgram_block_pairs",
-         "sort_lines_ranked", "token_block_pairs"], 4),
-}
 
-#: curated order for the never-driver-certified entries — heaviest
-#: families first (LSH dedup, ANN, search/index, sketches, graph,
-#: multimodal-adjacent, sampling, events, text, then the round-4 ER
-#: additions).  New entries absent from this list are automatically
-#: treated as never-checked and sorted ahead of it.
-_NEVER_CHECKED_PRIORITY: list[str] = [
-    # LSH / dedup family
-    "minhash_lsh_join_pairs", "near_dedup_incremental", "span_dedup",
-    "jaccard_prefix_pairs", "canonical_url_dedup", "crawl_diff_status",
-    # ANN
-    "ann_recall_ivf", "ann_block_pairs", "ann_block_quality",
-    # search / persisted index
-    "phrase_search_docs", "boolean_search_docs", "indexed_phrase_scan",
-    "indexed_bm25_search", "indexed_fuzzy_term_scan",
-    # sketches
-    "hll_distinct_texts", "cms_term_counts", "bloom_seen_terms",
-    "bloom_new_terms", "lang_distinct_sketch",
-    # graph
-    "doc_link_degrees", "doc_pagerank", "doc_hits", "host_pagerank",
-    "host_hits", "extracted_link_hosts",
-    # sampling / mixtures
-    "sample_weighted", "sample_stratified", "sample_domain_quota",
-    "train_eval_counts", "mixture_rates", "mixture_sample_counts",
-    "dsir_doc_weights",
-    # events / time
-    "events_asof", "events_interval", "events_overlap",
-    "events_rolling", "latest_events", "events_value_profile",
-    "events_value_hist", "events_value_depth_hist",
-    "skew_profile_users", "skew_summary_users",
-    # text / pipeline
-    "vocab_topk", "bigram_topk", "collocations", "bpe_pair_stats",
-    "bpe_merges", "top_docs_per_lang", "pii_stats", "decontam_overlap",
-    "repetition_stats", "docs_rollup", "docs_cube", "docs_chunks",
-    "packed_sequences", "host_stats", "lm_doc_scores",
-    "quality_gate_flags", "boilerplate_stripped",
-    # round-4 ER additions
-    "er_monge_elkan", "er_soft_tfidf", "er_swoosh",
-    "er_swoosh_entities", "er_swoosh_incremental", "er_blocking_scheme",
-    "er_ensemble_blocking", "er_progressive_pairs", "er_fused_values",
-    "er_repaired_clusters", "er_fusion_em", "er_link_mutual",
-    "er_link_greedy", "er_blocking_quality", "er_ari", "er_gmd",
-    "er_nmi", "er_fs_ece", "er_fs_regions", "er_fs_tf",
-    "er_review_sample", "snm_pairs", "snm_multipass_pairs",
-    "suffix_block_pairs", "meta_block_wep", "meta_block_wnp",
-    "grid_near_pairs", "clk_encode_cards", "clk_dice_pairs",
-    "clk_hlsh_pairs",
-]
+def _last_driver_rounds() -> dict[str, int]:
+    """Entry name -> the last round N whose CORRECTNESS_rNN.json row for
+    it is green (rows, schema and hash all match)."""
+    import glob
+    import json
+    import os
+    import re
+
+    last: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if all(row.get(f) for f in ("rows_match", "schema_match", "hash_match")):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def _driver_order(q: dict) -> dict:
     """Reorder the query registry so the driver's first-50 correctness
-    window lands on the entries with the weakest driver evidence."""
-    prio_rank = {n: i for i, n in enumerate(_NEVER_CHECKED_PRIORITY)}
-    reg_rank = {n: i for i, n in enumerate(q)}
-
-    def key(n):
-        checked = n in _LAST_DRIVER_ROUND
-        if not checked:
-            # brand-new entries (absent from the curated list) lead
-            return (0, prio_rank.get(n, -1), reg_rank[n])
-        return (1, _LAST_DRIVER_ROUND[n], reg_rank[n])
-
-    return {n: q[n] for n in sorted(q, key=key)}
+    window lands on the entries with the weakest driver evidence:
+    never-certified first, then by last certified round (the sort is
+    stable, so ties keep registration order)."""
+    last = _last_driver_rounds()
+    return {n: q[n] for n in sorted(q, key=lambda n: last.get(n, 0))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

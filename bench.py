@@ -660,8 +660,7 @@ def run_scaling(sf_dir: str) -> dict:
         spark.stop()
     tp_lo = results[lo]["pairs_per_sec"]
     tp_hi = results[hi]["pairs_per_sec"]
-    ratio = int(hi) / int(lo)
-    eff = round((tp_hi / tp_lo) / ratio, 3) if tp_lo else None
+    speedup, eff = _speedup_efficiency(tp_lo, tp_hi, int(hi) / int(lo))
     scaling = {
         "cores_n": int(lo),
         "cores_4n": int(hi),
@@ -672,12 +671,22 @@ def run_scaling(sf_dir: str) -> dict:
         "n_resolve_sec": results[lo]["resolve_sec"],
         "four_n_resolve_sec": results[hi]["resolve_sec"],
         "candidate_pairs": results[hi]["candidate_pairs"],
-        "speedup_n_to_4n": round(tp_hi / tp_lo, 3) if tp_lo else None,
+        "speedup_n_to_4n": speedup,
         "scaling_efficiency": eff,
         "index_amortization": idx,
     }
     _write_bench_md(sf_dir, scaling)
     return scaling
+
+
+def _speedup_efficiency(tp_lo, tp_hi, ratio: float) -> tuple:
+    """(N->4N speedup, scaling efficiency) from the two throughputs;
+    (None, None) unless both are nonzero numbers — a child that timed
+    nothing reports a None throughput, and a scaling run must not crash
+    on it after hours of child runs."""
+    if not (tp_lo and tp_hi):
+        return None, None
+    return round(tp_hi / tp_lo, 3), round((tp_hi / tp_lo) / ratio, 3)
 
 
 def run_er_suite_scaling(sf_dir: str) -> dict:
@@ -734,16 +743,15 @@ def run_er_suite_scaling(sf_dir: str) -> dict:
         # floors) — constant in input, so efficiency rises with scale
         w = (t_lo - t_hi) / (1.0 / int(lo) - 1.0 / int(hi))
         c = t_lo - w / int(lo)
+        speedup, eff = _speedup_efficiency(tp_lo, tp_hi, ratio)
         ops[op] = {
             "n_sec": t_lo,
             "four_n_sec": t_hi,
             "n_rows_per_sec": tp_lo,
             "four_n_rows_per_sec": tp_hi,
             "workload_rows": results[hi][op]["workload_rows"],
-            "speedup_n_to_4n": round(tp_hi / tp_lo, 3) if tp_lo else None,
-            "scaling_efficiency": (
-                round((tp_hi / tp_lo) / ratio, 3) if tp_lo else None
-            ),
+            "speedup_n_to_4n": speedup,
+            "scaling_efficiency": eff,
             "amdahl_parallel_sec": round(w, 3),
             "amdahl_serial_sec": round(c, 3),
         }

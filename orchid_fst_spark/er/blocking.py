@@ -9,7 +9,8 @@ the default candidate generator is segment/pigeonhole blocking
 shares one exactly-matching segment, found by a plain equi-join on O(1)
 signature rows per key; deletion-neighborhood signatures
 (operators/dictionary.variant_sigs) remain as the high-precision option
-for short keys.
+for short keys.  Both run through the one edit-distance self-join,
+``operators.dictionary.fuzzy_self_pairs``.
 
 Skew design (the story the reference never needed, SURVEY.md §7.4):
 explicit per-signature frequency caps bound the quadratic blow-up of
@@ -27,21 +28,10 @@ Levenshtein prefilter.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions.distance import batch_levenshtein
 from ..functions.normalize import HOST_RE, norm_key
-from ..operators.dictionary import (
-    _variants_df,
-    _verified_pairs,
-    grouped_self_candidates,
-    variant_sigs,
-)
-from ..operators.passjoin import passjoin_self_candidates
+from ..operators.dictionary import _variants_df, fuzzy_self_pairs
 
 # path (title) part of a URL: everything between host and ?/#
 PATH_RE = "^[a-z][a-z0-9+.-]*://[^/?#]+/([^?#]*)"
@@ -74,25 +64,25 @@ def candidate_pairs(
     sig_cap: int = 1000,
     damerau: bool = True,
     algo: str = "passjoin",
-    sig_scheme: str = "full",
-    sig_window: int = 16,
 ) -> DataFrame:
-    """Candidate url pairs whose norm_keys are within edit distance k.
+    """Distinct norm_key pairs within edit distance k: ``fuzzy_self_pairs``
+    over the non-empty ``norm_key`` values.
 
     Plan: distinct keys -> signature explode (JVM-side) -> equi-join /
-    in-group pair explode -> distinct key pairs -> vectorized banded-DP
-    verify -> join urls back.
+    in-group pair explode over 8-byte key ids -> distinct id pairs ->
+    id->key join-back -> vectorized banded-DP verify.
 
     ``algo`` picks the blocking signature family (both exact for k<=2):
       'passjoin'  segment/pigeonhole blocking (operators/passjoin):
                   ~40 signature rows per key *independent of key
                   length* — the default and the scheme that survives
                   10^12 long web keys.
-      'deletes'   deletion-neighborhood signatures
-                  (dictionary.variant_sigs, ``sig_scheme``/'window'
-                  ``sig_window`` control full vs windowed deletes):
-                  O(len²) rows/key but the tightest precision; right
-                  for short keys (word dictionaries).
+      'deletes'   full-key deletion-neighborhood signatures
+                  (dictionary.variant_sigs): O(len²) rows/key but the
+                  tightest precision; right for short keys (word
+                  dictionaries).
+    A k beyond a family's ceiling warns and reroutes (see
+    ``fuzzy_self_pairs``); any other name is a ValueError.
 
     ``sig_cap`` drops signatures shared by more than cap keys (a
     degenerate block would contribute O(cap²) pairs); dropped mass is
@@ -100,52 +90,15 @@ def candidate_pairs(
     (key_a, key_b, dist) over *keys*; join back to urls downstream so the
     quadratic work happens on distinct keys, not urls.
     """
-    # all heavy shuffles move 8-byte ids, not key strings: keys get an
-    # xxhash64 id (collisions at realistic key counts are ~2^-64·n²/2 and
-    # only ever produce extra verify work after the id->key join-back,
-    # never a wrong pair, since pairs are DP-verified on the strings)
-    # distinct() already hash-distributes on key — no extra repartition
-    keys = (
-        normalized.select(F.col("norm_key").alias("key"))
-        .filter(F.length("norm_key") > 0)
-        .distinct()
+    return fuzzy_self_pairs(
+        normalized.filter(F.length("norm_key") > 0),
+        "norm_key",
+        k=k,
+        damerau=damerau,
+        max_len=max_len,
+        sig_cap=sig_cap,
+        algo=algo,
     )
-    keymap = keys.select("key", F.xxhash64("key").alias("kid"))
-
-    if algo == "passjoin":
-        cand_ids = passjoin_self_candidates(
-            keymap, k=k, max_len=max_len, sig_cap=sig_cap
-        )
-    elif algo == "deletes":
-        variants = variant_sigs(
-            keymap, "key", k, max_len, scheme=sig_scheme, window=sig_window
-        ).select(F.col("kid").alias("key"), "sig")
-        # single-shuffle candidate generation: groupBy(sig) + in-group
-        # pair explode over (long sig, long id) rows, skew-capped groups
-        cand_ids = grouped_self_candidates(variants, sig_cap)
-    else:
-        raise ValueError(f"unknown blocking algo: {algo}")
-    # id -> key join-back.  No broadcast hint: building a broadcast of a
-    # large keymap is a *serial* driver cost that caps scaling (measured:
-    # ~2x wall on a 1M-key run); AQE picks broadcast when the keymap is
-    # genuinely small and a parallel shuffle join otherwise.
-    cand = (
-        cand_ids.join(
-            keymap.select(F.col("kid").alias("key_a"), F.col("key").alias("ka")),
-            "key_a",
-        )
-        .join(
-            keymap.select(F.col("kid").alias("key_b"), F.col("key").alias("kb")),
-            "key_b",
-        )
-        .select(
-            F.least("ka", "kb").alias("key_a"), F.greatest("ka", "kb").alias("key_b")
-        )
-    )
-
-    # exact verify: JVM banded Levenshtein (plain k, or 2k prefilter +
-    # vectorized OSA for damerau) — see dictionary._verified_pairs
-    return _verified_pairs(cand, k, damerau)
 
 
 def blocking_metrics(normalized: DataFrame, k: int = 2, max_len: int = 96) -> DataFrame:

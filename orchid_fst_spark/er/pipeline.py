@@ -96,13 +96,13 @@ def resolve(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     algo: str = "passjoin",
-    sig_scheme: str = "full",
-    sig_window: int = 16,
 ) -> DataFrame:
     """Cluster pages whose normalized host+title keys are within edit
     distance k.  Returns (url, norm_key, cluster_id) — ``text`` never
     enters the pipeline, so the byte-identity invariant holds trivially;
-    join the result back to the source on url for enriched output."""
+    join the result back to the source on url for enriched output.
+    ``algo`` ('passjoin' | 'deletes') picks the blocking signature
+    family, see ``candidate_pairs``."""
     spark = pages.sparkSession
     ck = _Checkpointer(spark, checkpoint_dir, resume)
 
@@ -114,10 +114,10 @@ def resolve(
         "candidate_pairs",
         lambda: candidate_pairs(
             normalized, k=k, max_len=max_len, sig_cap=sig_cap, damerau=damerau,
-            algo=algo, sig_scheme=sig_scheme, sig_window=sig_window,
+            algo=algo,
         ),
         {"k": k, "damerau": damerau, "sig_cap": sig_cap, "max_len": max_len,
-         "algo": algo, "sig_scheme": sig_scheme, "sig_window": sig_window},
+         "algo": algo},
     )
 
     edges = ck.run(

@@ -69,14 +69,6 @@ def canonical_url(col) -> Column:
     return F.regexp_replace(c, "/$", "")
 
 
-def block_key(col, prefix_len: int) -> Column:
-    """Blocking key = first ``prefix_len`` chars of the normalized key —
-    the Spark realization of the reference's ``samePrefixLen`` pinned
-    prefix (fst.cpp:530-553)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(c, 1, prefix_len)
-
-
 def tokens(col) -> Column:
     """Whitespace tokens of a normalized string (empty strings removed)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -1,8 +1,8 @@
 """Text-analysis column expressions for training-data pipelines.
 
 All pure Catalyst (JVM codegen, no Python): language-ID by stopword-hit
-ratio, quality scoring, token counting (whitespace + BPE-ish regex),
-and document fingerprinting.  Each has an exact DuckDB-SQL twin in the
+ratio, whitespace token counting, PII pattern counting/redaction, and
+document fingerprinting.  Each has an exact DuckDB-SQL twin in the
 oracle layer.
 """
 
@@ -29,12 +29,6 @@ def token_count(col) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_token_count(col) -> Column:
-    """Count of BPE-ish regex tokens (letters runs / digit runs / symbols)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_RE), 0))
-
-
 def stopword_ratio(col, lang: str = "en") -> Column:
     """Fraction of whitespace tokens that are stopwords of ``lang``."""
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
@@ -59,26 +53,6 @@ def lang_id(col) -> Column:
 # punctuation class shared with the DuckDB oracle SQL (kept quote-free so
 # the SQL literal needs no escaping) — change both or neither
 PUNCT_CLASS = "[^.,;:!?()-]"
-
-
-def punct_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    p = F.length(F.regexp_replace(c, PUNCT_CLASS, ""))
-    return F.when(n > 0, p / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col) -> Column:
-    """Composite [0,1] quality heuristic: length band + low punctuation +
-    healthy mean token length.  Deterministic, codegen-friendly."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    ntok = token_count(c)
-    mean_tok = F.when(ntok > 0, n / ntok).otherwise(F.lit(0.0))
-    len_ok = F.when((n >= 50) & (n <= 10000), F.lit(1.0)).otherwise(F.lit(0.5))
-    punct_ok = F.when(punct_ratio(c) < 0.2, F.lit(1.0)).otherwise(F.lit(0.5))
-    tok_ok = F.when((mean_tok >= 3) & (mean_tok <= 12), F.lit(1.0)).otherwise(F.lit(0.5))
-    return (len_ok + punct_ok + tok_ok) / F.lit(3.0)
 
 
 # PII-ish patterns shared with the DuckDB oracle SQL (kept inside the

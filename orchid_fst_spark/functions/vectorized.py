@@ -26,28 +26,6 @@ def osa_distance(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out.astype("int32"))
 
 
-def osa_distance_clamped(clamp: int):
-    """OSA distance saturating at clamp+1 (k-banded; cheaper at scale)."""
-
-    @F.pandas_udf(IntegerType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = batch_levenshtein(
-            a.fillna("").tolist(), b.fillna("").tolist(), clamp=clamp, transpositions=True
-        )
-        return pd.Series(out.astype("int32"))
-
-    return _udf
-
-
-@F.pandas_udf(IntegerType())
-def lev_distance_vec(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Plain Levenshtein via the numpy batch kernel.  Prefer the JVM
-    built-in ``F.levenshtein`` in plans; this exists for differential
-    tests of the kernel against the built-in."""
-    out = batch_levenshtein(a.fillna("").tolist(), b.fillna("").tolist())
-    return pd.Series(out.astype("int32"))
-
-
 @F.pandas_udf(IntegerType())
 def true_damerau_distance(a: pd.Series, b: pd.Series) -> pd.Series:
     """Unrestricted Damerau-Levenshtein (matches DuckDB's

@@ -436,11 +436,14 @@ def _banded_routing(algo: str, k: int) -> str:
     fst_cmd.cpp:103-111 — no k may be a hard reject).  deletes holds to
     k<=2, segment blocking (passjoin) to k<=MAX_K=8, anything larger
     runs the length-banded brute-force block (complete for any k; the
-    O(n·m) join is the honest cost of a 9+-edit radius)."""
+    O(n·m) join is the honest cost of a 9+-edit radius).  An unknown
+    algo name is a ValueError, never a silent fallback."""
     import warnings
 
     from .passjoin import MAX_K
 
+    if algo not in ("deletes", "passjoin", "banded"):
+        raise ValueError(f"unknown blocking algo: {algo}")
     if algo == "deletes" and k > 2:
         new = "passjoin" if k <= MAX_K else "banded"
         warnings.warn(
@@ -457,22 +460,35 @@ def _banded_routing(algo: str, k: int) -> str:
     return algo
 
 
+def _join_back(cand_ids: DataFrame, lk: DataFrame, rk: DataFrame) -> DataFrame:
+    """Candidate id pairs (key_a, key_b) joined back to their key strings
+    (ka, kb) through the keymaps ``lk``/``rk`` (columns key, kid).  No
+    broadcast hint: building a broadcast of a large keymap is a *serial*
+    driver cost that caps scaling (measured: ~2x wall on a 1M-key run);
+    AQE picks broadcast when the keymap is genuinely small and a
+    parallel shuffle join otherwise."""
+    return cand_ids.join(
+        lk.select(F.col("kid").alias("key_a"), F.col("key").alias("ka")), "key_a"
+    ).join(rk.select(F.col("kid").alias("key_b"), F.col("key").alias("kb")), "key_b")
+
+
 def _banded_join_candidates(lk: DataFrame, rk: DataFrame, k: int) -> DataFrame:
-    """Brute-force-within-length-band candidate ids for k beyond the
-    segment-blocking ceiling: every right key fans out to the 2k+1
-    length buckets its partners can occupy, then an equi-join on bucket.
-    O((2k+1)·|right|) fan-out and O(n·m) worst-case join rows within a
-    band — the documented fallback, not the scale path."""
-    lb = lk.select(F.col("kid").alias("kid_l"), F.length("key").alias("b"))
+    """Brute-force-within-length-band candidate ids (key_a from ``lk``,
+    key_b from ``rk``) for k beyond the segment-blocking ceiling: every
+    right key fans out to the 2k+1 length buckets its partners can
+    occupy, then an equi-join on bucket.  O((2k+1)·|right|) fan-out and
+    O(n·m) worst-case join rows within a band — the documented fallback,
+    not the scale path."""
+    lb = lk.select(F.col("kid").alias("key_a"), F.length("key").alias("b"))
     rb = rk.select(
-        F.col("kid").alias("kid_r"),
+        F.col("kid").alias("key_b"),
         F.explode(
             F.sequence(
                 F.greatest(F.length("key") - k, F.lit(0)), F.length("key") + k
             )
         ).alias("b"),
     )
-    return lb.join(rb, "b").select("kid_l", "kid_r").distinct()
+    return lb.join(rb, "b").select("key_a", "key_b").distinct()
 
 
 def fuzzy_join(
@@ -531,8 +547,8 @@ def fuzzy_join(
             lk, rk, k=k, max_len=max_len, sig_cap=sig_cap
         )
     else:
-        # single-shuffle grouped candidates (mirror of
-        # grouped_self_candidates): both sides' signature explodes union
+        # single-shuffle grouped candidates (two-sided mirror of
+        # dedup.grouped_bucket_pairs): both sides' signature explodes union
         # into ONE frame, groupBy(sig) collects per-side id arrays as
         # REAL aggregate outputs (collect_list skips the nulls the
         # other side's when() produces), the per-side hot cap applies
@@ -572,43 +588,14 @@ def fuzzy_join(
             & (F.size("rights") <= sig_cap)
         )
         cand_ids = (
-            grouped.select(F.explode("lefts").alias("kid_l"), "rights")
-            .select("kid_l", F.explode("rights").alias("kid_r"))
+            grouped.select(F.explode("lefts").alias("key_a"), "rights")
+            .select("key_a", F.explode("rights").alias("key_b"))
             .distinct()
         )
-    cand = (
-        cand_ids.join(
-            lk.select(F.col("kid").alias("kid_l"), F.col("key").alias("key_a")),
-            "kid_l",
-        )
-        .join(
-            rk.select(F.col("kid").alias("kid_r"), F.col("key").alias("key_b")),
-            "kid_r",
-        )
-        .select("key_a", "key_b")
+    cand = _join_back(cand_ids, lk, rk).select(
+        F.col("ka").alias("key_a"), F.col("kb").alias("key_b")
     )
     return _verified_pairs(cand, k, damerau)
-
-
-def grouped_self_candidates(variants: DataFrame, sig_cap: int = 1000) -> DataFrame:
-    """Candidate pairs from a (key, sig) variants frame in ONE shuffle:
-    groupBy(sig) -> collect keys -> explode in-group pairs.  Groups
-    hotter than ``sig_cap`` are dropped (skew cap — a degenerate
-    signature would contribute O(cap²) pairs); the drop is observable
-    via blocking metrics, never silent.
-
-    Delegates to ``operators.dedup.grouped_bucket_pairs`` (the one
-    definition of the grouped cap-and-expand shape): its two-Generate
-    expansion streams pairs row-by-row instead of materializing the
-    O(cap²) pair array per group that the previous nested-transform
-    flatten built, and self-pairs from duplicate variants of one key
-    are filtered the same way."""
-    from .dedup import grouped_bucket_pairs
-
-    return grouped_bucket_pairs(
-        variants.select(F.col("key").alias("id"), F.col("sig").alias("bucket")),
-        sig_cap,
-    ).select(F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b"))
 
 
 def fuzzy_self_pairs(
@@ -623,53 +610,56 @@ def fuzzy_self_pairs(
     algo: str = "deletes",
 ) -> DataFrame:
     """Distinct unordered key pairs (a < b) within edit distance k — the
-    ER blocking candidate generator over one table.  algo='passjoin'
-    switches to segment blocking (O(1) signatures per key; long keys);
-    its blocking shuffles carry 8-byte xxhash64 ids, not key strings
-    (long web keys would make every shuffle ~10x heavier; a hash
-    collision only ever costs an extra DP verify after the id->key
-    join-back, never a wrong pair).
+    ER blocking candidate generator over one table (``er.blocking.
+    candidate_pairs`` is this function on ``norm_key``).
+
+    Every algo shuffles 8-byte xxhash64 ids over one distinct keymap,
+    never key strings (long web keys would make every shuffle ~10x
+    heavier), then shares the id->key join-back and exact verify with
+    ``fuzzy_join``:
+      'deletes'   deletion-neighborhood signatures (``variant_sigs``;
+                  ``scheme``/``window`` pick full vs windowed deletes)
+                  grouped in ONE shuffle with hot groups over
+                  ``sig_cap`` dropped: O(len²) rows/key, tightest
+                  precision — right for short keys.
+      'passjoin'  segment blocking (operators/passjoin): O(1) signature
+                  rows per key whatever its length — long keys.
 
     k routing: deletes carries k<=2, passjoin k<=8; a larger k warns and
     falls back to the length-banded brute-force block (complete for any
     k — mirrors the reference CLI's -d 0..100 range)."""
     algo = _banded_routing(algo, k)
-    if algo in ("passjoin", "banded"):
-        keymap = (
-            df.select(F.col(key_col).alias("key"))
-            .filter(F.col(key_col).isNotNull())
-            .distinct()
-            .withColumn("kid", F.xxhash64("key"))
-        )
-        if algo == "banded":
-            cand_ids = (
-                _banded_join_candidates(keymap, keymap, k)
-                .filter(F.col("kid_l") < F.col("kid_r"))
-                .select(
-                    F.col("kid_l").alias("key_a"), F.col("kid_r").alias("key_b")
-                )
-            )
-        else:
-            from .passjoin import passjoin_self_candidates
+    # a hash collision only ever costs extra verify work after the
+    # join-back, since pairs are DP-verified on the strings
+    keymap = (
+        df.select(F.col(key_col).alias("key"))
+        .filter(F.col(key_col).isNotNull())
+        .distinct()
+        .withColumn("kid", F.xxhash64("key"))
+    )
+    if algo == "passjoin":
+        from .passjoin import passjoin_self_candidates
 
-            cand_ids = passjoin_self_candidates(
-                keymap, k=k, max_len=max_len, sig_cap=sig_cap
-            )
-        cand = (
-            cand_ids.join(
-                keymap.select(F.col("kid").alias("key_a"), F.col("key").alias("ka")),
-                "key_a",
-            )
-            .join(
-                keymap.select(F.col("kid").alias("key_b"), F.col("key").alias("kb")),
-                "key_b",
-            )
-            .select(
-                F.least("ka", "kb").alias("key_a"),
-                F.greatest("ka", "kb").alias("key_b"),
-            )
+        cand_ids = passjoin_self_candidates(
+            keymap, k=k, max_len=max_len, sig_cap=sig_cap
         )
-        return _verified_pairs(cand, k, damerau)
-    v = _variants_df(df, key_col, k, max_len, scheme=scheme, window=window)
-    cand = grouped_self_candidates(v, sig_cap)
+    elif algo == "banded":
+        cand_ids = _banded_join_candidates(keymap, keymap, k).filter(
+            F.col("key_a") < F.col("key_b")
+        )
+    else:
+        # groupBy(sig) -> in-group pair explode (operators.dedup's one
+        # definition of the grouped cap-and-expand shape; self-pairs
+        # from duplicate variants of one key are filtered there)
+        from .dedup import grouped_bucket_pairs
+
+        sigs = variant_sigs(keymap, "key", k, max_len, scheme=scheme, window=window)
+        cand_ids = grouped_bucket_pairs(
+            sigs.select(F.col("kid").alias("id"), F.col("sig").alias("bucket")),
+            sig_cap,
+        ).select(F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b"))
+    ka, kb = F.col("ka"), F.col("kb")
+    cand = _join_back(cand_ids, keymap, keymap).select(
+        F.least(ka, kb).alias("key_a"), F.greatest(ka, kb).alias("key_b")
+    )
     return _verified_pairs(cand, k, damerau)

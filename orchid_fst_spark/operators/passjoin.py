@@ -173,19 +173,28 @@ def passjoin_probe(keyed: DataFrame, k: int, max_len: int) -> DataFrame:
     return probes.unionAll(short)
 
 
+def _capped_index(keyed: DataFrame, k: int, max_len: int, sig_cap: int) -> DataFrame:
+    """``passjoin_index`` minus the entries of hot signatures (> sig_cap
+    keys — e.g. a segment equal to a crawl-dominating host prefix),
+    dropped before the join; the drop is observable via
+    ``passjoin_metrics``."""
+    idx = passjoin_index(keyed, k, max_len)
+    hot = (
+        idx.groupBy("sig")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") > sig_cap)
+        .select("sig")
+    )
+    return idx.join(F.broadcast(hot), "sig", "left_anti")
+
+
 def passjoin_self_candidates(
     keyed: DataFrame, k: int = 2, max_len: int = 96, sig_cap: int = 1000
 ) -> DataFrame:
     """Distinct candidate id pairs (key_a < key_b) from one keyed frame
-    (columns key, kid).  Index entries of hot signatures (> sig_cap
-    keys — e.g. a segment equal to a crawl-dominating host prefix) are
-    dropped before the join; the drop is observable via
-    ``passjoin_metrics``."""
-    idx = passjoin_index(keyed, k, max_len)
+    (columns key, kid), hot index signatures capped at ``sig_cap``."""
+    idx_ok = _capped_index(keyed, k, max_len, sig_cap)
     probe = passjoin_probe(keyed, k, max_len)
-    counts = idx.groupBy("sig").agg(F.count("*").alias("n"))
-    hot = counts.filter(F.col("n") > sig_cap).select("sig")
-    idx_ok = idx.join(F.broadcast(hot), "sig", "left_anti")
     pairs = (
         idx_ok.select("sig", F.col("kid").alias("kid_i"))
         .join(probe.select("sig", F.col("kid").alias("kid_p")), "sig")
@@ -221,32 +230,23 @@ def passjoin_join_candidates(
     max_len: int = 96,
     sig_cap: int = 1000,
 ) -> DataFrame:
-    """Two-table variant: distinct candidate pairs (kid_l, kid_r) between
-    two keyed frames (columns key, kid).  For any pair within distance k
-    the *shorter* key's unedited segment must match a substring of the
-    longer one, so both directions are joined: left-indexed x
-    right-probed plus right-indexed x left-probed.  Hot index signatures
-    capped per direction as in the self-join."""
-    def _capped_index(keyed: DataFrame) -> DataFrame:
-        idx = passjoin_index(keyed, k, max_len)
-        hot = (
-            idx.groupBy("sig")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > sig_cap)
-            .select("sig")
-        )
-        return idx.join(F.broadcast(hot), "sig", "left_anti")
-
-    il, pl = _capped_index(left), passjoin_probe(left, k, max_len)
-    ir, pr = _capped_index(right), passjoin_probe(right, k, max_len)
+    """Two-table variant: distinct candidate id pairs (key_a from
+    ``left``, key_b from ``right``) between two keyed frames (columns
+    key, kid).  For any pair within distance k the *shorter* key's
+    unedited segment must match a substring of the longer one, so both
+    directions are joined: left-indexed x right-probed plus
+    right-indexed x left-probed.  Hot index signatures capped per
+    direction as in the self-join."""
+    il, ir = (_capped_index(t, k, max_len, sig_cap) for t in (left, right))
+    pl, pr = (passjoin_probe(t, k, max_len) for t in (left, right))
     d1 = (
-        il.select("sig", F.col("kid").alias("kid_l"))
-        .join(pr.select("sig", F.col("kid").alias("kid_r")), "sig")
-        .select("kid_l", "kid_r")
+        il.select("sig", F.col("kid").alias("key_a"))
+        .join(pr.select("sig", F.col("kid").alias("key_b")), "sig")
+        .select("key_a", "key_b")
     )
     d2 = (
-        ir.select("sig", F.col("kid").alias("kid_r"))
-        .join(pl.select("sig", F.col("kid").alias("kid_l")), "sig")
-        .select("kid_l", "kid_r")
+        ir.select("sig", F.col("kid").alias("key_b"))
+        .join(pl.select("sig", F.col("kid").alias("key_a")), "sig")
+        .select("key_a", "key_b")
     )
     return d1.unionAll(d2).distinct()

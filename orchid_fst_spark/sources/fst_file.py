@@ -223,11 +223,6 @@ def write_fst_bytes(items, has_output: bool) -> bytes:
     return w.finish()
 
 
-def write_fst_file(path: str, items, has_output: bool) -> None:
-    with open(path, "wb") as f:
-        f.write(write_fst_bytes(items, has_output))
-
-
 # -- reader -----------------------------------------------------------------
 
 

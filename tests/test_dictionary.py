@@ -158,15 +158,17 @@ def test_fuzzy_self_pairs_window_scheme_complete(spark):
         assert got == exp, window
 
 
-def test_candidate_pairs_passjoin_complete(spark):
-    # segment/pigeonhole blocking finds exactly the DP ground truth,
-    # including mixed/short key lengths and the short band
+@pytest.mark.parametrize("algo", ["passjoin", "deletes"])
+def test_candidate_pairs_passjoin_complete(spark, algo):
+    # both blocking families find exactly the DP ground truth, including
+    # mixed/short key lengths and the short band; an empty norm_key
+    # (within 2 edits of every 1-2 char key) never enters a pair
     from orchid_fst_spark.er.blocking import candidate_pairs
 
     vocab = sorted(gen_dict_words(400) + ["a", "ab", "abc", "abcd", "b", "xy"])
-    df = spark.createDataFrame([(w,) for w in vocab], "norm_key string").withColumn(
-        "url", F.col("norm_key")
-    )
+    df = spark.createDataFrame(
+        [(w,) for w in vocab + [""]], "norm_key string"
+    ).withColumn("url", F.col("norm_key"))
     exp = {
         (a, b): osa(a, b)
         for i, a in enumerate(vocab)
@@ -175,9 +177,19 @@ def test_candidate_pairs_passjoin_complete(spark):
     }
     got = {
         (r.key_a, r.key_b): r.dist
-        for r in candidate_pairs(df, k=2, damerau=True, algo="passjoin").collect()
+        for r in candidate_pairs(df, k=2, damerau=True, algo=algo).collect()
     }
     assert got == exp
+
+
+@pytest.mark.parametrize("op", ["fuzzy_self_pairs", "fuzzy_join"])
+def test_unknown_algo_rejected(spark, op):
+    df = spark.createDataFrame([("hair",), ("hare",)], "key string")
+    with pytest.raises(ValueError, match="unknown blocking algo"):
+        if op == "fuzzy_self_pairs":
+            fuzzy_self_pairs(df, "key", k=2, algo="typo")
+        else:
+            fuzzy_join(df, df, "key", "key", k=2, algo="typo")
 
 
 def test_fuzzy_self_pairs_passjoin_k3_parity(spark):

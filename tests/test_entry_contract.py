@@ -126,3 +126,27 @@ def test_memoized_fixtures_are_lineage_cut_and_context_keyed(spark, sf):
     after = {k: tuple(map(id, v if isinstance(v, tuple) else (v,)))
              for k, v in cache.items()}
     assert before == after
+
+
+def test_driver_rotation_read_from_correctness_files():
+    """queries() order is derived from the CORRECTNESS_rNN.json files
+    beside the module: the entries with no green driver row (39 after
+    round 5) lead the registry, ahead of every round-5 certification."""
+    import glob
+    import json
+
+    here = os.path.dirname(os.path.abspath(entrymod.__file__))
+    green = set()
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            rows = json.load(f)
+        green |= {
+            n for n, r in rows.items()
+            if r["rows_match"] and r["schema_match"] and r["hash_match"]
+        }
+    with open(os.path.join(here, "CORRECTNESS_r05.json")) as f:
+        r5 = set(json.load(f))
+    names = list(entrymod.queries())
+    never = {n for n in names if n not in green}
+    assert never and set(names[: len(never)]) == never
+    assert min(names.index(n) for n in r5) >= len(never)
