@@ -1,10 +1,9 @@
 from .lev_dfa import LevenshteinDFA, compile_dfa
-from .trie import Trie, trie_dfa_matches, deletion_variants
+from .trie import Trie, deletion_variants
 
 __all__ = [
     "LevenshteinDFA",
     "compile_dfa",
     "Trie",
-    "trie_dfa_matches",
     "deletion_variants",
 ]

@@ -364,6 +364,28 @@ class StartsWith(Matcher):
         return self.inner.accepts_any_prefix(s)
 
 
+def _sorted_batch(pdf, key_col: str):
+    """One Arrow batch with null keys dropped, sorted by key — the input
+    shape ``dfa_mask_sorted`` needs to reuse states along shared prefixes."""
+    return pdf[pdf[key_col].notna()].sort_values(key_col)
+
+
+def _dfa_filter(df: DataFrame, dfa, key_col: str) -> DataFrame:
+    """Rows of ``df`` whose key ``dfa`` accepts: one mapInPandas running
+    the DFA over each sorted batch (the trie ∩ DFA walk without a trie).
+    Batch order is not kept; callers order the result."""
+    from .lev_dfa import dfa_mask_sorted
+
+    def gen(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            pdf = _sorted_batch(pdf, key_col)
+            yield pdf[dfa_mask_sorted(pdf[key_col].tolist(), dfa)]
+
+    return df.mapInPandas(gen, schema=df.schema)
+
+
 def match(dict_df: DataFrame, matcher: Matcher, key_col: str = "key") -> DataFrame:
     """Enumerate dictionary rows accepted by ``matcher`` in key order.
 
@@ -374,26 +396,18 @@ def match(dict_df: DataFrame, matcher: Matcher, key_col: str = "key") -> DataFra
     if matcher.jvm_ok:
         return dict_df.filter(matcher.col_predicate(c)).orderBy(key_col)
 
-    schema = dict_df.schema
-    # a bare Fuzzy leaf gets the shared-prefix sorted walk (states reused
-    # along common prefixes — the trie ∩ DFA evaluation without a trie);
-    # composed trees fall back to the per-key predicate
-    fuzzy_dfa = matcher._dfa if isinstance(matcher, Fuzzy) else None
+    if isinstance(matcher, Fuzzy):
+        # a bare Fuzzy leaf gets the shared-prefix sorted walk; composed
+        # trees fall back to the per-key predicate
+        return _dfa_filter(dict_df, matcher._dfa, key_col).orderBy(key_col)
 
     def gen(batches):
-        from .lev_dfa import dfa_mask_sorted
-
         for pdf in batches:
             if pdf.empty:
                 continue
-            if fuzzy_dfa is not None:
-                pdf = pdf[pdf[key_col].notna()].sort_values(key_col)
-                mask = dfa_mask_sorted(pdf[key_col].tolist(), fuzzy_dfa)
-            else:
-                mask = [
-                    (s is not None) and matcher.accepts(s)
-                    for s in pdf[key_col].tolist()
-                ]
+            mask = [
+                (s is not None) and matcher.accepts(s) for s in pdf[key_col].tolist()
+            ]
             yield pdf[mask]
 
-    return dict_df.mapInPandas(gen, schema=schema).orderBy(key_col)
+    return dict_df.mapInPandas(gen, schema=dict_df.schema).orderBy(key_col)

@@ -158,13 +158,12 @@ def clk_dice_pairs(
     if threshold <= 0:
         raise ValueError("threshold must be > 0 (0 would imply all pairs)")
     if max_ids is not None:
-        n = enc.select("id").distinct().count()
-        if n > max_ids:
+        if enc.select("id").distinct().limit(max_ids + 1).count() > max_ids:
             raise ValueError(
                 f"clk_dice_pairs is a brute-force oracle (dense encodings "
                 f"make the word join the full cross product): input has "
-                f"{n} ids > max_ids={max_ids}. Use clk_hlsh_pairs for "
-                f"scale, or pass max_ids=None to override."
+                f"more than {max_ids} ids (max_ids={max_ids}). Use "
+                f"clk_hlsh_pairs for scale, or pass max_ids=None to override."
             )
     a = enc.select(
         F.col("id").alias("id_a"), "word", F.col("bits").alias("ba")

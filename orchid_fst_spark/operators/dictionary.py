@@ -7,10 +7,13 @@ ExceededBy bound seek, fst.cpp:428-468, 511-514).  Only fuzzy matching
 needs custom compute:
 
 - single-query fuzzy: compiled Levenshtein/OSA DFA (driver-side, cheap)
-  shipped in a closure and intersected with a per-partition trie inside
-  ``mapInPandas`` (the reference's automaton ∩ FST DFS, fst.cpp:471-524);
-  or, for plain Levenshtein, the JVM built-in ``F.levenshtein`` with
-  threshold (banded) — Catalyst-only, usually the fastest at scale.
+  shipped in a closure and run over each sorted partition batch inside
+  ``mapInPandas``, reusing DFA states along shared key prefixes (the
+  reference's automaton ∩ FST DFS, fst.cpp:471-524, without
+  materializing the FST); or, for plain Levenshtein, the JVM built-in
+  ``F.levenshtein`` with threshold (banded) — Catalyst-only, usually the
+  fastest at scale.  Repeated point queries against one dictionary
+  belong on the persisted index (``operators.index``).
 
 - fuzzy *join* / self-pairs (the ER candidate generator): SymSpell-style
   deletion-neighborhood signatures + equi-join + exact DP verify.  Pure
@@ -27,8 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..automata.lev_dfa import compile_dfa
-from ..automata.trie import Trie, deletion_variants, trie_dfa_matches
+from ..automata.lev_dfa import compile_dfa, dfa_mask_sorted
+from ..automata.matchers import _dfa_filter, _sorted_batch
 from ..functions.distance import batch_levenshtein
 
 
@@ -130,8 +133,9 @@ def fuzzy_lookup(
     impl:
       'builtin'  plain Levenshtein via JVM F.levenshtein(threshold) —
                  whole-stage codegen, zero Python.
-      'dfa'      compiled DFA ∩ per-partition trie in mapInPandas —
-                 reference-parity path, required for Damerau.
+      'dfa'      compiled DFA over each sorted partition batch in
+                 mapInPandas — reference-parity path, required for
+                 Damerau.
       'auto'     builtin for plain Levenshtein, dfa for Damerau.
 
     Non-BMP note: Spark 4's ``levenshtein`` (UTF8String) counts CODE
@@ -155,24 +159,7 @@ def fuzzy_lookup(
         return out.filter((d >= 0) & (d <= k)).orderBy("key")
 
     dfa = compile_dfa(query, k, damerau)  # driver-side constant folding
-    schema = out.schema
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..automata.lev_dfa import dfa_mask_sorted
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # sort the batch and reuse DFA states along shared prefixes
-            # (the trie ∩ DFA walk without materializing a trie) — on
-            # dictionary batches this replaces per-key DFA restarts with
-            # per-suffix stepping; output order is restored by the final
-            # orderBy anyway
-            pdf = pdf[pdf["key"].notna()].sort_values("key")
-            mask = dfa_mask_sorted(pdf["key"].tolist(), dfa)
-            yield pdf[mask]
-
-    return out.mapInPandas(gen, schema=schema).orderBy("key")
+    return _dfa_filter(out, dfa, "key").orderBy("key")
 
 
 def fuzzy_lookup_many(
@@ -199,12 +186,10 @@ def fuzzy_lookup_many(
     schema = StructType(fields)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..automata.lev_dfa import dfa_mask_sorted
-
         for pdf in batches:
             if pdf.empty:
                 continue
-            pdf = pdf[pdf["key"].notna()].sort_values("key")
+            pdf = _sorted_batch(pdf, "key")
             keys = pdf["key"].tolist()
             for q, dfa in dfas:
                 mask = dfa_mask_sorted(keys, dfa)
@@ -217,45 +202,6 @@ def fuzzy_lookup_many(
                 yield pd.DataFrame(out)
 
     return dict_df.mapInPandas(gen, schema=schema).orderBy("query", "key")
-
-
-def fuzzy_enumerate_trie(
-    dict_df: DataFrame,
-    query: str,
-    k: int,
-    prefix_len: int = 0,
-    damerau: bool = False,
-) -> DataFrame:
-    """Reference-parity enumeration: per-partition sorted trie ∩ DFA DFS
-    (emits within-partition in lexicographic order like the FST iterator).
-    Functionally identical to fuzzy_lookup(impl='dfa'); kept as the
-    structural twin of the reference read path for the golden tests."""
-    out = dict_df
-    if prefix_len > 0:
-        out = out.filter(F.col("key").startswith(query[:prefix_len]))
-    has_value = "value" in out.columns
-    dfa = compile_dfa(query, k, damerau)
-    fields = [StructField("key", StringType())] + (
-        [StructField("value", LongType())] if has_value else []
-    )
-    schema = StructType(fields)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("key")
-            trie = Trie.from_sorted(
-                pdf["key"].tolist(),
-                pdf["value"].tolist() if has_value else None,
-            )
-            hits = trie_dfa_matches(trie, dfa, with_values=has_value)
-            if has_value:
-                yield pd.DataFrame(hits, columns=["key", "value"])
-            else:
-                yield pd.DataFrame({"key": hits})
-
-    return out.mapInPandas(gen, schema=schema).orderBy("key")
 
 
 # ---------------------------------------------------------------------------

@@ -31,6 +31,7 @@ worker, so the engine parallelizes across images, never inside one.
 
 from __future__ import annotations
 
+import io
 import struct
 import zlib
 
@@ -739,14 +740,16 @@ def parse_image_real(raw: bytes) -> tuple[np.ndarray, str]:
 
         return parse_image(raw)
     try:  # optional Pillow fallback for GIF/TIFF/WebP/...
-        import io
-
         from PIL import Image  # type: ignore
-
-        img = Image.open(io.BytesIO(raw)).convert("RGB")
-        return np.asarray(img), (img.format or "pil").lower()
     except ImportError:
         raise ValueError(
             "unsupported image format (PNG/JPEG/BMP/PPM decode natively; "
             "install Pillow for other formats)"
         )
+    try:
+        img = Image.open(io.BytesIO(raw))
+        fmt = (img.format or "pil").lower()  # the convert()ed copy has none
+        rgb = img.convert("RGB")  # decodes; truncated data raises here
+    except OSError as exc:  # PIL.UnidentifiedImageError is an OSError
+        raise ValueError(f"unsupported image format (Pillow: {exc})") from exc
+    return np.asarray(rgb), fmt

@@ -4,14 +4,14 @@ The reference's core usage shape is build-once/serve-many: fst_cmd
 builds an FST file, then answers any number of point/fuzzy queries off
 the mmap'd artifact with zero per-query construction (fst_cmd.cpp:
 174-177, 220-223; zero-deserialization node reads fst.cpp:221-284).
-The engine's other fuzzy paths are join-shaped (per-query trie rebuilds
-inside fuzzy_enumerate_trie are fine when a query IS a table scan);
-this module is the repeated-point-query analog:
+The engine's other fuzzy paths are scan- or join-shaped (a live sorted
+scan is fine when a query IS a table scan); this module is the
+repeated-point-query analog:
 
 - ``build_index``: range-repartition the dictionary by key into
-  n_shards, build one suffix-minimized DAG per shard (the same
-  FreezeNode minimization as the reference, automata/trie.py), pickle
-  it, and write one parquet row per shard:
+  n_shards, build one suffix-minimized flat DAG per shard (the same
+  FreezeNode minimization as the reference, ``automata.trie.minimize``),
+  pickle its arrays, and write one parquet row per shard:
   (shard, lo_key, hi_key, n_keys, blob_md5, blob).
   The artifact is immutable; lo_key/hi_key land in parquet column
   min/max stats, so point/prefix/range/pinned-prefix queries prune
@@ -19,14 +19,15 @@ this module is the repeated-point-query analog:
   as partition pruning.
 
 - query operators (``index_match_lookup`` / ``index_prefix_lookup`` /
-  ``index_range_lookup`` / ``index_fuzzy_lookup``): a pushed-down shard
-  filter + one mapInPandas over the surviving blob rows.  Each task
+  ``index_range_lookup`` / ``index_fuzzy_lookup`` /
+  ``index_fuzzy_lookup_many``): a pushed-down shard filter + one
+  mapInPandas over the surviving shard rows (``_query``).  Each task
   unpickles its shard's DAG through a process-global byte-budgeted LRU
   (util.caches.LRUCache — the reference's C1 cache doing its original
   job: bounding executor-side index residency), so with Spark's default
   python-worker reuse, repeated queries against the same artifact skip
-  the dictionary scan, the sort AND the trie build; only the DFA ∩ DAG
-  walk runs.
+  the dictionary scan, the sort AND the DAG build; only the
+  ``automata.trie`` walk (``dag_enum`` / ``dag_dfa``) runs.
 
 At cluster scale the blob column ships shard-local (one task reads one
 row-group); nothing is collected to the driver and no shard is ever
@@ -41,7 +42,6 @@ import pickle
 import zlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -54,7 +54,7 @@ from pyspark.sql.types import (
 )
 
 from ..automata.lev_dfa import compile_dfa
-from ..automata.trie import Trie, minimize
+from ..automata.trie import FlatDag, Trie, dag_dfa, dag_enum, minimize
 from ..util.caches import LRUCache
 
 INDEX_SCHEMA = StructType(
@@ -74,114 +74,63 @@ INDEX_SCHEMA = StructType(
 _TRIE_CACHE = LRUCache(256 * 1024 * 1024)
 
 
-class FlatDag:
-    """Minimized shard DAG flattened into numpy arrays (CSR edges).
-
-    The earlier blob format pickled the list-of-dicts node table;
-    unpickling 100k+ Python dict objects cost ~1.6 s per shard — and
-    with W python workers × S shards the LRU pays that (W·S) times
-    before it is warm, which made the per-query indexed fuzzy path
-    SLOWER than rebuilding (BENCH_r02 amortized_speedup 0.87).  Numpy
-    arrays unpickle at memcpy speed (~10 ms/shard), so a cold
-    (worker, shard) pairing is no longer a cliff.  Edges are sorted by
-    codepoint within each node — the lexicographic DFS order and
-    binary-searchable for pinned descent."""
-
-    __slots__ = ("ptr", "chars", "dst", "final", "vals", "vnone")
-
-    def __init__(self, ptr, chars, dst, final, vals, vnone):
-        self.ptr = ptr
-        self.chars = chars
-        self.dst = dst
-        self.final = final
-        self.vals = vals
-        self.vnone = vnone
+_KEY_VALUE = StructType(
+    [StructField("key", StringType()), StructField("value", LongType())]
+)
 
 
-def _flatten_dag(nodes: list) -> FlatDag:
-    """Flatten a minimize() list-of-dicts node table into FlatDag."""
-    n = len(nodes)
-    ptr = np.zeros(n + 1, dtype=np.int64)
-    final = np.zeros(n, dtype=np.bool_)
-    vnone = np.zeros(n, dtype=np.bool_)
-    vals = np.zeros(n, dtype=np.int64)
-    ch_l: list = []
-    dst_l: list = []
-    for i, node in enumerate(nodes):
-        if "" in node:
-            final[i] = True
-            v = node[""]
-            if v is None:
-                vnone[i] = True
-            else:
-                vals[i] = v
-        items = sorted(k for k in node if k)
-        ptr[i + 1] = ptr[i] + len(items)
-        for ch in items:
-            ch_l.append(ord(ch))
-            dst_l.append(node[ch])
-    return FlatDag(
-        ptr,
-        np.array(ch_l, dtype=np.uint32),
-        np.array(dst_l, dtype=np.int64),
-        final,
-        vals,
-        vnone,
+def _encode_blob(root: int, flat: FlatDag, has_value: bool) -> bytes:
+    """The persisted shard format: a zlib'd pickle tagged 'flat1'."""
+    return zlib.compress(
+        pickle.dumps(
+            (
+                "flat1",
+                root,
+                has_value,
+                flat.ptr,
+                flat.chars,
+                flat.dst,
+                flat.final,
+                flat.vals,
+                flat.vnone,
+            ),
+            protocol=4,
+        ),
+        level=6,
     )
 
 
-def _as_flat(nodes) -> FlatDag:
-    return _flatten_dag(nodes) if isinstance(nodes, list) else nodes
-
-
-def _unflatten_dag(flat: FlatDag) -> list:
-    """FlatDag -> list-of-dicts node table (for renderers like
-    automata.trie.to_dot that walk the dict shape)."""
-    ptr, chars, dst = flat.ptr, flat.chars, flat.dst
-    out = []
-    for i in range(len(flat.final)):
-        node = {
-            chr(int(chars[e])): int(dst[e])
-            for e in range(int(ptr[i]), int(ptr[i + 1]))
-        }
-        if flat.final[i]:
-            node[""] = None if flat.vnone[i] else int(flat.vals[i])
-        out.append(node)
-    return out
-
-
-def _decode_blob(blob: bytes):
-    """blob -> (root, FlatDag, has_value); accepts both the flat-array
-    format ('flat1') and the legacy list-of-dicts pickle."""
+def _decode_blob(blob: bytes, shard) -> tuple:
+    """blob -> (root, FlatDag, has_value); any other format is refused."""
     obj = pickle.loads(zlib.decompress(blob))
-    if isinstance(obj, tuple) and obj and obj[0] == "flat1":
-        _tag, root, has_value, ptr, chars, dst, final, vals, vnone = obj
-        return root, FlatDag(ptr, chars, dst, final, vals, vnone), has_value
-    root, nodes, has_value = obj
-    return root, _as_flat(nodes), has_value
+    if not (isinstance(obj, tuple) and obj and obj[0] == "flat1"):
+        raise ValueError(
+            f"index shard {shard}: unknown blob format (not 'flat1'); "
+            "rebuild the index with build_index"
+        )
+    _tag, root, has_value, ptr, chars, dst, final, vals, vnone = obj
+    return root, FlatDag(ptr, chars, dst, final, vals, vnone), has_value
 
 
-def _shard_dag(blob: bytes, blob_md5: str):
-    """(root, FlatDag, has_value) for one shard, via the global LRU."""
+def _shard_dag(shard: int, blob_md5: str, read_blob) -> tuple:
+    """(root, FlatDag, has_value) for one shard via the decoded-DAG LRU;
+    ``read_blob()`` supplies the blob bytes only on a miss."""
     hit = _TRIE_CACHE.get(blob_md5)
     if hit is not None:
         return hit
-    obj = _decode_blob(blob)
+    blob = read_blob()
+    obj = _decode_blob(blob, shard)
     _TRIE_CACHE.put(blob_md5, obj, cost=len(blob))
     return obj
 
 
-def _shard_dag_from_store(path: str, shard: int, blob_md5: str):
-    """Warm-path shard access: queries ship only (shard, blob_md5) rows
-    through Arrow; the worker hits its decoded-DAG LRU and, only on a
-    miss, reads the shard's blob straight from the parquet artifact
-    (pyarrow predicate pushdown on the shard column — the 'mmap the FST
-    file, pay I/O once' read path, fst.cpp:221-284).  On a cluster the
-    artifact sits on shared storage; every executor reads only the
-    shards its tasks own."""
-    hit = _TRIE_CACHE.get(blob_md5)
-    if hit is not None:
-        return hit
+def _read_shard_blob(path: str, shard: int) -> bytes:
+    """Cold-path shard read: queries ship only (shard, blob_md5) rows
+    through Arrow, and a worker whose LRU misses reads the shard's blob
+    straight from the parquet artifact (the 'mmap the FST file, pay I/O
+    once' read path, fst.cpp:221-284).  On a cluster the artifact sits
+    on shared storage; every executor reads only the shards its tasks
+    own."""
     import pyarrow.parquet as pq
 
     # the artifact is partitioned by shard (build_index partitionBy), so
@@ -196,10 +145,7 @@ def _shard_dag_from_store(path: str, shard: int, blob_md5: str):
             "executor can open with pyarrow; Spark-only URI schemes are "
             "not supported on the warm read path"
         ) from exc
-    blob = tbl.column("blob")[0].as_py()
-    obj = _decode_blob(blob)
-    _TRIE_CACHE.put(blob_md5, obj, cost=len(blob))
-    return obj
+    return tbl.column("blob")[0].as_py()
 
 
 def _normalize_artifact_path(path: str) -> str:
@@ -247,25 +193,8 @@ def build_index(
         if pid is None:
             return
         trie = Trie.from_sorted(keys, values if has_value else None)
-        root, nodes, _n = minimize(trie, cache_budget_bytes)
-        flat = _flatten_dag(nodes)
-        blob = zlib.compress(
-            pickle.dumps(
-                (
-                    "flat1",
-                    root,
-                    has_value,
-                    flat.ptr,
-                    flat.chars,
-                    flat.dst,
-                    flat.final,
-                    flat.vals,
-                    flat.vnone,
-                ),
-                protocol=4,
-            ),
-            level=6,
-        )
+        root, flat, _n = minimize(trie, cache_budget_bytes)
+        blob = _encode_blob(root, flat, has_value)
         yield pd.DataFrame(
             {
                 "shard": [pid],
@@ -297,118 +226,13 @@ def load_index(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# DAG walks (executor-side, pure python over the minimized nodes)
-# ---------------------------------------------------------------------------
-
-
-def _dag_enum(
-    root: int,
-    nodes,
-    lo,
-    hi,
-    lo_inc: bool,
-    hi_inc: bool,
-    require_prefix: str | None = None,
-):
-    """Bound-aware lexicographic DFS over a FlatDag (a legacy
-    list-of-dicts node table is flattened on the fly); yields
-    (key, value) within the range.  Subtrees are pruned as soon as
-    their prefix provably falls outside [lo, hi] (the FST iterator's
-    bound seek).  ``require_prefix`` restricts results (and the walk)
-    to keys carrying that prefix WITHOUT a synthetic upper bound — a
-    ``prefix + U+10FFFF`` hi would wrongly exclude a stored key of the
-    form ``prefix + U+10FFFF + more``."""
-    flat = _as_flat(nodes)
-    ptr, chars, dst = flat.ptr, flat.chars, flat.dst
-    final, vals, vnone = flat.final, flat.vals, flat.vnone
-    out: list = []
-    p = require_prefix
-
-    def in_range(key: str) -> bool:
-        if lo is not None and (key < lo or (key == lo and not lo_inc)):
-            return False
-        if hi is not None and (key > hi or (key == hi and not hi_inc)):
-            return False
-        if p is not None and not key.startswith(p):
-            return False
-        return True
-
-    # iterative DFS (explicit stack: key depth never hits the recursion
-    # limit); frames: [node_id, prefix, next edge offset]
-    stack = [[root, "", 0]]
-    while stack:
-        frame = stack[-1]
-        nid, prefix, idx = frame
-        if idx == 0 and final[nid] and in_range(prefix):
-            out.append((prefix, None if vnone[nid] else int(vals[nid])))
-        e = int(ptr[nid]) + idx
-        if e >= int(ptr[nid + 1]):
-            stack.pop()
-            continue
-        frame[2] += 1
-        q = prefix + chr(int(chars[e]))
-        if hi is not None and q > hi:
-            continue  # every extension of q sorts after hi
-        if lo is not None and q < lo[: len(q)]:
-            continue  # every extension of q sorts before lo
-        if p is not None:
-            d = len(q)
-            if (q != p[:d]) if d <= len(p) else (not q.startswith(p)):
-                continue  # subtree shares no key with the prefix
-        stack.append([int(dst[e]), q, 0])
-    return out
-
-
-def _dag_dfa(root: int, nodes, dfa, pin: str = ""):
-    """DFS of the DAG ∩ compiled edit-distance DFA (reference automaton ∩
-    FST, fst.cpp:471-524), over the minimized FlatDag shard.  ``pin``
-    descends the exact prefix path FIRST (stepping the DFA along it,
-    binary search per edge list) and only then starts the product DFS —
-    the samePrefixLen narrowing happens in the walk itself, not as a
-    post-filter, so a pinned query touches just the pinned subtree."""
-    flat = _as_flat(nodes)
-    ptr, chars, dst = flat.ptr, flat.chars, flat.dst
-    final, vals, vnone = flat.final, flat.vals, flat.vnone
-    out: list = []
-    is_match = dfa.is_match
-    state: int | None = dfa.start
-    nid = root
-    for ch in pin:
-        lo_e, hi_e = int(ptr[nid]), int(ptr[nid + 1])
-        j = lo_e + int(np.searchsorted(chars[lo_e:hi_e], ord(ch)))
-        if j >= hi_e or int(chars[j]) != ord(ch):
-            return out  # no key in this shard starts with the pin
-        state = dfa.step(state, ch)
-        if state is None:
-            return out  # no pinned key can be within distance k
-        nid = int(dst[j])
-    stack = [[nid, state, pin, 0]]
-    while stack:
-        frame = stack[-1]
-        nid, state, prefix, idx = frame
-        if idx == 0 and final[nid] and is_match[state]:
-            out.append((prefix, None if vnone[nid] else int(vals[nid])))
-        e = int(ptr[nid]) + idx
-        if e >= int(ptr[nid + 1]):
-            stack.pop()
-            continue
-        frame[3] += 1
-        ch = chr(int(chars[e]))
-        nxt = dfa.step(state, ch)
-        if nxt is None:
-            continue
-        stack.append([int(dst[e]), nxt, prefix + ch, 0])
-    return out
-
-
-def _query(index_df: DataFrame, shard_filter, walker) -> DataFrame:
+def _query(
+    index_df: DataFrame, shard_filter, walker, schema: StructType = _KEY_VALUE
+) -> DataFrame:
     """Pushed-down shard pruning + one mapInPandas running ``walker``
-    (decoded DAG -> [(key, value)]) per surviving shard."""
+    ((root, FlatDag) -> rows matching ``schema``) per surviving shard."""
     pruned = index_df.filter(shard_filter) if shard_filter is not None else index_df
-    schema = StructType(
-        [StructField("key", StringType()), StructField("value", LongType())]
-    )
+    names = schema.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -417,14 +241,11 @@ def _query(index_df: DataFrame, shard_filter, walker) -> DataFrame:
                 pdf["blob_md5"].tolist(),
                 pdf["index_path"].tolist(),
             ):
-                root, nodes, has_value = _shard_dag_from_store(path, int(shard), md5)
-                hits = walker(root, nodes)
-                yield pd.DataFrame(
-                    {
-                        "key": [k for k, _ in hits],
-                        "value": [v for _, v in hits],
-                    }
+                shard = int(shard)
+                root, flat, _hv = _shard_dag(
+                    shard, md5, lambda: _read_shard_blob(path, shard)
                 )
+                yield pd.DataFrame(walker(root, flat), columns=names)
 
     return pruned.select("shard", "blob_md5", "index_path").mapInPandas(
         gen, schema=schema
@@ -434,7 +255,7 @@ def _query(index_df: DataFrame, shard_filter, walker) -> DataFrame:
 def index_match_lookup(index_df: DataFrame, query: str) -> DataFrame:
     sf = (F.col("lo_key") <= query) & (F.col("hi_key") >= query)
     return _query(
-        index_df, sf, lambda r, n: _dag_enum(r, n, query, query, True, True)
+        index_df, sf, lambda r, f: dag_enum(r, f, query, query, True, True)
     )
 
 
@@ -455,7 +276,7 @@ def index_prefix_lookup(index_df: DataFrame, prefix: str) -> DataFrame:
     return _query(
         index_df,
         _prefix_shard_filter(prefix),
-        lambda r, n: _dag_enum(r, n, prefix, None, True, True, require_prefix=prefix),
+        lambda r, f: dag_enum(r, f, prefix, None, True, True, require_prefix=prefix),
     ).orderBy("key")
 
 
@@ -475,7 +296,7 @@ def index_range_lookup(
     return _query(
         index_df,
         sf,
-        lambda r, n: _dag_enum(r, n, lo, hi, lo_inclusive, hi_inclusive),
+        lambda r, f: dag_enum(r, f, lo, hi, lo_inclusive, hi_inclusive),
     ).orderBy("key")
 
 
@@ -491,38 +312,12 @@ def index_fuzzy_lookup_many(
     artifact this amortizes BOTH per-query job scheduling and per-query
     index construction."""
     dfas = [(q, compile_dfa(q, k, damerau)) for q in dict.fromkeys(queries)]
-    schema = StructType(
-        [
-            StructField("query", StringType()),
-            StructField("key", StringType()),
-            StructField("value", LongType()),
-        ]
-    )
+    schema = StructType([StructField("query", StringType())] + _KEY_VALUE.fields)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for shard, md5, path in zip(
-                pdf["shard"].tolist(),
-                pdf["blob_md5"].tolist(),
-                pdf["index_path"].tolist(),
-            ):
-                root, nodes, _hv = _shard_dag_from_store(path, int(shard), md5)
-                for q, dfa in dfas:
-                    hits = _dag_dfa(root, nodes, dfa)
-                    if hits:
-                        yield pd.DataFrame(
-                            {
-                                "query": [q] * len(hits),
-                                "key": [kk for kk, _ in hits],
-                                "value": [v for _, v in hits],
-                            }
-                        )
+    def walker(root, flat):
+        return [(q, kk, v) for q, dfa in dfas for kk, v in dag_dfa(root, flat, dfa)]
 
-    return (
-        index_df.select("shard", "blob_md5", "index_path")
-        .mapInPandas(gen, schema=schema)
-        .orderBy("query", "key")
-    )
+    return _query(index_df, None, walker, schema).orderBy("query", "key")
 
 
 def index_fuzzy_lookup(
@@ -542,6 +337,6 @@ def index_fuzzy_lookup(
         # (lo/hi stats) and the walk itself (descend the pinned path
         # before the product DFS)
         return _query(
-            index_df, _prefix_shard_filter(p), lambda r, n: _dag_dfa(r, n, dfa, pin=p)
+            index_df, _prefix_shard_filter(p), lambda r, f: dag_dfa(r, f, dfa, pin=p)
         ).orderBy("key")
-    return _query(index_df, None, lambda r, n: _dag_dfa(r, n, dfa)).orderBy("key")
+    return _query(index_df, None, lambda r, f: dag_dfa(r, f, dfa)).orderBy("key")

@@ -55,18 +55,18 @@ def cosine_threshold_pairs(
     BOUNDED-INPUT ORACLE TWIN — the O(n²) crossJoin is the point (it is
     the completeness oracle for the LSH/IVF scale paths), so the input
     is guarded: ``max_rows`` (default 100k ⇒ ≤5e9 candidate pairs)
-    triggers one count() and a loud ValueError over the bound.  Pass
-    ``max_rows=None`` to disable (you are then on record choosing the
-    quadratic path).  The shipped scale paths are ``cosine_lsh_pairs``
+    triggers one ``limit(max_rows + 1).count()`` probe (it stops after
+    max_rows + 1 rows, never a full scan) and a loud ValueError over the
+    bound.  Pass ``max_rows=None`` to disable (you are then on record
+    choosing the quadratic path).  The shipped scale paths are ``cosine_lsh_pairs``
     / ``ivf_topk`` / ``semantic_dedup``."""
     if max_rows is not None:
-        n = emb.count()
-        if n > max_rows:
+        if emb.limit(max_rows + 1).count() > max_rows:
             raise ValueError(
                 f"cosine_threshold_pairs is a brute-force O(n²) oracle: "
-                f"input has {n} rows > max_rows={max_rows} "
-                f"(~{n * (n - 1) // 2:.2e} pairs). Use cosine_lsh_pairs/"
-                f"ivf_topk for scale, or pass max_rows=None to override."
+                f"input has more than {max_rows} rows (max_rows="
+                f"{max_rows}). Use cosine_lsh_pairs/ivf_topk for scale, "
+                f"or pass max_rows=None to override."
             )
     # norms precomputed ONCE per vector before the pair explosion —
     # the naive cosine() per pair folds both norms again, tripling the

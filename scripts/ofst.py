@@ -241,9 +241,9 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 keys = sorted(r.key for r in mounted.select("key").collect())
                 vals = None
-            root, nodes, _n = minimize(Trie.from_sorted(keys, vals))
+            root, flat, _n = minimize(Trie.from_sorted(keys, vals))
             with open(args.dot_file, "w") as f:
-                f.write(to_dot(root, nodes))
+                f.write(to_dot(root, flat))
             print(f"wrote {args.dot_file}")
             return 0
         if args.cmd == "match":
@@ -274,16 +274,16 @@ def main(argv: list[str] | None = None) -> int:
     idx = load_index(spark, args.fst_file)
     if args.cmd == "dot":
         from orchid_fst_spark.automata.trie import to_dot
-        from orchid_fst_spark.operators.index import _decode_blob, _unflatten_dag
+        from orchid_fst_spark.operators.index import _decode_blob
 
         rows = sorted(
             spark.read.parquet(args.fst_file).select("shard", "blob").collect()
         )
         with open(args.dot_file, "w") as f:
             for shard, blob in rows:
-                root, flat, _hv = _decode_blob(bytes(blob))
+                root, flat, _hv = _decode_blob(bytes(blob), shard)
                 f.write(f"// shard {shard}\n")
-                f.write(to_dot(root, _unflatten_dag(flat)))
+                f.write(to_dot(root, flat))
                 f.write("\n")
         print(f"wrote {args.dot_file}")
         return 0

@@ -1,14 +1,10 @@
-"""DFA compiler + trie intersection vs DP oracles (pure Python, no Spark)."""
+"""DFA compiler + DAG intersection vs DP oracles (pure Python, no Spark)."""
 
 import itertools
 import random
 
-from orchid_fst_spark.automata import (
-    Trie,
-    compile_dfa,
-    deletion_variants,
-    trie_dfa_matches,
-)
+from orchid_fst_spark.automata import Trie, compile_dfa, deletion_variants
+from orchid_fst_spark.automata.trie import dag_dfa, minimize
 from orchid_fst_spark.functions.distance import levenshtein, osa
 from orchid_fst_spark.sources.fixtures import fuzzy_golden, gen_dict_words
 
@@ -44,21 +40,24 @@ def test_dfa_unicode():
 
 def test_trie_dfa_enumeration_lexicographic():
     words = gen_dict_words(2000)
-    trie = Trie.from_sorted(words)
+    root, flat, _n = minimize(Trie.from_sorted(words))
     for q, k, dam in [("hair", 2, False), ("hair", 2, True), ("lo", 1, False)]:
-        got = trie_dfa_matches(trie, compile_dfa(q, k, dam))
-        assert got == fuzzy_golden(words, q, k, dam)
+        got = dag_dfa(root, flat, compile_dfa(q, k, dam))
+        assert [key for key, _ in got] == fuzzy_golden(words, q, k, dam)
+        assert all(v is None for _, v in got)  # set mode: no values
         assert got == sorted(got)
 
 
 def test_trie_map_values():
-    trie = Trie()
-    for key, val in [("ha", 1), ("hair", 7), ("hare", 3)]:
-        trie.insert(key, val)
-    got = trie_dfa_matches(trie, compile_dfa("hair", 1, False), with_values=True)
+    rows = [("ha", 1), ("hair", 7), ("hare", 3)]
+    root, flat, _n = minimize(Trie.from_sorted(*zip(*rows)))
+    keys = [key for key, _ in rows]
+    got = dag_dfa(root, flat, compile_dfa("hair", 1, False))
     assert got == [("hair", 7)]
-    got2 = trie_dfa_matches(trie, compile_dfa("hair", 2, False), with_values=True)
-    assert got2 == [("ha", 1), ("hair", 7), ("hare", 3)]
+    assert [key for key, _ in got] == fuzzy_golden(keys, "hair", 1, False)
+    got2 = dag_dfa(root, flat, compile_dfa("hair", 2, False))
+    assert got2 == rows
+    assert [key for key, _ in got2] == fuzzy_golden(keys, "hair", 2, False)
 
 
 def test_deletion_neighborhood_complete_k2():

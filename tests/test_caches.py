@@ -6,7 +6,7 @@ node map (fst.cpp:96-115, fst.h:197-206)."""
 
 import random
 
-from orchid_fst_spark.automata.trie import Trie, minimize
+from orchid_fst_spark.automata.trie import Trie, dag_dfa, dag_enum, minimize
 from orchid_fst_spark.util.caches import LFUCache, LRUCache
 
 
@@ -143,14 +143,8 @@ def test_lfu_policy_and_budget():
     assert "a" in c2.data and "d" in c2.data
 
 
-def _enumerate(nodes, nid, prefix, out):
-    node = nodes[nid]
-    if "" in node:
-        out.append("".join(prefix))
-    for ch in sorted(k for k in node if k):
-        prefix.append(ch)
-        _enumerate(nodes, node[ch], prefix, out)
-        prefix.pop()
+def _keys(root, flat):
+    return [k for k, _ in dag_enum(root, flat, None, None, True, True)]
 
 
 def test_minimize_preserves_keys_and_shares_suffixes():
@@ -158,10 +152,8 @@ def test_minimize_preserves_keys_and_shares_suffixes():
         {"tap", "taps", "top", "tops", "stop", "stops", "strap", "straps"}
     )
     t = Trie.from_sorted(words)
-    root, nodes, n = minimize(t)
-    got = []
-    _enumerate(nodes, root, [], got)
-    assert got == words
+    root, flat, n = minimize(t)
+    assert _keys(root, flat) == words
     # trie has one node per distinct prefix; minimization must share the
     # common "s"-plural suffix structure
     n_trie_nodes = len({w[:i] for w in words for i in range(len(w) + 1)})
@@ -177,10 +169,8 @@ def test_minimize_bounded_cache_still_correct():
     t = Trie.from_sorted(words)
     _, _, n_min = minimize(t)
     for budget in (64, 512, 4096):
-        root, nodes, n_b = minimize(Trie.from_sorted(words), budget)
-        got = []
-        _enumerate(nodes, root, [], got)
-        assert got == words, budget  # semantics never depend on budget
+        root, flat, n_b = minimize(Trie.from_sorted(words), budget)
+        assert _keys(root, flat) == words, budget  # semantics never depend on budget
         assert n_b >= n_min  # smaller map => same-or-less sharing
     # generous budget converges to minimal
     _, _, n_big = minimize(Trie.from_sorted(words), 10**7)
@@ -192,42 +182,15 @@ def test_deep_keys_no_recursion_limit():
     enumerate without hitting the Python recursion limit — all DFS walks
     are iterative."""
     from orchid_fst_spark.automata.lev_dfa import compile_dfa
-    from orchid_fst_spark.automata.trie import trie_dfa_matches
+    from orchid_fst_spark.sources.fixtures import fuzzy_golden
 
     deep = ["a" * 4000 + "x", "a" * 4000 + "y", "b" * 3500]
-    t = Trie.from_sorted(sorted(deep))
-    root, nodes, n = minimize(t)
-    got = []
-    _enumerate_iter(nodes, root, got)
-    assert got == sorted(deep)
-    dfa = compile_dfa("a" * 4000 + "x", 1, False)
-    hits = trie_dfa_matches(t, dfa)
+    root, flat, n = minimize(Trie.from_sorted(sorted(deep)))
+    assert _keys(root, flat) == sorted(deep)
+    q = "a" * 4000 + "x"
+    hits = [k for k, _ in dag_dfa(root, flat, compile_dfa(q, 1, False))]
+    assert hits == fuzzy_golden(deep, q, 1, False)
     assert hits == ["a" * 4000 + "x", "a" * 4000 + "y"]
-    # index DAG walks too
-    from orchid_fst_spark.operators.index import _dag_dfa, _dag_enum
-
-    assert [k for k, _ in _dag_enum(root, nodes, None, None, True, True)] == sorted(
-        deep
-    )
-    assert [k for k, _ in _dag_dfa(root, nodes, dfa)] == hits
-
-
-def _enumerate_iter(nodes, root, out):
-    # iterative twin of _enumerate for deep DAGs
-    stack = [[root, "", None, 0]]
-    while stack:
-        frame = stack[-1]
-        nid, prefix, chars, idx = frame
-        node = nodes[nid]
-        if chars is None:
-            chars = frame[2] = sorted(k for k in node if k)
-            if "" in node:
-                out.append(prefix)
-        if idx >= len(chars):
-            stack.pop()
-            continue
-        frame[3] += 1
-        stack.append([node[chars[idx]], prefix + chars[idx], None, 0])
 
 
 def test_to_dot_own_golden():
@@ -237,11 +200,11 @@ def test_to_dot_own_golden():
     'tap/taps/top' minimizes to 6 nodes with the shared 'p'->terminal
     suffix structure)."""
     t = Trie.from_sorted(["tap", "taps", "top"])
-    root, nodes, n = minimize(t)
+    root, flat, n = minimize(t)
     assert n == 6
     from orchid_fst_spark.automata.trie import to_dot
 
-    assert to_dot(root, nodes) == (
+    assert to_dot(root, flat) == (
         "digraph fst {\n"
         "  rankdir=LR;\n"
         "  node [shape=circle];\n"
@@ -262,8 +225,8 @@ def test_to_dot_renders_minimized_dag():
     from orchid_fst_spark.automata.trie import to_dot
 
     words = ["tap", "taps", "top", "tops"]
-    root, nodes, _ = minimize(Trie.from_sorted(words))
-    dot = to_dot(root, nodes)
+    root, flat, _ = minimize(Trie.from_sorted(words))
+    dot = to_dot(root, flat)
     assert dot.startswith("digraph fst {") and dot.endswith("}")
     # 4 terminal words but shared suffix structure -> fewer doublecircles
     # than words is allowed; every edge label is a single char

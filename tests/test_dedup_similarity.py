@@ -379,16 +379,21 @@ def test_cosine_threshold_pairs(spark, emb_df):
 
 def test_cosine_threshold_pairs_row_guard(spark, emb_df):
     # brute-force oracle refuses unbounded inputs loudly...
-    with pytest.raises(ValueError, match="brute-force"):
+    with pytest.raises(ValueError, match="brute-force.*more than 3 rows"):
         cosine_threshold_pairs(
             emb_df, "vec_id", "embedding", 0.8, max_rows=3
         )
     # ...and the override is explicit
+    n_pairs = cosine_threshold_pairs(
+        emb_df, "vec_id", "embedding", 0.8, max_rows=None
+    ).count()
+    assert n_pairs > 0
+    # an input of exactly the bound is within it
     assert (
         cosine_threshold_pairs(
-            emb_df, "vec_id", "embedding", 0.8, max_rows=None
+            emb_df, "vec_id", "embedding", 0.8, max_rows=len(EMB)
         ).count()
-        > 0
+        == n_pairs
     )
 
 

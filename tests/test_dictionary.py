@@ -15,7 +15,7 @@ from orchid_fst_spark.operators import (
     prefix_lookup,
     range_lookup,
 )
-from orchid_fst_spark.operators.dictionary import fuzzy_enumerate_trie
+from orchid_fst_spark.operators.index import build_index, index_fuzzy_lookup, load_index
 from orchid_fst_spark.functions.distance import osa, levenshtein
 from orchid_fst_spark.sources.fixtures import fuzzy_golden, gen_dict_kv, gen_dict_words
 
@@ -53,9 +53,12 @@ def test_fuzzy_golden_damerau(spark, dict_df, words):
     assert set(fuzzy_golden(words, "hair", 2, False)) <= set(golden)
 
 
-def test_fuzzy_trie_enumeration_parity(spark, dict_df, words):
+def test_fuzzy_trie_enumeration_parity(spark, dict_df, words, tmp_path):
+    # the structural twin of the reference read path: DFA ∩ minimized DAG
     golden = fuzzy_golden(words, "hair", 2, damerau=True)
-    got = [r.key for r in fuzzy_enumerate_trie(dict_df, "hair", 2, damerau=True).collect()]
+    build_index(dict_df, str(tmp_path / "idx"), n_shards=4)
+    idx = load_index(spark, str(tmp_path / "idx"))
+    got = [r.key for r in index_fuzzy_lookup(idx, "hair", 2, damerau=True).collect()]
     assert got == golden
 
 

@@ -209,6 +209,50 @@ def test_parse_image_real_dispatch():
         parse_image_real(b"\x00\x01garbage")
 
 
+def _stub_pillow(monkeypatch, open_fn):
+    """Install a minimal stand-in ``PIL`` package exposing ``Image.open``
+    and ``UnidentifiedImageError`` (a subclass of OSError, as in Pillow),
+    so the fallback's contract is tested whether or not Pillow exists."""
+    import sys
+    import types
+
+    pil = types.ModuleType("PIL")
+    image = types.ModuleType("PIL.Image")
+    pil.UnidentifiedImageError = type("UnidentifiedImageError", (OSError,), {})
+    image.open = lambda fp: open_fn(pil, fp)
+    pil.Image = image
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", image)
+
+
+def test_parse_image_real_pillow_unidentified_is_value_error(monkeypatch):
+    def unidentified(pil, fp):
+        raise pil.UnidentifiedImageError("cannot identify image file")
+
+    _stub_pillow(monkeypatch, unidentified)
+    with pytest.raises(ValueError, match="unsupported image format"):
+        parse_image_real(b"GIF89a-not-really")
+
+
+def test_parse_image_real_pillow_reports_source_format(monkeypatch):
+    pix = _smooth(4, 3)
+
+    class FakeImage:
+        def __init__(self, fmt):
+            self.format = fmt
+
+        def convert(self, mode):
+            assert mode == "RGB"
+            return FakeImage(None)  # like Pillow: the copy has no format
+
+        def __array__(self, dtype=None, copy=None):
+            return pix
+
+    _stub_pillow(monkeypatch, lambda pil, fp: FakeImage("GIF"))
+    arr, fmt = parse_image_real(b"GIF89a")
+    assert fmt == "gif" and (arr == pix).all()
+
+
 def test_parse_image_real_matches_pillow_if_present():
     PIL = pytest.importorskip("PIL.Image")
     import io

@@ -121,18 +121,40 @@ def test_index_fuzzy_many_parity(spark, kv_df, index_df):
 def test_shard_cache_hits():
     # driver-side check of the decoded-shard LRU: same blob decodes once
     import hashlib
+
+    from orchid_fst_spark.automata.trie import Trie, minimize
+    from orchid_fst_spark.operators.index import _encode_blob, _shard_dag
+
+    root, flat, _n = minimize(Trie.from_sorted(["cache", "hits"]))
+    blob = _encode_blob(root, flat, False)
+    md5 = hashlib.md5(blob).hexdigest()
+    reads = []
+
+    def read_blob():
+        reads.append(1)
+        return blob
+
+    h0, m0 = _TRIE_CACHE.hits, _TRIE_CACHE.misses
+    a = _shard_dag(0, md5, read_blob)
+    b = _shard_dag(0, md5, read_blob)
+    assert a is b  # second call served from cache, no re-decode
+    assert len(reads) == 1  # nor a second blob read
+    assert _TRIE_CACHE.hits == h0 + 1 and _TRIE_CACHE.misses == m0 + 1
+    assert a[0] == root and not a[2]
+
+
+def test_decode_blob_rejects_unknown_format():
+    """Only the 'flat1' shard format decodes; anything else (e.g. the
+    retired pickled list-of-dicts node table) names the shard and asks
+    for a rebuild instead of silently decoding."""
     import pickle
     import zlib
 
-    from orchid_fst_spark.operators.index import _shard_dag
+    from orchid_fst_spark.operators.index import _decode_blob
 
-    blob = zlib.compress(pickle.dumps((0, [{"": None}], False)))
-    md5 = hashlib.md5(blob).hexdigest()
-    h0, m0 = _TRIE_CACHE.hits, _TRIE_CACHE.misses
-    a = _shard_dag(blob, md5)
-    b = _shard_dag(blob, md5)
-    assert a is b  # second call served from cache, no re-decode
-    assert _TRIE_CACHE.hits == h0 + 1 and _TRIE_CACHE.misses == m0 + 1
+    legacy = zlib.compress(pickle.dumps((0, [{"": None}], False)))
+    with pytest.raises(ValueError, match=r"shard 7.*rebuild the index"):
+        _decode_blob(legacy, 7)
 
 
 def test_prefix_lookup_no_synthetic_upper_bound(spark, tmp_path):

@@ -144,13 +144,17 @@ def test_clk_validation_errors(spark):
         clk_dice_pairs(clk_encode(df, "key"), threshold=0.0)
     # brute-force oracle refuses unbounded inputs loudly; override is
     # explicit (mirrors cosine_threshold_pairs' max_rows guard)
-    with pytest.raises(ValueError, match="brute-force"):
+    with pytest.raises(ValueError, match="brute-force.*more than 1 ids"):
         clk_dice_pairs(clk_encode(df, "key"), threshold=0.5, max_ids=1)
+    n_pairs = clk_dice_pairs(
+        clk_encode(df, "key"), threshold=0.5, max_ids=None
+    ).count()
+    assert n_pairs >= 0
+    # an input of exactly the bound is within it
+    n_ids = clk_encode(df, "key").select("id").distinct().count()
     assert (
-        clk_dice_pairs(
-            clk_encode(df, "key"), threshold=0.5, max_ids=None
-        ).count()
-        >= 0
+        clk_dice_pairs(clk_encode(df, "key"), threshold=0.5, max_ids=n_ids).count()
+        == n_pairs
     )
 
 

@@ -23,7 +23,7 @@ import os
 import pytest
 
 from orchid_fst_spark.operators import build_dict, fuzzy_lookup
-from orchid_fst_spark.operators.dictionary import fuzzy_enumerate_trie
+from orchid_fst_spark.operators.index import build_index, index_fuzzy_lookup, load_index
 from orchid_fst_spark.operators.sort import sort_metrics, sorted_lines
 
 REF = "/root/reference/src/main/fst/testdata"
@@ -68,11 +68,14 @@ def test_fuzzy_hair_damerau_220(spark, ref_dict):
     assert got == golden
 
 
-def test_fuzzy_hair_trie_enumeration(spark, ref_dict):
+def test_fuzzy_hair_trie_enumeration(spark, ref_dict, tmp_path):
+    # the reference's structural read path: DFA ∩ minimized DAG, off an
+    # index built from the same dictionary
     golden = _lines(f"{REF}/fst_test_dict3_standard.txt")
+    build_index(ref_dict, str(tmp_path / "idx"), n_shards=8)
+    idx = load_index(spark, str(tmp_path / "idx"))
     got = [
-        r.key
-        for r in fuzzy_enumerate_trie(ref_dict, "hair", 2, damerau=True).collect()
+        r.key for r in index_fuzzy_lookup(idx, "hair", 2, damerau=True).collect()
     ]
     assert got == golden
 
