@@ -33,6 +33,7 @@ from orchid_fst_spark.functions.text import (
     PUNCT_CLASS,
     STOPWORDS,
     URL_RE,
+    lang_id,
     pattern_count,
     scrub_pii,
     token_count,
@@ -40,7 +41,6 @@ from orchid_fst_spark.functions.text import (
 from orchid_fst_spark.functions.normalize import tokens
 from orchid_fst_spark.functions.vectorized import osa_distance, true_damerau_distance
 from orchid_fst_spark.operators import (
-    build_dict,
     fuzzy_join,
     fuzzy_lookup,
     fuzzy_self_pairs,
@@ -2715,28 +2715,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         .alias("n_bpe"),
     )
 
-    def _lang_counts(spark, sf):
-        docs = _docs(spark, sf)
-        toks = tokens(F.lower(F.col("text")))
-        ratios = {}
-        for lg, words in STOPWORDS.items():
-            hits = F.size(F.filter(toks, lambda t: t.isin(words)))
-            ratios[lg] = F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(
-                F.lit(0.0)
-            )
-        best_lang, best_ratio = F.lit("und"), F.lit(0.0)
-        for lg in sorted(STOPWORDS):
-            r = ratios[lg]
-            better = r > best_ratio
-            best_lang = F.when(better, F.lit(lg)).otherwise(best_lang)
-            best_ratio = F.when(better, r).otherwise(best_ratio)
-        return (
-            docs.select(best_lang.alias("lang_pred"))
-            .groupBy("lang_pred")
-            .agg(F.count("*").alias("n"))
-        )
-
-    q["lang_id_counts"] = _lang_counts
+    q["lang_id_counts"] = lambda spark, sf: (
+        _docs(spark, sf)
+        .select(lang_id(F.col("text")).alias("lang_pred"))
+        .groupBy("lang_pred")
+        .agg(F.count("*").alias("n"))
+    )
 
     def _quality_bands(spark, sf):
         docs = _docs(spark, sf)
@@ -6440,7 +6424,7 @@ SELECT doc_id,
 FROM documents"""
 
     # lexical ranking twins: same tokenization expression as
-    # token_stats/lang_id (lowered, whitespace-split, empties removed);
+    # token_stats/lang_id_counts (lowered, whitespace-split, empties removed);
     # integer tf/df/dl everywhere, one ln+divide rounded to 6 decimals
     o["tf_idf_terms"] = r"""
 WITH tok AS (

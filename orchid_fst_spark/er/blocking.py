@@ -85,8 +85,8 @@ def candidate_pairs(
     ``fuzzy_self_pairs``); any other name is a ValueError.
 
     ``sig_cap`` drops signatures shared by more than cap keys (a
-    degenerate block would contribute O(cap²) pairs); dropped mass is
-    observable via ``blocking_metrics``/``passjoin_metrics``.  Returns
+    degenerate block would contribute O(cap²) pairs); block sizes are
+    observable via ``blocking_metrics``.  Returns
     (key_a, key_b, dist) over *keys*; join back to urls downstream so the
     quadratic work happens on distinct keys, not urls.
     """

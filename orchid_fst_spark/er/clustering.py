@@ -18,6 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..util.storage import cut
+
+#: star rounds before ``connected_components`` gives up; O(log n)
+#: rounds suffice (a shuffled 64-node path converges in 6)
+_MAX_ROUNDS = 25
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Orient every edge small -> large, drop self loops, dedup."""
@@ -34,7 +40,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Return (node, component) with component = lexicographic min node
@@ -42,9 +47,12 @@ def connected_components(
 
     Implementation: alternate large-star (every neighbor > v links to
     v's minimum neighborhood node) and small-star (neighbors <= v link to
-    the minimum), checking convergence via the edge-set change count.
+    the minimum) until the edge set stops changing.  Raises
+    ``RuntimeError`` if it still changes after ``_MAX_ROUNDS`` rounds:
+    the labelling read off an unconverged edge set would be wrong.
+    Under ``checkpoint_dir`` each round's edges are written to
+    ``cc_edges_{round}``.
     """
-    spark = edges.sparkSession
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -52,21 +60,17 @@ def connected_components(
         .distinct()
     )
 
-    def _persist(df: DataFrame, name: str, i: int) -> DataFrame:
-        if checkpoint_dir:
-            path = f"{checkpoint_dir}/cc_{name}_{i}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
+    def _cut(df: DataFrame, i: int) -> DataFrame:
+        return cut(df, f"{checkpoint_dir}/cc_edges_{i}" if checkpoint_dir else None)
 
-    e = _persist(e, "edges", 0)
+    e = _cut(e, 0)
 
     def _fp(df: DataFrame):
         # edge-set fingerprint: count + order-insensitive xor of row
         # hashes — one aggregation job per iteration instead of two
         # exceptAll passes (xor never overflows under ANSI mode; edges are
         # distinct so xor cancellation cannot hide a change of the same
-        # cardinality except by 64-bit collision; max_iter is the backstop)
+        # cardinality except by 64-bit collision; _MAX_ROUNDS is the backstop)
         row = df.agg(
             F.count("*").alias("n"),
             F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
@@ -75,7 +79,7 @@ def connected_components(
 
     fp_prev = _fp(e)
 
-    for i in range(1, max_iter + 1):
+    for i in range(1, _MAX_ROUNDS + 1):
         # -- large-star --------------------------------------------------
         # neighborhood of v including v; m = min; link every neighbor > v to m
         nbrs = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -100,13 +104,18 @@ def connected_components(
             .union(mins2.select(F.col("m").alias("src"), F.col("v").alias("dst")))
         )
         e2 = _canonical(small)
-        e2 = _persist(e2, "edges", i)
+        e2 = _cut(e2, i)
 
         fp_new = _fp(e2)
         e = e2
         if fp_new == fp_prev:
             break
         fp_prev = fp_new
+    else:
+        raise RuntimeError(
+            f"connected_components: edge set still changing after "
+            f"{_MAX_ROUNDS} rounds"
+        )
 
     # after convergence every edge is (root, member)
     comp = e.select(F.col("dst").alias("node"), F.col("src").alias("component"))

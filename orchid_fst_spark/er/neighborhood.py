@@ -827,7 +827,7 @@ def block_split_pairs(
     n·(n-1)/2 comparisons decomposed into m·(m+1)/2 bounded tasks (one
     per sub-block pair), so no single task ever buffers more than
     ~2·``max_block`` members.  This is the other arm of the skew story
-    next to ``dedup.cap_hot_buckets`` / ``grouped_bucket_pairs``: caps
+    next to ``dedup.grouped_bucket_pairs``: caps
     DROP over-cap blocks (observable recall trade), BlockSplit keeps
     them and pays the full O(n²) comparison bill in balanced, spillable
     installments — use it when the blocker is the precision stage and

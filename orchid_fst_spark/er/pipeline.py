@@ -21,6 +21,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..util.storage import cut
 from .blocking import candidate_pairs, normalize_pages
 from .clustering import connected_components
 from .scoring import match_edges, score_pairs
@@ -42,32 +43,20 @@ class _Checkpointer:
         self.metrics: list[dict] = []
 
     def run(self, stage: str, fn, params: dict) -> DataFrame:
-        """Materialize a stage: resume from parquet when complete,
-        otherwise compute, persist, and record lineage metrics."""
+        """Materialize a stage.  Without a checkpoint directory it is
+        cut with ``localCheckpoint`` and nothing is recorded; with one,
+        resume from its parquet when complete, otherwise compute and
+        persist it, and record lineage metrics."""
+        if not self.dir:
+            return cut(fn())
         t0 = time.time()
-        if self.dir:
-            path = _stage_path(self.dir, stage)
-            if self.resume and _complete(path):
-                df = self.spark.read.parquet(path)
-                self.metrics.append(
-                    {
-                        "stage": stage,
-                        "resumed": True,
-                        "rows": df.count(),
-                        "wall_sec": round(time.time() - t0, 3),
-                        "params": json.dumps(params, sort_keys=True),
-                    }
-                )
-                return df
-            df = fn()
-            df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-        else:
-            out = fn().localCheckpoint(eager=True)
+        path = _stage_path(self.dir, stage)
+        resumed = self.resume and _complete(path)
+        out = self.spark.read.parquet(path) if resumed else cut(fn(), path)
         self.metrics.append(
             {
                 "stage": stage,
-                "resumed": False,
+                "resumed": resumed,
                 "rows": out.count(),
                 "wall_sec": round(time.time() - t0, 3),
                 "params": json.dumps(params, sort_keys=True),
@@ -76,7 +65,7 @@ class _Checkpointer:
         return out
 
     def write_metrics(self) -> None:
-        if self.dir and self.metrics:
+        if self.metrics:
             self.spark.createDataFrame(
                 [
                     (m["stage"], m["resumed"], m["rows"], m["wall_sec"], m["params"])

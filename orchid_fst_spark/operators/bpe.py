@@ -2,8 +2,8 @@
 
 The tokenizer-training statistic family (Sennrich, Haddow & Birch,
 ACL'16 "Neural Machine Translation of Rare Words with Subword Units"):
-count adjacent symbol pairs weighted by word frequency, repeatedly merge
-the most frequent pair, and encode text with the learned merge table.
+count adjacent symbol pairs weighted by word frequency and repeatedly
+merge the most frequent pair.
 Complements `ranking.vocab_topk` (word/bigram counts) with the subword
 level the reference's byte-transition FST alphabet hints at (fst.h:59:
 transitions are single input units; BPE decides what the units are).
@@ -20,9 +20,7 @@ corpus-sized:
   the word frame is consumed twice per iteration (pair counts + merge
   rewrite) and an untruncated double reference doubles the analyzed
   plan tree per iteration (the pagerank/hits lesson, measured 105 s ->
-  6.6 s at 3 iterations);
-- encoding looks up each DISTINCT word once and joins the result back —
-  a billion occurrences of "the" cost one merge replay.
+  6.6 s at 3 iterations).
 
 Symbol arrays stay inside Catalyst: chars via ``split(w, '')`` (Java
 regex keeps supplementary characters whole, so granularity is code
@@ -214,59 +212,3 @@ def bpe_train(
     return spark.createDataFrame(
         merges, "rank long, sym_a string, sym_b string, n long"
     )
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eow: str | None = EOW,
-    checkpoint_every: int = 16,
-) -> DataFrame:
-    """Encode documents with a learned merge table: ``(id, pos, token)``
-    — one row per subword token, ``pos`` its 0-based position in the
-    document's whitespace token stream paired with the subword index
-    (``pos = word_pos * 2^20 + sub_idx``; loud guard on overflow).
-
-    The merge table is replayed in rank order over the DISTINCT word
-    frame (vocab-sized), then joined back to word occurrences — the
-    corpus is scanned once for words and once for the join.  The fold
-    chain is cut every ``checkpoint_every`` merges so the expression
-    tree handed to codegen stays bounded.
-    """
-    table = [
-        (r.rank, r.sym_a, r.sym_b)
-        for r in merges.select("rank", "sym_a", "sym_b")
-        .orderBy("rank")
-        .collect()
-    ]
-    occurrences = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-            "word_pos", "w"
-        ),
-    ).filter(F.col("w") != "")
-    vocab = occurrences.select("w").distinct()
-    enc = vocab.select("w", _symbols(F.col("w"), eow).alias("syms"))
-    for i, (_, a, b) in enumerate(table):
-        enc = enc.select(
-            "w", _merge_symbols(F.col("syms"), a, b).alias("syms")
-        )
-        if (i + 1) % checkpoint_every == 0:
-            enc = enc.localCheckpoint(eager=True)
-    joined = occurrences.join(enc, "w")
-    out = joined.select(
-        "id", "word_pos", F.posexplode(F.col("syms")).alias("sub_idx", "token")
-    )
-    # 2^20 subwords per word would mean a megabyte-long "word"; fail
-    # loudly rather than alias positions
-    guarded = F.when(
-        F.col("sub_idx") < (1 << 20),
-        F.col("word_pos") * (1 << 20) + F.col("sub_idx"),
-    ).otherwise(
-        F.raise_error(
-            F.lit("bpe_encode: word with >= 2^20 subword tokens")
-        ).cast("long")
-    )
-    return out.select("id", guarded.alias("pos"), "token")

@@ -146,186 +146,3 @@ def pack_sequences(
             (F.col("_before") % seq_tokens).cast("long").alias("seq_offset"),
         )
     )
-
-
-def write_packed_shards(
-    docs: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seq_tokens: int = 2048,
-    seqs_per_shard: int = 1024,
-    num_partitions: int | None = None,
-    mode: str = "error",
-) -> DataFrame:
-    """Materialize the ``pack_sequences`` layout as the shard-
-    partitioned parquet artifact a training loader actually reads —
-    the sink end of the training-data pipeline (dedup/filter upstream,
-    chunk/pack here, loaders stream shards).
-
-    A shard covers a CONTIGUOUS token range of ``seqs_per_shard *
-    seq_tokens`` tokens, and every document contributes exactly the
-    token SLICE that falls inside each shard it touches (a document
-    straddling shard boundaries appears in every shard it spans, each
-    row carrying only that shard's tokens) — so reading the shard
-    directories [a, b) yields the COMPLETE, exact token stream of that
-    range, no matter how long any single document is, and every
-    shard's token count is exactly the shard budget (except the last).
-    Rows carry ``(shard, gstart, id, n_tokens, slice_tokens,
-    <text_col>)`` — ``gstart`` the slice's global token offset (the
-    in-shard sort key), ``n_tokens`` the document's full length,
-    ``slice_tokens`` this row's contribution — and are in-file sorted
-    by ``(gstart, id)``; ``shard`` is a PARTITION DIRECTORY, so a
-    loader (or resume) asking for a shard range prunes at planning
-    time (the same contract as the persisted text/fuzzy indexes).
-
-    Scale notes: one range exchange inside ``pack_sequences`` (the
-    distributed cumsum), one id-keyed join to re-attach the text, a
-    row-local slice explode (fan-out = shards spanned, usually 1), and
-    one hash exchange on ``shard`` before the write.
-
-    Returns the written artifact re-read, with ``shard`` cast back to
-    the long it was computed as (partition-directory inference would
-    otherwise narrow it to int)."""
-    if seqs_per_shard <= 0:
-        raise ValueError("need seqs_per_shard > 0")
-    shard_tokens = int(seqs_per_shard) * int(seq_tokens)
-    man = pack_sequences(docs, id_col, text_col, seq_tokens, num_partitions)
-    # global token offset of the document start; integer div throughout
-    # (the `/ then cast` double path loses exactness at ~2^43 quotients)
-    g0 = F.expr(f"seq_id * {int(seq_tokens)} + seq_offset")
-    with_text = (
-        man.withColumn("gstart0", g0)
-        .join(
-            docs.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias(text_col)
-            ),
-            "id",
-        )
-        .withColumn("_toks", tokens(F.col(text_col)))
-    )
-    first_s = F.expr(f"gstart0 div {shard_tokens}")
-    last_s = F.expr(
-        f"greatest((gstart0 + n_tokens - 1) div {shard_tokens},"
-        f" gstart0 div {shard_tokens})"  # n_tokens = 0 keeps one row
-    )
-    sliced = (
-        with_text.withColumn(
-            "shard", F.explode(F.sequence(first_s, last_s))
-        )
-        .withColumn(
-            "gstart",
-            F.greatest(F.expr(f"shard * {shard_tokens}"), F.col("gstart0")),
-        )
-        .withColumn(
-            "slice_tokens",
-            F.least(
-                F.expr(f"(shard + 1) * {shard_tokens}"),
-                F.col("gstart0") + F.col("n_tokens"),
-            )
-            - F.col("gstart"),
-        )
-        .select(
-            "shard",
-            "gstart",
-            "id",
-            "n_tokens",
-            F.col("slice_tokens").cast("long").alias("slice_tokens"),
-            F.concat_ws(
-                " ",
-                F.slice(
-                    F.col("_toks"),
-                    (F.col("gstart") - F.col("gstart0") + 1).cast("int"),
-                    F.greatest(F.col("slice_tokens"), F.lit(0)).cast("int"),
-                ),
-            ).alias(text_col),
-        )
-    )
-    (
-        sliced.repartition("shard")
-        .sortWithinPartitions("shard", "gstart", "id")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(out_dir)
-    )
-    back = docs.sparkSession.read.parquet(out_dir)
-    return back.withColumn("shard", F.col("shard").cast("long"))
-
-
-def read_packed_shards(
-    spark,
-    path: str,
-    shard_lo: int | None = None,
-    shard_hi: int | None = None,
-) -> DataFrame:
-    """Loader-side read of the ``write_packed_shards`` artifact: the
-    slice rows of shard directories ``[shard_lo, shard_hi)``, pruned at
-    PLANNING time (the range filter lands on the raw partition column
-    BEFORE the long cast, so it becomes a PartitionFilter — only the
-    asked directories are even listed; plan + inputFiles pinned in
-    tests/test_chunk_interval_setsim.py).  Because every shard carries
-    exactly its token range, the result is the complete token stream of
-    ``[shard_lo * shard_tokens, shard_hi * shard_tokens)`` — the
-    resume/DDP contract: worker i reads its own shard range and nothing
-    else."""
-    df = spark.read.parquet(path)
-    if shard_lo is not None:
-        df = df.filter(F.col("shard") >= int(shard_lo))
-    if shard_hi is not None:
-        df = df.filter(F.col("shard") < int(shard_hi))
-    return df.withColumn("shard", F.col("shard").cast("long"))
-
-
-def sequences_from_shards(
-    slices: DataFrame, text_col: str = "text", seq_tokens: int = 2048
-) -> DataFrame:
-    """Reconstruct the actual training sequences ``(seq_id, n_tokens,
-    seq_text)`` from packed-shard slice rows — the inverse of
-    ``pack_sequences`` + ``write_packed_shards`` (round-trip pinned by
-    test: concatenating the sequences in seq_id order reproduces the
-    corpus token stream in id order, every sequence exactly
-    ``seq_tokens`` tokens except the last).
-
-    Row-local re-slice (a slice spans the sequences it crosses — fan-out
-    usually 1) then ONE groupBy(seq_id) assembling the pieces with an
-    in-aggregate array_sort by global offset; a group holds at most
-    ``seq_tokens`` tokens, so the aggregation buffer is bounded by the
-    sequence budget, never by document length."""
-    if seq_tokens <= 0:
-        raise ValueError("need seq_tokens > 0")
-    base = slices.filter(F.col("slice_tokens") > 0).select(
-        "gstart", "slice_tokens", tokens(F.col(text_col)).alias("_toks")
-    )
-    first_q = F.expr(f"gstart div {int(seq_tokens)}")
-    last_q = F.expr(f"(gstart + slice_tokens - 1) div {int(seq_tokens)}")
-    ex = base.withColumn("seq_id", F.explode(F.sequence(first_q, last_q)))
-    pstart = F.greatest(
-        F.expr(f"seq_id * {int(seq_tokens)}"), F.col("gstart")
-    )
-    pend = F.least(
-        F.expr(f"(seq_id + 1) * {int(seq_tokens)}"),
-        F.col("gstart") + F.col("slice_tokens"),
-    )
-    piece = F.slice(
-        F.col("_toks"),
-        (pstart - F.col("gstart") + 1).cast("int"),
-        (pend - pstart).cast("int"),
-    )
-    pieces = ex.select(
-        "seq_id",
-        pstart.alias("pstart"),
-        (pend - pstart).cast("long").alias("p_n"),
-        F.array_join(piece, " ").alias("piece"),
-    )
-    ps = F.array_sort(F.collect_list(F.struct("pstart", "piece")))
-    return (
-        pieces.groupBy("seq_id")
-        .agg(F.sum("p_n").alias("n_tokens"), ps.alias("_ps"))
-        .select(
-            "seq_id",
-            "n_tokens",
-            F.array_join(
-                F.transform("_ps", lambda s: s["piece"]), " "
-            ).alias("seq_text"),
-        )
-    )

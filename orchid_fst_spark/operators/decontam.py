@@ -130,25 +130,3 @@ def contamination_stats(
     else:
         flag = F.col("overlap_frac") >= float(threshold)
     return out.withColumn("contaminated", flag)
-
-
-def decontaminate(
-    docs: DataFrame,
-    bench: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    n: int = 13,
-    threshold: float = 0.0,
-    broadcast_bench: bool = True,
-) -> DataFrame:
-    """The filtered corpus: all ``docs`` columns, contaminated rows
-    removed (the apply-side twin of :func:`contamination_stats`)."""
-    stats = contamination_stats(
-        docs, bench, id_col, text_col, bench_text_col, n, threshold,
-        broadcast_bench,
-    )
-    keep = stats.filter(~F.col("contaminated")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(keep, id_col, "left_semi")

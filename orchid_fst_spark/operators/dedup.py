@@ -27,24 +27,6 @@ from ..util.storage import maybe_persist as _maybe_persist  # noqa: F401
 # them in long-lived sessions)
 
 
-def cap_hot_buckets(stacked: DataFrame, bucket_cap: int) -> DataFrame:
-    """Drop every row of LSH band buckets carried by more than
-    ``bucket_cap`` members — the same broadcast-anti-join discipline as
-    ``ngram_jaccard_pairs.df_cap``.  Exact/near-exact duplicate clusters
-    share ALL their bands, so one crawl-dominating boilerplate cluster
-    of size m would otherwise emit O(m²) join rows in EVERY band; run
-    ``exact_dedup`` first so byte-identical copies never reach LSH, and
-    treat the cap as the observable recall trade for what remains
-    (``bucket_profile`` reports the dropped mass, never silent)."""
-    hot = (
-        stacked.groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .select("bucket")
-    )
-    return stacked.join(F.broadcast(hot), "bucket", "left_anti")
-
-
 def bucket_profile(stacked: DataFrame, bucket_cap: int) -> DataFrame:
     """One-row observability profile for a (.., bucket) LSH frame: how
     big buckets get and exactly how many O(n²) join rows the cap
@@ -82,8 +64,8 @@ def grouped_bucket_pairs(
     re-planning per query on this pipeline; the band frame is now
     scanned exactly once, so callers no longer persist it.
 
-    Cap semantics are identical to ``cap_hot_buckets``: buckets with
-    more than ``bucket_cap`` members contribute nothing.  The default
+    Cap semantics: buckets with more than ``bucket_cap`` members
+    contribute nothing.  The default
     (``precap=True``) enforces the cap with a ``count() over
     (partition by bucket)`` window BEFORE the collect: WindowExec's
     per-group buffer is an UnsafeExternalSorter that SPILLS, and the
@@ -645,7 +627,6 @@ def near_dedup(
     threshold_den: int = 10,
     bucket_cap: int = 5000,
     storage: str | None = "MEMORY_AND_DISK",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-duplicate removal: the full keep-one-per-cluster
@@ -660,7 +641,8 @@ def near_dedup(
          (banded equi-join + integer-exact Jaccard verify, hot buckets
          capped),
       3. alternating-star ``connected_components`` over the verified
-         pairs (O(log n) rounds, checkpointed lineage),
+         pairs (O(log n) rounds, checkpointed lineage; ``RuntimeError``
+         if it has not converged after ``clustering._MAX_ROUNDS``),
       4. every doc labeled with its cluster representative
          (lexicographic-min id through BOTH collapses).
 
@@ -703,7 +685,6 @@ def near_dedup(
         pairs.select("id_a", "id_b"),
         src="id_a",
         dst="id_b",
-        max_iter=max_iter,
         checkpoint_dir=checkpoint_dir,
     )
     return (
@@ -726,7 +707,6 @@ def incremental_near_dedup(
     threshold_den: int = 10,
     bucket_cap: int = 5000,
     storage: str | None = "MEMORY_AND_DISK",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fold a new crawl batch into an existing ``near_dedup`` clustering
@@ -846,7 +826,6 @@ def incremental_near_dedup(
         edges,
         src="id_a",
         dst="id_b",
-        max_iter=max_iter,
         checkpoint_dir=checkpoint_dir,
     )
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util.storage import maybe_persist as _maybe_persist
+from ..util.storage import cut, maybe_persist as _maybe_persist
 
 
 def degree_stats(
@@ -160,7 +160,6 @@ def hits(
       it)."""
     if iterations < 1:
         raise ValueError("need iterations >= 1")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = _maybe_persist(
         e.select(F.col("src").alias("node"))
@@ -174,11 +173,7 @@ def hits(
     def _cut(df: DataFrame, name: str, i: int) -> DataFrame:
         if not truncate:  # plan-audit knob, same contract as pagerank's
             return df
-        if checkpoint_dir:
-            path = f"{checkpoint_dir}/hits_{name}_{i}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
+        return cut(df, f"{checkpoint_dir}/hits_{name}_{i}" if checkpoint_dir else None)
 
     hubs = _cut(
         nodes.crossJoin(n_df).select(
@@ -303,7 +298,6 @@ def pagerank(
     cut — ONLY for plan auditing (gen_plans asserts the iteration
     body's physical plan, which truncation would hide behind a
     checkpointed leaf); never run real iteration counts with it."""
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = _maybe_persist(
         e.select(F.col("src").alias("node"))
@@ -329,11 +323,7 @@ def pagerank(
     def _cut(df: DataFrame, i: int) -> DataFrame:
         if not truncate:
             return df
-        if checkpoint_dir:
-            path = f"{checkpoint_dir}/pagerank_rank_{i}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
+        return cut(df, f"{checkpoint_dir}/pagerank_rank_{i}" if checkpoint_dir else None)
 
     ranks = _cut(
         nodes.crossJoin(n_df).select(

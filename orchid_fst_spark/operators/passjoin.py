@@ -176,8 +176,7 @@ def passjoin_probe(keyed: DataFrame, k: int, max_len: int) -> DataFrame:
 def _capped_index(keyed: DataFrame, k: int, max_len: int, sig_cap: int) -> DataFrame:
     """``passjoin_index`` minus the entries of hot signatures (> sig_cap
     keys — e.g. a segment equal to a crawl-dominating host prefix),
-    dropped before the join; the drop is observable via
-    ``passjoin_metrics``."""
+    dropped before the join."""
     idx = passjoin_index(keyed, k, max_len)
     hot = (
         idx.groupBy("sig")
@@ -206,21 +205,6 @@ def passjoin_self_candidates(
         .distinct()
     )
     return pairs
-
-
-def passjoin_metrics(keyed: DataFrame, k: int = 2, max_len: int = 96) -> DataFrame:
-    """Signature block-size stats for skew observability (caps are never
-    silent — mirror of blocking.blocking_metrics for the segment path)."""
-    idx = passjoin_index(keyed, k, max_len)
-    return (
-        idx.groupBy("sig")
-        .agg(F.count("*").alias("block_size"))
-        .agg(
-            F.count("*").alias("n_signatures"),
-            F.max("block_size").alias("max_block"),
-            F.avg("block_size").alias("avg_block"),
-        )
-    )
 
 
 def passjoin_join_candidates(

@@ -366,19 +366,3 @@ def dsir_weights(
             F.coalesce("avg_logratio", F.lit(0.0)).alias("avg_logratio"),
         )
     )
-
-
-def dsir_top_k(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kw,
-) -> DataFrame:
-    """The ``k`` most target-like raw docs by DSIR weight — deterministic
-    total order (rounded weight desc, id asc), planned as
-    TakeOrderedAndProject (a per-partition top-k then one k-row merge,
-    never a global sort materialization)."""
-    w = dsir_weights(raw, target, id_col=id_col, text_col=text_col, **kw)
-    return w.orderBy(F.desc("avg_logratio"), F.asc("id")).limit(int(k))

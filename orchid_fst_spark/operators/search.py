@@ -53,27 +53,6 @@ def phrase_match_postings(p: DataFrame, phrase: list[str]) -> DataFrame:
     return out.groupBy("doc_id").agg(F.count("*").alias("n_matches"))
 
 
-def boolean_match_hits(
-    hits: DataFrame, must_set: list[str], not_set: list[str]
-) -> DataFrame:
-    """The boolean AND/AND-NOT core, shared by the scan and artifact
-    paths: given a DISTINCT (doc_id, term) hits frame covering both
-    vocabularies, one hash aggregate keeps docs matching every must
-    term, then a left-anti join removes docs carrying any excluded
-    term.  Returns (doc_id)."""
-    keep = (
-        hits.filter(F.col("term").isin(must_set))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_hit"))
-        .filter(F.col("n_hit") == len(must_set))
-        .select("doc_id")
-    )
-    if not_set:
-        bad = hits.filter(F.col("term").isin(not_set)).select("doc_id").distinct()
-        keep = keep.join(bad, "doc_id", "left_anti")
-    return keep
-
-
 def phrase_search(
     docs: DataFrame,
     id_col: str,
@@ -113,9 +92,10 @@ def boolean_search(
     ``must_not`` terms; returns (doc_id).
 
     Plan: the token explode is filtered to the combined query
-    vocabulary, deduped to (doc_id, term), then
-    :func:`boolean_match_hits` runs the AND/AND-NOT core.  The corpus
-    token stream never shuffles — only query-term hits do."""
+    vocabulary and deduped to (doc_id, term); one hash aggregate keeps
+    docs matching every must term, then a left-anti join removes docs
+    carrying any excluded term.  The corpus token stream never shuffles
+    — only query-term hits do."""
     if not must:
         raise ValueError("must terms required")
     must_set = sorted(set(must))
@@ -126,7 +106,17 @@ def boolean_search(
         .select("doc_id", "term")
         .distinct()
     )
-    return boolean_match_hits(hits, must_set, not_set)
+    keep = (
+        hits.filter(F.col("term").isin(must_set))
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_hit"))
+        .filter(F.col("n_hit") == len(must_set))
+        .select("doc_id")
+    )
+    if not_set:
+        bad = hits.filter(F.col("term").isin(not_set)).select("doc_id").distinct()
+        keep = keep.join(bad, "doc_id", "left_anti")
+    return keep
 
 
 def fuzzy_term_docs(

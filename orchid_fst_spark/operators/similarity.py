@@ -726,7 +726,6 @@ def _keep_one_dedup(
     vec_col: str,
     pairs_fn,
     storage: str | None,
-    max_iter: int,
     checkpoint_dir: str | None,
 ) -> DataFrame:
     """Shared keep-one-per-cluster scaffold for the embedding dedups:
@@ -762,7 +761,6 @@ def _keep_one_dedup(
         pairs.select("id_a", "id_b"),
         src="id_a",
         dst="id_b",
-        max_iter=max_iter,
         checkpoint_dir=checkpoint_dir,
     )
     return (
@@ -783,7 +781,6 @@ def semantic_dedup(
     seed: int = 42,
     cell_cap: int = 2000,
     storage: str | None = "MEMORY_AND_DISK",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al.,
@@ -810,9 +807,10 @@ def semantic_dedup(
          vector rides the expansion as the payload so there is no
          join-back),
       4. exact cosine verify at ``threshold``, alternating-star
-         connected components, and every input row labeled
-         ``(id, rep_id, keep)`` with keep=1 iff the row is its
-         cluster's representative.
+         ``connected_components`` (``RuntimeError`` if it has not
+         converged after ``clustering._MAX_ROUNDS``), and every input
+         row labeled ``(id, rep_id, keep)`` with keep=1 iff the row is
+         its cluster's representative.
 
     Recall caveat (same as published SemDeDup): near-duplicates whose
     vectors land in different coarse cells are not compared — raise
@@ -838,7 +836,7 @@ def semantic_dedup(
         ).select("id_a", "id_b")
 
     return _keep_one_dedup(
-        emb, id_col, vec_col, _pairs, storage, max_iter, checkpoint_dir
+        emb, id_col, vec_col, _pairs, storage, checkpoint_dir
     )
 
 
@@ -854,7 +852,6 @@ def embedding_dedup(
     plane_scheme: str = "md5",
     bucket_cap: int = 5000,
     storage: str | None = "MEMORY_AND_DISK",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end embedding near-duplicate removal — the vector-space
@@ -896,5 +893,5 @@ def embedding_dedup(
         )
 
     return _keep_one_dedup(
-        emb, id_col, vec_col, _pairs, storage, max_iter, checkpoint_dir
+        emb, id_col, vec_col, _pairs, storage, checkpoint_dir
     )

@@ -1,5 +1,5 @@
 """Persisted positional inverted-index artifact: build once, serve
-phrase / boolean / term queries many times off a term-bucketed parquet
+phrase / BM25 / term queries many times off a term-bucketed parquet
 layout — the build-once/query-many discipline of the FST artifact
 (`operators/index.py`, mirroring the reference's mmap'd index file,
 fst_cmd.cpp:174-177) applied to the token-search surface.
@@ -73,7 +73,7 @@ def build_text_index(
     runs with ZERO corpus-side scans at query time.  ``lowercase=True``
     builds over lowercased tokens — required for an index serving
     ``indexed_bm25`` with ``ranking.bm25_scores`` semantics; phrase /
-    boolean queries against such an index are case-insensitive."""
+    term queries against such an index are case-insensitive."""
     path = _check_path(path)
     stats = _write_postings(
         docs, id_col, text_col, path, n_buckets, lowercase, mode="error"
@@ -199,31 +199,6 @@ def indexed_phrase_search(
     return phrase_match_postings(indexed_postings(spark, idx, phrase), phrase)
 
 
-def indexed_boolean_search(
-    spark: SparkSession,
-    idx: TextIndex,
-    must: list[str],
-    must_not: list[str] | None = None,
-) -> DataFrame:
-    """AND / AND-NOT retrieval off the artifact; identical semantics to
-    ``search.boolean_search``."""
-    from .search import boolean_match_hits
-
-    if not must:
-        raise ValueError("must terms required")
-    if idx.lowercase:
-        must = [t.lower() for t in must]
-        must_not = [t.lower() for t in must_not or []]
-    must_set = sorted(set(must))
-    not_set = sorted(set(must_not or []))
-    hits = (
-        indexed_postings(spark, idx, must_set + not_set)
-        .select("doc_id", "term")
-        .distinct()
-    )
-    return boolean_match_hits(hits, must_set, not_set)
-
-
 def indexed_bm25(
     spark: SparkSession,
     idx: TextIndex,
@@ -331,49 +306,6 @@ def append_text_index(
             f,
         )
     return new
-
-
-def compact_text_index(spark: SparkSession, idx: TextIndex) -> TextIndex:
-    """Rewrite the artifact so each ``bucket=`` directory holds ONE
-    term-sorted file again.
-
-    N appends leave N small files per bucket directory — the classic
-    small-files decay: at 100 TB with daily appends a year of growth
-    turns every query's k-bucket read into k x 365 file opens and
-    destroys row-group pruning (each tiny file spans the full term
-    range it touched).  Compaction is one job: read the postings,
-    re-sort within each bucket, write a fresh artifact next to the old
-    one, then publish by directory swap (two renames — crash before the
-    first leaves the old artifact live and intact; between them there
-    is a moment with no directory at ``path``, the same single-writer
-    window the append path documents).  The ``_meta`` sidecar is
-    carried over unchanged (corpus stats don't change) and so are the
-    streaming ``_batch_*`` idempotency markers — they are the ledger of
-    WHAT is incorporated, which compaction does not alter, so a stream
-    resuming against the compacted artifact still no-ops re-delivered
-    batches.  Returns the same handle (stats unchanged)."""
-    path = idx.path
-    tmp = path + ".compact_tmp"
-    old = path + ".compact_old"
-    postings = spark.read.parquet(path).select(
-        "doc_id", "dl", "pos", "term", "bucket"
-    )
-    (
-        postings.repartition(idx.n_buckets, "bucket")
-        .sortWithinPartitions("bucket", "term")
-        .write.mode("error")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
-    import shutil
-
-    for name in os.listdir(path):
-        if name == "_meta" or name.startswith("_batch_"):
-            shutil.copy2(os.path.join(path, name), os.path.join(tmp, name))
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return idx
 
 
 def indexed_fuzzy_terms(

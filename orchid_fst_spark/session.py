@@ -1,4 +1,4 @@
-"""SparkSession factory + table loaders.
+"""SparkSession factory.
 
 Local-mode defaults are sized for the sandbox (single JVM); the configs
 that matter at cluster scale (AQE, skew join, adaptive coalescing, Arrow
@@ -10,9 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from pyspark.sql import SparkSession
 
 
 #: The engine's scale-relevant tuning — identical for local-mode tests
@@ -73,7 +71,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

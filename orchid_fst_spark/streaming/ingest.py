@@ -146,77 +146,6 @@ def incremental_er(
     )
 
 
-def sketch_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    value_col: str = "text",
-    p: int = 9,
-    depth: int = 4,
-    width: int = 1024,
-    checkpoint_dir: str | None = None,
-):
-    """Incremental corpus accounting: maintain a HyperLogLog register
-    store (distinct values seen so far) and a Count-Min cell store
-    (token frequencies so far) over a document stream; returns the
-    StreamingQuery.
-
-    Per micro-batch the BATCH sketch operators (operators/sketch.py)
-    run over just the new rows and their bounded outputs (≤ 2^p + d*w
-    rows) are written to deterministic ``batch_id=N`` directories —
-    idempotent under foreachBatch retries like the ER state writes
-    above.  The merged view is computed on read (``hll_from_state``:
-    max per register; ``cms_from_state``: sum per cell) — mergeability
-    is exactly why these sketches exist, so stream and batch share ONE
-    sketch definition and the equivalence is testable
-    (tests/test_streaming.py)."""
-    from ..functions.normalize import tokens
-    from ..operators.sketch import cms_sketch, hll_registers
-
-    hll_path = os.path.join(state_dir, "hll")
-    cms_path = os.path.join(state_dir, "cms")
-    ckpt = checkpoint_dir or os.path.join(state_dir, "_sketch_ckpt")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hll_registers(batch_df, value_col, p=p).write.mode("overwrite").parquet(
-            os.path.join(hll_path, f"batch_id={batch_id}")
-        )
-        terms = batch_df.select(
-            F.explode(tokens(F.lower(F.col(value_col)))).alias("term")
-        )
-        cms_sketch(terms, "term", depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(cms_path, f"batch_id={batch_id}"))
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def hll_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merged HLL register table from the accumulated stream state —
-    identical to the batch ``hll_registers`` over the union of all
-    batches (merge = max per register; pinned by test)."""
-    return (
-        spark.read.parquet(os.path.join(state_dir, "hll"))
-        .groupBy("register")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def cms_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Merged Count-Min cell table from the accumulated stream state —
-    identical to the batch ``cms_sketch`` over the union of all batches
-    (merge = sum per cell; pinned by test)."""
-    return (
-        spark.read.parquet(os.path.join(state_dir, "cms"))
-        .groupBy("depth", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
 def clusters_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """(url, norm_key, cluster_id) from the accumulated stream state —
     same connected-components semantics as the batch resolve()."""

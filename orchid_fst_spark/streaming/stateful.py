@@ -161,182 +161,3 @@ def streaming_fuzzy_match(
         outputMode="append",
         timeoutConf=timeout_conf,
     )
-
-
-# -- streaming MinHash near-dup ----------------------------------------------
-
-NEAR_SCHEMA = StructType(
-    [
-        StructField("id_a", LongType()),
-        StructField("id_b", LongType()),
-        StructField("shared", LongType()),  # matching signature components
-        StructField("capped", BooleanType()),
-        StructField("bucket", StringType()),  # which bucket hit the cap
-    ]
-)
-
-NEAR_STATE_SCHEMA = StructType(
-    [
-        StructField("ids", ArrayType(LongType())),
-        StructField("sigs", ArrayType(StringType())),
-    ]
-)
-
-
-def minhash_row_signature(text_col, n: int = 3, num_hashes: int = 8) -> list:
-    """Per-row MinHash signature columns ``mh0..mh{n-1}`` as pure
-    Catalyst expressions over the row's OWN shingle array — no
-    explode/groupBy, so the stage is streaming-stateless and can sit
-    in front of a keyed stateful operator (a streaming aggregation
-    here would hit the multiple-stateful-operator restrictions).
-
-    Componentwise EQUAL to ``operators.dedup.minhash_signatures``: min
-    over a multiset equals min over its distinct set, and array_min on
-    md5 hex strings is the same lexicographic min the batch aggregate
-    takes.  Docs with fewer than ``n`` tokens produce NULL components
-    (no shingles — the batch groupBy drops them the same way); filter
-    ``mh0 IS NOT NULL`` before banding.
-
-    Cost note: Catalyst re-inlines the shingle-array expression once
-    per hash column — a bounded ``num_hashes``x recompute of the
-    tokenize (constant-factor; NOT the per-element O(n²) HOF re-inline
-    trap, because the array is only ever the transform's input
-    collection, never referenced inside another lambda's body)."""
-    from ..functions.normalize import tokens
-
-    toks = tokens(F.col(text_col) if isinstance(text_col, str) else text_col)
-    sh = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return [
-        F.array_min(
-            F.transform(sh, lambda x: F.md5(F.concat(F.lit(f"{s}|"), x)))
-        ).alias(f"mh{s}")
-        for s in range(num_hashes)
-    ]
-
-
-def streaming_minhash_candidates(
-    docs: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    state_cap: int = 5000,
-    state_ttl_minutes: int | None = None,
-) -> DataFrame:
-    """Streaming near-duplicate candidate pairs: every arriving doc is
-    banded into the SAME MinHash band buckets as the batch
-    ``minhash_lsh_pairs`` and compared against all docs previously seen
-    in each bucket, held as engine-managed keyed state.
-
-    Returns a streaming frame of (id_a, id_b, shared, capped, bucket)
-    rows — id_a < id_b, ``shared`` = number of equal signature
-    components out of ``num_hashes`` (a deterministic Jaccard estimate;
-    exact-verify survivors downstream in batch, exactly like the batch
-    operator verifies its band join).  A pair sharing several bands is
-    emitted by several groups — consumers ``distinct()`` on (id_a,
-    id_b).  ``state_cap`` is the streaming twin of the batch
-    ``bucket_cap``: a bucket already holding ``state_cap`` docs neither
-    matches nor accumulates further arrivals, reported via ``capped``
-    marker rows carrying the bucket id (never silent).
-    ``state_ttl_minutes`` drops idle buckets (crawl-recency semantics),
-    like streaming_fuzzy_match.
-
-    The batch twin for equivalence testing is the same-bucket self-join
-    over ``operators.dedup._minhash_stacked``."""
-    assert num_hashes % bands == 0, "num_hashes must divide into bands"
-    r = num_hashes // bands
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        *minhash_row_signature(text_col, n, num_hashes),
-    ).filter(F.col("mh0").isNotNull())
-    # bucket strings identical to _minhash_stacked: "b|mh#mh#..."
-    buckets = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            F.concat_ws("#", *[F.col(f"mh{b * r + i}") for i in range(r)]),
-        )
-        for b in range(bands)
-    ]
-    stacked = sig.select(
-        "id",
-        F.concat_ws("#", *[F.col(f"mh{s}") for s in range(num_hashes)]).alias(
-            "sig"
-        ),
-        F.explode(F.array(*buckets)).alias("bucket"),
-    )
-
-    def fn(
-        group_key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, sigs_seen = list(state.get[0]), list(state.get[1])
-        else:
-            ids, sigs_seen = [], []
-        known = set(ids)
-        ia, ib, sh_n, capped = [], [], [], []
-        hit_cap = False
-        for pdf in pdfs:
-            for i, s in zip(pdf["id"].tolist(), pdf["sig"].tolist()):
-                if i in known:
-                    continue  # re-delivery of a doc this bucket knows
-                if len(ids) >= state_cap:
-                    hit_cap = True
-                    continue
-                comps = s.split("#")
-                for j, t in zip(ids, sigs_seen):
-                    shared = sum(
-                        a == b for a, b in zip(comps, t.split("#"))
-                    )
-                    ia.append(min(i, j))
-                    ib.append(max(i, j))
-                    sh_n.append(shared)
-                    capped.append(False)
-                ids.append(i)
-                sigs_seen.append(s)
-                known.add(i)
-        if hit_cap:
-            ia.append(None)
-            ib.append(None)
-            sh_n.append(None)
-            capped.append(True)
-        state.update((ids, sigs_seen))
-        if state_ttl_minutes:
-            state.setTimeoutDuration(state_ttl_minutes * 60 * 1000)
-        if ia:
-            bucket = str(group_key[0])
-            yield pd.DataFrame(
-                {
-                    "id_a": ia,
-                    "id_b": ib,
-                    "shared": sh_n,
-                    "capped": capped,
-                    "bucket": [bucket if c else None for c in capped],
-                }
-            )
-
-    return stacked.groupBy("bucket").applyInPandasWithState(
-        fn,
-        outputStructType=NEAR_SCHEMA,
-        stateStructType=NEAR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )

@@ -1,4 +1,5 @@
-"""Session-lifetime hygiene for operator-internal persists.
+"""Session-lifetime hygiene for operator-internal persists, and the
+one lineage cut the iterative operators share (:func:`cut`).
 
 The dedup/similarity operators persist intermediates they scan more
 than once (band rows, signature frames, the mapped id frame of the
@@ -35,6 +36,16 @@ def maybe_persist(df: DataFrame, storage: str | None) -> DataFrame:
     df = df.persist(getattr(StorageLevel, storage))
     _PERSISTED.append(df)
     return df
+
+
+def cut(df: DataFrame, path: str | None = None) -> DataFrame:
+    """Truncate ``df``'s lineage: a parquet round trip under ``path``
+    (the cluster-reliable form; a later run can read it back), else
+    ``localCheckpoint(eager=True)``."""
+    if path is None:
+        return df.localCheckpoint(eager=True)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def release_persisted() -> int:

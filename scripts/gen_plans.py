@@ -910,7 +910,7 @@ def main() -> None:
                   "ArrowEvalPython", "MapInPandas"),
     )
 
-    from orchid_fst_spark.er.scoring import group_linkage, score_pairs
+    from orchid_fst_spark.er.scoring import group_linkage
 
     docs_keys = docs.select(
         F.substring("text", 1, 16).alias("key_a"),

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""spark-submit entry point for the record-linkage pipeline.
+r"""spark-submit entry point for the record-linkage pipeline.
 
 Deploy (north_rule: "run via spark-submit --py-files on a multi-executor
 cluster at two cluster sizes"):

@@ -6,11 +6,9 @@ granularity and plan checks."""
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from orchid_fst_spark.operators.bpe import (
     EOW,
-    bpe_encode,
     bpe_pair_counts,
     bpe_train,
     reference_bpe,
@@ -76,36 +74,6 @@ def test_pair_counts_top_n_total_order(spark, corpus):
     assert sorted(
         (r.sym_a, r.sym_b, r.n) for r in top
     ) == sorted((r.sym_a, r.sym_b, r.n) for r in ordered[:5])
-
-
-def test_encode_matches_reference_replay(spark, corpus):
-    docs, texts = corpus
-    wf = dict(_word_freqs(texts))
-    merges = bpe_train(docs, num_merges=10)
-    table = [(r.sym_a, r.sym_b) for r in merges.orderBy("rank").collect()]
-
-    def py_encode(w):
-        syms = list(w) + [EOW]
-        for a, b in table:
-            out = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            syms = out
-        return syms
-
-    enc = bpe_encode(docs, merges, checkpoint_every=4)
-    got = {}
-    for r in enc.collect():
-        got.setdefault(r.id, {})[r.pos] = r.token
-    for did, t in enumerate(texts):
-        exp = {}
-        for wp, w in enumerate(x for x in t.split() if x):
-            for si, tok in enumerate(py_encode(w)):
-                exp[wp * (1 << 20) + si] = tok
-        assert got[did] == exp, did
 
 
 def test_no_eow_and_min_freq_stop(spark):

@@ -11,7 +11,6 @@ from datetime import datetime, timedelta
 from hashlib import md5
 
 import pytest
-import pyspark.sql.functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -308,148 +307,6 @@ def test_interval_overlap_join_bruteforce_exactly_once(spark):
         if lk == rk and e1 > s1 and e2 > s2 and (e1 == s2 or e2 == s1)
     ]
     assert all(p not in got for p in touch)
-
-
-def test_write_packed_shards_layout_and_pruning(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from orchid_fst_spark.operators.chunking import write_packed_shards
-
-    # doc 7 is LONG (100 tokens): it must straddle several 16-token
-    # shards and contribute exactly each shard's slice to each
-    texts = {
-        i: " ".join(
-            f"w{i}_{j}" for j in range(100 if i == 7 else 3 + i % 5)
-        )
-        for i in range(40)
-    }
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id long, text string"
-    )
-    out = str(tmp_path / "shards")
-    back = write_packed_shards(
-        docs, out, seq_tokens=8, seqs_per_shard=2, mode="overwrite"
-    )
-    assert any(d.startswith("shard=") for d in os.listdir(out))
-    rows = back.collect()
-    assert dict(back.dtypes)["shard"] == "bigint"
-
-    # full-stream reconstruction: concatenating every shard's slices in
-    # (shard, gstart) order reproduces the id-ordered token stream
-    got_stream = [
-        t
-        for r in sorted(rows, key=lambda r: (r.shard, r.gstart, r.id))
-        for t in (r.text.split() if r.text else [])
-    ]
-    want_stream = [
-        t for i in sorted(texts) for t in texts[i].split()
-    ]
-    assert got_stream == want_stream
-
-    # every shard's token budget is exactly 16 except the last
-    per_shard = {}
-    for r in rows:
-        per_shard[r.shard] = per_shard.get(r.shard, 0) + r.slice_tokens
-    last = max(per_shard)
-    assert set(per_shard) == set(range(last + 1))  # contiguous shards
-    assert all(per_shard[s] == 16 for s in per_shard if s != last)
-    assert 0 < per_shard[last] <= 16
-
-    # the long doc straddles: present in >= 6 shards, slices sum to 100
-    d7 = [r for r in rows if r.id == 7]
-    assert len(d7) >= 6
-    assert sum(r.slice_tokens for r in d7) == 100
-    assert all(r.n_tokens == 100 for r in d7)
-
-    # in-file order: every parquet file is sorted by (gstart, id)
-    import pyarrow.parquet as pq
-
-    for d in os.listdir(out):
-        if not d.startswith("shard="):
-            continue
-        for f in os.listdir(os.path.join(out, d)):
-            if not f.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(out, d, f)).to_pylist()
-            keys = [(x["gstart"], x["id"]) for x in t]
-            assert keys == sorted(keys)
-
-    # shard-range pruning reaches the scan as a partition filter
-    pruned = back.filter(F.col("shard") == 0)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard" in plan
-    assert pruned.count() >= 1
-
-
-def test_read_packed_shards_roundtrip_and_pruning(spark, tmp_path):
-    """write -> read_packed_shards -> sequences_from_shards round-trip:
-    the reconstructed sequences reproduce pack_sequences' layout and the
-    corpus token stream exactly; a shard-range read prunes to just those
-    partition directories (PartitionFilters + inputFiles pinned)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from orchid_fst_spark.operators.chunking import (
-        pack_sequences,
-        read_packed_shards,
-        sequences_from_shards,
-        write_packed_shards,
-    )
-
-    texts = {
-        i: " ".join(f"w{i}_{j}" for j in range(100 if i == 7 else 3 + i % 5))
-        for i in range(40)
-    }
-    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    out = str(tmp_path / "shards_rt")
-    write_packed_shards(docs, out, seq_tokens=8, seqs_per_shard=2, mode="overwrite")
-
-    # full read -> sequence reconstruction == the pack_sequences layout
-    full = read_packed_shards(spark, out)
-    seqs = {
-        r.seq_id: (r.n_tokens, r.seq_text)
-        for r in sequences_from_shards(full, seq_tokens=8).collect()
-    }
-    total = sum(len(t.split()) for t in texts.values())
-    assert set(seqs) == set(range((total + 7) // 8))
-    last = max(seqs)
-    assert all(seqs[s][0] == 8 for s in seqs if s != last)
-    got_stream = [t for s in sorted(seqs) for t in seqs[s][1].split()]
-    want_stream = [t for i in sorted(texts) for t in texts[i].split()]
-    assert got_stream == want_stream
-
-    # every document starts exactly where the manifest says
-    man = {
-        r.id: (r.seq_id, r.seq_offset)
-        for r in pack_sequences(docs, seq_tokens=8).collect()
-    }
-    for i, (sid, off) in man.items():
-        if texts[i]:
-            first_tok = texts[i].split()[0]
-            assert seqs[sid][1].split()[off] == first_tok
-
-    # pruned read: only the asked shard directories are scanned, and the
-    # result is exactly that contiguous token range
-    pruned = read_packed_shards(spark, out, shard_lo=1, shard_hi=3)
-    files = [
-        r.f
-        for r in pruned.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-    assert files and all(
-        ("/shard=1/" in f or "/shard=2/" in f) for f in files
-    )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "shard#" in plan.split("PartitionFilters")[1][:200]
-    stream_13 = [
-        t
-        for r in sorted(pruned.collect(), key=lambda r: (r.gstart, r.id))
-        for t in (r.text.split() if r.text else [])
-    ]
-    assert stream_13 == want_stream[16:48]  # shard_tokens = 16
 
 
 def test_interval_join_exact_buckets_beyond_double_precision(spark):

@@ -15,6 +15,10 @@ from orchid_fst_spark.sources.fixtures import gen_pages
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
+#: Spark jobs one ``resolve`` call may run on ``pages_and_truth``:
+#: measured 53 (once 54 of 6 runs) at local[4], 8 shuffle partitions
+RESOLVE_JOB_BUDGET = 54
+
 
 @pytest.fixture(scope="module")
 def pages_and_truth(spark):
@@ -46,6 +50,22 @@ def test_connected_components_long_chain(spark):
     comps = connected_components(edges).collect()
     assert {r.component for r in comps} == {"n000"}
     assert len(comps) == n + 1
+
+
+def test_connected_components_unconverged_raises(spark, monkeypatch):
+    # a shuffled 64-node path needs several star rounds; one round
+    # leaves the edge set changing, and the labels read off it would
+    # split the single component, so the call must fail instead
+    import random
+
+    from orchid_fst_spark.er import clustering
+
+    ids = [f"n{i:03d}" for i in range(64)]
+    random.Random(5).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+    monkeypatch.setattr(clustering, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="after 1 rounds"):
+        connected_components(edges)
 
 
 def test_star_clusters_hand_graph(spark):
@@ -274,6 +294,23 @@ def test_resolve_checkpoint_resume(spark, pages_and_truth, tmp_path):
     rows = {r.stage: r.resumed for r in metrics.collect()}
     assert rows["candidate_pairs"] is True
     assert rows["match_edges"] is True
+
+
+def test_resolve_job_budget(spark, pages_and_truth):
+    # without a checkpoint_dir, resolve runs no job beyond its stage
+    # cuts and the component rounds: no per-stage row counts
+    pages, _ = pages_and_truth
+    pages.count()  # materialize the cached input outside the group
+    sc = spark.sparkContext
+    sc.setJobGroup("test_resolve_job_budget", "resolve")
+    try:
+        out = resolve(pages, k=2, damerau=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("test_resolve_job_budget"))
+    assert n_jobs <= RESOLVE_JOB_BUDGET, n_jobs
+    assert out.count() == pages.count()
 
 
 def test_blocking_metrics(spark, pages_and_truth):

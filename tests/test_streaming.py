@@ -309,101 +309,6 @@ def _near_docs():
     return docs
 
 
-def test_minhash_row_signature_matches_batch_aggregate(spark):
-    """The per-row Catalyst signature (streaming path) must be
-    componentwise identical to the batch explode+groupBy aggregate —
-    otherwise the streaming band buckets drift from the batch ones."""
-    from orchid_fst_spark.operators.dedup import minhash_signatures, shingle_df
-    from orchid_fst_spark.streaming.stateful import minhash_row_signature
-
-    df = spark.createDataFrame(_near_docs(), "doc_id long, text string")
-    row_sig = {
-        r.id: tuple(r[f"mh{s}"] for s in range(8))
-        for r in df.select(
-            F.col("doc_id").alias("id"), *minhash_row_signature("text", 3, 8)
-        ).collect()
-        if r.mh0 is not None
-    }
-    batch_sig = {
-        r.id: tuple(r[f"mh{s}"] for s in range(8))
-        for r in minhash_signatures(shingle_df(df, "doc_id", "text", 3), 8).collect()
-    }
-    assert row_sig == batch_sig
-    assert len(batch_sig) == 24  # the 2-token doc has no signature
-
-
-def test_streaming_minhash_candidates_stateful(spark, tmp_path):
-    """Streaming band-bucket candidates over two micro-batches must
-    equal the batch same-bucket self-join (operators.dedup
-    _minhash_stacked), including pairs whose members arrive in
-    different batches, and `shared` must count the equal signature
-    components."""
-    import os
-
-    from orchid_fst_spark.operators.dedup import (
-        _minhash_stacked,
-        minhash_signatures,
-        shingle_df,
-    )
-    from orchid_fst_spark.streaming.stateful import streaming_minhash_candidates
-
-    docs = _near_docs()
-    half = len(docs) // 2
-    drops = [docs[:half], docs[half:]]
-    src, out, ck = (str(tmp_path / p) for p in ("docs", "cands", "ck"))
-    for i, chunk in enumerate(drops):
-        spark.createDataFrame(chunk, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(os.path.join(src, f"drop{i}"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
-    q = (
-        streaming_minhash_candidates(stream, "doc_id", "text")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination(240)
-
-    got_df = spark.read.parquet(out)
-    assert got_df.filter("capped").count() == 0
-    got = {(r.id_a, r.id_b) for r in got_df.filter("NOT capped").collect()}
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    stacked = _minhash_stacked(shingle_df(df, "doc_id", "text", 3), 8, 4)
-    a = stacked.select(F.col("id").alias("id_a"), "bucket")
-    b = stacked.select(F.col("id").alias("id_b"), "bucket")
-    exp = {
-        (r.id_a, r.id_b)
-        for r in a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .collect()
-    }
-    assert got == exp and exp  # non-trivial fixture
-
-    # shared = componentwise signature agreement
-    sigs = {
-        r.id: [r[f"mh{s}"] for s in range(8)]
-        for r in minhash_signatures(shingle_df(df, "doc_id", "text", 3), 8).collect()
-    }
-    for r in got_df.filter("NOT capped").collect():
-        expect = sum(x == y for x, y in zip(sigs[r.id_a], sigs[r.id_b]))
-        assert r.shared == expect, (r.id_a, r.id_b)
-
-    # state really crossed batches
-    d1 = {i for i, _ in drops[0]}
-    assert any((x in d1) != (y in d1) for x, y in exp), "fixture too easy"
-
-
 def test_session_window_gap_boundary_semantics(spark):
     """Pin the session_window boundary behavior the native sessionizer
     relies on: events exactly `gap` seconds apart MERGE (split happens
@@ -436,54 +341,6 @@ def test_session_window_gap_boundary_semantics(spark):
         for r in sessionize(ev, 30).collect()
     )
     assert batch == native
-
-
-def test_streaming_sketches_equal_batch(spark, tmp_path):
-    """Sketch state accumulated over two micro-batches, merged on read,
-    must equal the batch sketches over the whole corpus — the
-    mergeability contract that makes incremental corpus accounting
-    exact (not approximate-on-top-of-approximate)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from orchid_fst_spark.functions.normalize import tokens
-    from orchid_fst_spark.operators.sketch import cms_sketch, hll_registers
-    from orchid_fst_spark.streaming.ingest import (
-        cms_from_state,
-        hll_from_state,
-        sketch_stream,
-    )
-
-    rows = [(i, f"doc number {i % 37} talks about topic {i % 11}") for i in range(120)]
-    half = len(rows) // 2
-    src, state = str(tmp_path / "docs"), str(tmp_path / "state")
-    for n, chunk in enumerate((rows[:half], rows[half:])):
-        spark.createDataFrame(chunk, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(os.path.join(src, f"drop{n}"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
-    q = sketch_stream(stream, state, p=8, depth=3, width=128)
-    q.awaitTermination(240)
-
-    whole = spark.createDataFrame(rows, "doc_id long, text string")
-    batch_hll = sorted(
-        map(tuple, hll_registers(whole, "text", p=8).collect())
-    )
-    stream_hll = sorted(map(tuple, hll_from_state(spark, state).collect()))
-    assert stream_hll == batch_hll
-
-    terms = whole.select(F.explode(tokens(F.lower(F.col("text")))).alias("term"))
-    batch_cms = sorted(
-        map(tuple, cms_sketch(terms, "term", depth=3, width=128).collect())
-    )
-    stream_cms = sorted(map(tuple, cms_from_state(spark, state).collect()))
-    assert stream_cms == batch_cms
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):

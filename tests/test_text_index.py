@@ -2,16 +2,14 @@
 batch search operators, and the plan proves bucket partition pruning +
 term pushdown (the artifact's entire reason to exist)."""
 
-import os
 import shutil
 import tempfile
 
 import pytest
 
-from orchid_fst_spark.operators.search import boolean_search, phrase_search
+from orchid_fst_spark.operators.search import phrase_search
 from orchid_fst_spark.operators.text_index import (
     build_text_index,
-    indexed_boolean_search,
     indexed_phrase_search,
     indexed_postings,
     load_text_index,
@@ -46,26 +44,6 @@ def test_indexed_phrase_equals_batch(spark, docs, idx):
         }
         assert got == want, phrase
         assert got  # non-trivial on the test corpus
-
-
-def test_indexed_boolean_equals_batch(spark, docs, idx):
-    got = {
-        r.doc_id
-        for r in indexed_boolean_search(
-            spark, idx, must=["spark", "join"], must_not=["customer"]
-        ).collect()
-    }
-    want = {
-        r.doc_id
-        for r in boolean_search(
-            docs,
-            "doc_id",
-            "text",
-            must=["spark", "join"],
-            must_not=["customer"],
-        ).collect()
-    }
-    assert got == want and got
 
 
 def test_partition_pruning_and_pushdown(spark, idx):
@@ -138,7 +116,7 @@ def test_indexed_bm25_equals_batch(spark, docs):
 
 def test_append_equals_full_build(spark, docs):
     """Incremental maintenance: build on half the corpus, append the
-    other half — phrase, boolean, and BM25 answers must equal a fresh
+    other half — phrase and BM25 answers must equal a fresh
     full build (postings, buckets, and sidecar stats all advance)."""
     import shutil as sh
     import tempfile
@@ -147,7 +125,6 @@ def test_append_equals_full_build(spark, docs):
         append_text_index,
         build_text_index,
         indexed_bm25,
-        indexed_boolean_search,
         indexed_phrase_search,
         load_text_index,
     )
@@ -166,62 +143,6 @@ def test_append_equals_full_build(spark, docs):
         # the handle returned by append matches a fresh load
         assert load_text_index(spark, d_inc) == idx
 
-        gp = {r.doc_id: r.n_matches for r in indexed_phrase_search(spark, idx, ["fast", "merge"]).collect()}
-        wp = {r.doc_id: r.n_matches for r in indexed_phrase_search(spark, full, ["fast", "merge"]).collect()}
-        assert gp == wp and gp
-        gb = {r.doc_id for r in indexed_boolean_search(spark, idx, ["spark", "join"]).collect()}
-        wb = {r.doc_id for r in indexed_boolean_search(spark, full, ["spark", "join"]).collect()}
-        assert gb == wb and gb
-        gs = {r.doc_id: r.score for r in indexed_bm25(spark, idx, ["spark", "join"]).collect()}
-        ws = {r.doc_id: r.score for r in indexed_bm25(spark, full, ["spark", "join"]).collect()}
-        assert gs == ws and gs
-    finally:
-        sh.rmtree(d_inc, ignore_errors=True)
-        sh.rmtree(d_full, ignore_errors=True)
-
-
-def test_compact_after_appends_equals_fresh_build(spark, docs):
-    """append x3 then compact == fresh build (same answers, same
-    sidecar), parquet file count drops to one per touched bucket, and
-    streaming idempotency markers survive the swap."""
-    import glob
-    import shutil as sh
-    import tempfile
-
-    from orchid_fst_spark.operators.text_index import (
-        append_text_index,
-        build_text_index,
-        compact_text_index,
-        indexed_bm25,
-        indexed_phrase_search,
-        load_text_index,
-    )
-
-    parts = [docs.filter(f"doc_id % 4 = {i}") for i in range(4)]
-    d_inc = tempfile.mkdtemp(prefix="txtidx_cmp_")
-    d_full = tempfile.mkdtemp(prefix="txtidx_cmpfull_")
-    sh.rmtree(d_inc), sh.rmtree(d_full)
-    try:
-        build_text_index(parts[0], "doc_id", "text", d_inc, n_buckets=8, lowercase=True)
-        idx = load_text_index(spark, d_inc)
-        for p in parts[1:]:
-            idx = append_text_index(p, "doc_id", "text", idx)
-        # a fake streaming marker must ride through the swap
-        with open(os.path.join(d_inc, "_batch_7"), "w") as f:
-            f.write("{}")
-        n_before = len(glob.glob(os.path.join(d_inc, "bucket=*", "*.parquet")))
-        idx = compact_text_index(spark, idx)
-        n_after = len(glob.glob(os.path.join(d_inc, "bucket=*", "*.parquet")))
-        assert n_after < n_before
-        buckets = glob.glob(os.path.join(d_inc, "bucket=*"))
-        assert all(
-            len(glob.glob(os.path.join(b, "*.parquet"))) == 1 for b in buckets
-        )
-        assert os.path.exists(os.path.join(d_inc, "_batch_7"))
-        assert load_text_index(spark, d_inc) == idx  # sidecar carried over
-
-        build_text_index(docs, "doc_id", "text", d_full, n_buckets=8, lowercase=True)
-        full = load_text_index(spark, d_full)
         gp = {r.doc_id: r.n_matches for r in indexed_phrase_search(spark, idx, ["fast", "merge"]).collect()}
         wp = {r.doc_id: r.n_matches for r in indexed_phrase_search(spark, full, ["fast", "merge"]).collect()}
         assert gp == wp and gp
