@@ -483,15 +483,15 @@ def bench_index(spark, n_words: int = 300000, n_queries: int = 20) -> dict:
     against a persisted sharded-DAG index (operators/index.py) vs the
     no-index baseline, ``fuzzy_lookup(impl="dfa")`` — a live scan that
     sorts every partition batch and runs the DFA over it on every call.
-    The index pays one build, then each query is a pruned scan of
-    pickled shards decoded through the executor-side LRU.
+    The index pays one build, then each query walks the surviving
+    shards through the decoded-shard LRU — on the driver, with no Spark
+    job, while they fit the LRU budget.
 
     Local mode puts a fixed scheduler floor (~0.2-0.3 s) under EVERY
-    tiny job, which swamps the per-query work at small dictionary sizes;
-    the floor is measured with an equivalent-task-count empty job and a
-    net-of-floor speedup is reported alongside the raw one (on a real
-    deployment the floor is the driver round-trip, identical for both
-    paths)."""
+    tiny job, which swamps the per-query work of the scan path at small
+    dictionary sizes; the floor is measured with an equivalent-task-count
+    empty job and a net-of-floor speedup is reported alongside the raw
+    one."""
     import shutil
     import tempfile
 
@@ -530,8 +530,7 @@ def bench_index(spark, n_words: int = 300000, n_queries: int = 20) -> dict:
     t0 = time.time()
     build_index(d, path, n_shards=n_shards)
     t_build = time.time() - t0
-    idx = load_index(spark, path).cache()
-    idx.count()
+    idx = load_index(spark, path)
 
     # scheduler floor: an n_shards-task no-op job
     empty = spark.range(n_shards).repartition(n_shards).cache()
@@ -569,7 +568,6 @@ def bench_index(spark, n_words: int = 300000, n_queries: int = 20) -> dict:
     index_fuzzy_lookup_many(idx, qs, 2).count()
     t_batched = time.time() - t0
     d.unpersist()
-    idx.unpersist()
     empty.unpersist()
     shutil.rmtree(os.path.dirname(path), ignore_errors=True)
     per_s = t_scan / len(qs)

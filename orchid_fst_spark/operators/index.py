@@ -12,26 +12,30 @@ repeated-point-query analog:
   n_shards, build one suffix-minimized flat DAG per shard (the same
   FreezeNode minimization as the reference, ``automata.trie.minimize``),
   pickle its arrays, and write one parquet row per shard:
-  (shard, lo_key, hi_key, n_keys, blob_md5, blob).
-  The artifact is immutable; lo_key/hi_key land in parquet column
-  min/max stats, so point/prefix/range/pinned-prefix queries prune
-  shards at the scan — the FST bound-seek (fst.cpp:428-468) re-expressed
-  as partition pruning.
+  (shard, lo_key, hi_key, n_keys, blob_md5, blob), partitioned by shard.
+  The artifact is immutable.
+
+- ``load_index``: reads the shard metadata (no blobs) once with pyarrow
+  on the driver and returns it as a local frame.  Queries prune shards
+  on lo_key/hi_key with an ordinary filter, which Catalyst folds into
+  the local relation — the FST bound-seek (fst.cpp:428-468) as a driver
+  filter, with no job.
 
 - query operators (``index_match_lookup`` / ``index_prefix_lookup`` /
   ``index_range_lookup`` / ``index_fuzzy_lookup`` /
-  ``index_fuzzy_lookup_many``): a pushed-down shard filter + one
-  mapInPandas over the surviving shard rows (``_query``).  Each task
-  unpickles its shard's DAG through a process-global byte-budgeted LRU
-  (util.caches.LRUCache — the reference's C1 cache doing its original
-  job: bounding executor-side index residency), so with Spark's default
-  python-worker reuse, repeated queries against the same artifact skip
-  the dictionary scan, the sort AND the DAG build; only the
-  ``automata.trie`` walk (``dag_enum`` / ``dag_dfa``) runs.
+  ``index_fuzzy_lookup_many``): one shard loop (``_query``) runs the
+  ``automata.trie`` walk (``dag_enum`` / ``dag_dfa``) over each
+  surviving shard's DAG, decoded through a process-global byte-budgeted
+  LRU (util.caches.LRUCache — the reference's C1 cache bounding index
+  residency).  A blob is read from the artifact only on a miss, so
+  repeated queries skip the dictionary scan, the sort and the DAG build.
 
-At cluster scale the blob column ships shard-local (one task reads one
-row-group); nothing is collected to the driver and no shard is ever
-deserialized by a task that the key-range filter pruned.
+Where the walk runs: when the surviving shards' blob bytes fit the LRU
+budget, on the driver — the decoded shards stay resident there, and the
+result comes back as a local frame, so a lookup runs no Spark job.  A
+pruned shard set larger than the budget would thrash a driver cache, so
+it is walked by one mapInPandas instead: each executor task reads only
+the shards it owns, and no pruned shard is ever deserialized.
 """
 
 from __future__ import annotations
@@ -68,11 +72,20 @@ INDEX_SCHEMA = StructType(
     ]
 )
 
-# process-global decoded-shard cache (lives in each python worker; worker
-# reuse keeps it warm across queries).  Budget ~256 MB of *blob* bytes —
-# decoded DAGs are larger, but blob size is the stable, observable proxy.
+# process-global decoded-shard cache (on the driver, and in each python
+# worker, where worker reuse keeps it warm across queries).  Budget ~256 MB
+# of *blob* bytes — decoded DAGs are larger, but blob size is the stable,
+# observable proxy.  The budget is also the driver-walk threshold (_query).
 _TRIE_CACHE = LRUCache(256 * 1024 * 1024)
 
+
+_META_SCHEMA = StructType(
+    INDEX_SCHEMA.fields[:-1]
+    + [
+        StructField("blob_bytes", LongType()),
+        StructField("index_path", StringType()),
+    ]
+)
 
 _KEY_VALUE = StructType(
     [StructField("key", StringType()), StructField("value", LongType())]
@@ -114,19 +127,28 @@ def _decode_blob(blob: bytes, shard) -> tuple:
 
 def _shard_dag(shard: int, blob_md5: str, read_blob) -> tuple:
     """(root, FlatDag, has_value) for one shard via the decoded-DAG LRU;
-    ``read_blob()`` supplies the blob bytes only on a miss."""
+    ``read_blob()`` supplies the blob bytes only on a miss, and a blob
+    whose md5 is not the metadata's (the artifact was rebuilt in place
+    after ``load_index``) is refused rather than cached under the old
+    md5."""
     hit = _TRIE_CACHE.get(blob_md5)
     if hit is not None:
         return hit
     blob = read_blob()
+    if hashlib.md5(blob).hexdigest() != blob_md5:
+        raise RuntimeError(
+            f"index shard {shard}: the artifact changed since load_index "
+            "(blob md5 differs from the loaded metadata); call load_index "
+            "again"
+        )
     obj = _decode_blob(blob, shard)
     _TRIE_CACHE.put(blob_md5, obj, cost=len(blob))
     return obj
 
 
 def _read_shard_blob(path: str, shard: int) -> bytes:
-    """Cold-path shard read: queries ship only (shard, blob_md5) rows
-    through Arrow, and a worker whose LRU misses reads the shard's blob
+    """Cold-path shard read: queries carry only (shard, blob_md5) rows,
+    and a driver or worker whose LRU misses reads the shard's blob
     straight from the parquet artifact (the 'mmap the FST file, pay I/O
     once' read path, fst.cpp:221-284).  On a cluster the artifact sits
     on shared storage; every executor reads only the shards its tasks
@@ -140,7 +162,7 @@ def _read_shard_blob(path: str, shard: int) -> bytes:
         tbl = pq.read_table(f"{path}/shard={shard}", columns=["blob"])
     except (OSError, FileNotFoundError) as exc:  # pragma: no cover
         raise RuntimeError(
-            f"worker-side blob read failed for {path!r} (shard {shard}): "
+            f"shard blob read failed for {path!r} (shard {shard}): "
             "the artifact path must be absolute local/NFS storage every "
             "executor can open with pyarrow; Spark-only URI schemes are "
             "not supported on the warm read path"
@@ -152,8 +174,8 @@ def _normalize_artifact_path(path: str) -> str:
     """Absolute-ify local artifact paths: executors resolve relative
     paths against their own cwd, so a relative path that works in
     local[*] silently breaks on a cluster.  URI-scheme paths (hdfs://,
-    s3a://) pass through — the JVM scan handles them, and the
-    worker-side miss path raises a clear error if pyarrow cannot."""
+    s3a://) pass through to the JVM writer; ``load_index`` refuses
+    them."""
     if "://" in path:
         return path
     return os.path.abspath(path)
@@ -186,6 +208,14 @@ def build_index(
         for pdf in batches:
             if pdf.empty:
                 continue
+            # pandas would carry a nullable long column as float64 (NaN,
+            # and values above 2**53 rounded); the reference's values are
+            # non-null uint64s
+            if has_value and pdf["value"].isna().any():
+                raise ValueError(
+                    "build_index: the 'value' column holds nulls; map-mode "
+                    "values must be non-null longs"
+                )
             pid = int(pdf["_pid"].iloc[0])
             keys.extend(pdf["key"].tolist())
             if has_value:
@@ -207,49 +237,90 @@ def build_index(
         )
 
     # shard-partitioned layout: shard=N/ holds that shard's single blob
-    # row, so the worker-side miss path reads one footer, and the
-    # metadata scan (load_index) still prunes on lo_key/hi_key stats
+    # row, so the miss path reads one footer
     srt.mapInPandas(gen, schema=INDEX_SCHEMA).write.mode("overwrite").partitionBy(
         "shard"
     ).parquet(path)
 
 
 def load_index(spark: SparkSession, path: str) -> DataFrame:
-    """Shard *metadata* frame (no blob column): queries move only a few
-    bytes per shard through the JVM->Python Arrow channel; blobs are
-    read worker-side from the artifact on cache miss (the ~1 MB/query
-    re-ship of blob bytes was the dominant warm-query cost — 0.52 s ->
-    0.27 s per point query after this split)."""
-    path = _normalize_artifact_path(path)
-    return spark.read.parquet(path).drop("blob").withColumn(
-        "index_path", F.lit(path)
+    """Shard *metadata* frame (no blob column), read once with pyarrow
+    on the driver: (shard, lo_key, hi_key, n_keys, blob_md5, blob_bytes,
+    index_path), one row per shard in shard (= key) order, as a local
+    relation — filtering and collecting it runs no Spark job.
+    ``blob_bytes`` is the size of the shard's file; blobs are read from
+    the artifact on LRU miss.  The frame is a snapshot: after rebuilding
+    the index in place, call ``load_index`` again (a cold read through
+    an old frame raises)."""
+    import pyarrow.dataset as ds
+
+    if "://" in path:
+        raise ValueError(
+            f"load_index({path!r}): the artifact path must be absolute "
+            "local/NFS storage the driver and every executor can open with "
+            "pyarrow; Spark-only URI schemes are not supported"
+        )
+    path = os.path.abspath(path)
+    cols = ["shard", "lo_key", "hi_key", "n_keys", "blob_md5"]
+    meta = ds.dataset(path, format="parquet", partitioning="hive").to_table(
+        columns=cols + ["__filename"]
     )
+    pdf = meta.to_pandas().sort_values("shard", ignore_index=True)
+    pdf["blob_bytes"] = pdf.pop("__filename").map(os.path.getsize)
+    pdf["index_path"] = path
+    return spark.createDataFrame(pdf, _META_SCHEMA)
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema) -> DataFrame:
+    """``pdf`` as a local relation (collecting it runs no job).  An empty
+    pandas frame would bypass Arrow and plan as an RDD scan, so the
+    empty result is a one-row frame cut to zero rows."""
+    if pdf.empty:
+        pdf = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
+        return spark.createDataFrame(pdf, schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
 
 
 def _query(
-    index_df: DataFrame, shard_filter, walker, schema: StructType = _KEY_VALUE
+    index_df: DataFrame,
+    shard_filter,
+    walker,
+    schema: StructType = _KEY_VALUE,
+    order: tuple = (),
 ) -> DataFrame:
-    """Pushed-down shard pruning + one mapInPandas running ``walker``
-    ((root, FlatDag) -> rows matching ``schema``) per surviving shard."""
-    pruned = index_df.filter(shard_filter) if shard_filter is not None else index_df
+    """Shard pruning + ``walker`` ((root, FlatDag) -> rows matching
+    ``schema``) over every surviving shard, sorted by the ``order``
+    columns.  The pruned metadata rows are collected (no job on
+    ``load_index``'s local relation); if their blob bytes fit the LRU,
+    the walk runs here and returns a local frame, else one mapInPandas
+    runs it on the executors."""
+    pruned = index_df if shard_filter is None else index_df.filter(shard_filter)
+    cols = ["shard", "blob_md5", "index_path"]
     names = schema.fieldNames()
+
+    def walk(shards) -> Iterator[list]:
+        for shard, md5, path in shards:
+            shard = int(shard)
+            root, flat, _hv = _shard_dag(
+                shard, md5, lambda: _read_shard_blob(path, shard)
+            )
+            yield walker(root, flat)
+
+    rows = pruned.select(*cols, "blob_bytes").collect()
+    if sum(r.blob_bytes for r in rows) <= _TRIE_CACHE.budget:
+        hits = [row for part in walk(r[:3] for r in rows) for row in part]
+        pdf = pd.DataFrame(hits, columns=names)
+        if order:
+            pdf = pdf.sort_values(list(order), kind="stable", ignore_index=True)
+        return _local_frame(index_df.sparkSession, pdf, schema)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for shard, md5, path in zip(
-                pdf["shard"].tolist(),
-                pdf["blob_md5"].tolist(),
-                pdf["index_path"].tolist(),
-            ):
-                shard = int(shard)
-                root, flat, _hv = _shard_dag(
-                    shard, md5, lambda: _read_shard_blob(path, shard)
-                )
-                yield pd.DataFrame(walker(root, flat), columns=names)
+            for part in walk(zip(*(pdf[c].tolist() for c in cols))):
+                yield pd.DataFrame(part, columns=names)
 
-    return pruned.select("shard", "blob_md5", "index_path").mapInPandas(
-        gen, schema=schema
-    )
+    out = pruned.select(*cols).mapInPandas(gen, schema=schema)
+    return out.orderBy(*order) if order else out
 
 
 def index_match_lookup(index_df: DataFrame, query: str) -> DataFrame:
@@ -262,9 +333,8 @@ def index_match_lookup(index_df: DataFrame, query: str) -> DataFrame:
 def _prefix_shard_filter(prefix: str):
     """Shards possibly holding keys with ``prefix``: the shard must
     start at-or-before the prefix block ends (lo_key <= prefix, or
-    lo_key itself inside the block — an exact ``startswith``, which
-    Catalyst pushes as a StringStartsWith scan filter) and end at-or-
-    after the block starts.  No synthetic ``prefix + U+10FFFF`` upper
+    lo_key itself inside the block — an exact ``startswith``) and end
+    at-or-after the block starts.  No synthetic ``prefix + U+10FFFF`` upper
     bound: that string sorts BELOW ``prefix + U+10FFFF + more``, so it
     would wrongly prune a shard starting with such a key."""
     return (
@@ -277,7 +347,8 @@ def index_prefix_lookup(index_df: DataFrame, prefix: str) -> DataFrame:
         index_df,
         _prefix_shard_filter(prefix),
         lambda r, f: dag_enum(r, f, prefix, None, True, True, require_prefix=prefix),
-    ).orderBy("key")
+        order=("key",),
+    )
 
 
 def index_range_lookup(
@@ -297,7 +368,8 @@ def index_range_lookup(
         index_df,
         sf,
         lambda r, f: dag_enum(r, f, lo, hi, lo_inclusive, hi_inclusive),
-    ).orderBy("key")
+        order=("key",),
+    )
 
 
 def index_fuzzy_lookup_many(
@@ -306,18 +378,18 @@ def index_fuzzy_lookup_many(
     k: int,
     damerau: bool = False,
 ) -> DataFrame:
-    """Batch of fuzzy lookups off the persisted artifact in ONE job:
-    each shard DAG is decoded once (LRU) and walked once per query.
-    Returns (query, key, value) rows — combined with the build-once
-    artifact this amortizes BOTH per-query job scheduling and per-query
-    index construction."""
+    """Batch of fuzzy lookups off the persisted artifact in one shard
+    loop: each shard DAG is decoded once (LRU) and walked once per
+    query.  Returns (query, key, value) rows ordered by (query, key).
+    The driver walk is single-threaded; a batch only spreads over the
+    executors when the shards exceed the LRU budget."""
     dfas = [(q, compile_dfa(q, k, damerau)) for q in dict.fromkeys(queries)]
     schema = StructType([StructField("query", StringType())] + _KEY_VALUE.fields)
 
     def walker(root, flat):
         return [(q, kk, v) for q, dfa in dfas for kk, v in dag_dfa(root, flat, dfa)]
 
-    return _query(index_df, None, walker, schema).orderBy("query", "key")
+    return _query(index_df, None, walker, schema, order=("query", "key"))
 
 
 def index_fuzzy_lookup(
@@ -329,14 +401,17 @@ def index_fuzzy_lookup(
 ) -> DataFrame:
     """Keys within edit distance k of ``query`` off the persisted
     artifact.  ``prefix_len`` pins the first chars exactly, which both
-    narrows the DFA walk and prunes shards at the parquet scan."""
+    narrows the DFA walk and prunes shards on their key range."""
     dfa = compile_dfa(query, k, damerau)
     if prefix_len > 0:
         p = query[:prefix_len]
-        # the pin narrows BOTH levels: shard pruning at the parquet scan
-        # (lo/hi stats) and the walk itself (descend the pinned path
+        # the pin narrows BOTH levels: shard pruning on lo_key/hi_key
+        # and the walk itself (descend the pinned path
         # before the product DFS)
         return _query(
-            index_df, _prefix_shard_filter(p), lambda r, f: dag_dfa(r, f, dfa, pin=p)
-        ).orderBy("key")
-    return _query(index_df, None, lambda r, f: dag_dfa(r, f, dfa)).orderBy("key")
+            index_df,
+            _prefix_shard_filter(p),
+            lambda r, f: dag_dfa(r, f, dfa, pin=p),
+            order=("key",),
+        )
+    return _query(index_df, None, lambda r, f: dag_dfa(r, f, dfa), order=("key",))

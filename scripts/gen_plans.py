@@ -30,7 +30,12 @@ def main() -> None:
 
     from orchid_fst_spark.er.blocking import candidate_pairs, normalize_pages
     from orchid_fst_spark.operators.dedup import ngram_jaccard_pairs, simhash_pairs
-    from orchid_fst_spark.operators.index import build_index, index_match_lookup, load_index
+    from orchid_fst_spark.operators.index import (
+        _TRIE_CACHE,
+        build_index,
+        index_match_lookup,
+        load_index,
+    )
     from orchid_fst_spark.operators.similarity import ivf_topk
     from orchid_fst_spark.operators.sort import ranked_lines
     from orchid_fst_spark.session import get_spark
@@ -244,14 +249,26 @@ def main() -> None:
     )
     idx_path = "/tmp/plans_idx"
     build_index(entry._dict(spark, SF), idx_path, n_shards=8)
+    # a zero LRU budget shows the executor path; under the budget the
+    # walk runs on the driver and the plan is the result's LocalTableScan
+    budget, _TRIE_CACHE.budget = _TRIE_CACHE.budget, 0
+    try:
+        lookup = index_match_lookup(load_index(spark, idx_path), "scan")
+    finally:
+        _TRIE_CACHE.budget = budget
     add(
         "Persisted-index point lookup (`operators.index.index_match_lookup`)",
-        "The shard key-range predicate is pushed into the parquet scan of "
-        "the metadata (lo_key/hi_key min/max stats prune shards — the "
-        "FST bound-seek as partition pruning); only surviving shards are "
-        "decoded worker-side through the LRU.",
-        index_match_lookup(load_index(spark, idx_path), "scan"),
-        must_contain=("lo_key", "hi_key"),
+        "The shard metadata is read once on the driver (`load_index`) into "
+        "a local relation, and the lo_key/hi_key shard filter is folded "
+        "into it at planning — the FST bound-seek without a metadata scan. "
+        "Shown here is the executor path, taken when the pruned shards "
+        "exceed the decoded-shard LRU budget: one mapInPandas over the "
+        "surviving shard rows decodes each shard worker-side through the "
+        "LRU.  Under the budget the walk runs on the driver and the "
+        "lookup runs no Spark job.",
+        lookup,
+        must_contain=("LocalTableScan",),
+        must_not=("CartesianProduct", "Scan parquet"),
     )
 
     from orchid_fst_spark.operators.decontam import contamination_stats

@@ -1,6 +1,7 @@
 """Persistable build-once/query-many index (operators/index.py):
-parity with the live dictionary operators, shard pruning, and the
-executor-side decoded-shard LRU."""
+parity with the live dictionary operators on both sides of the
+driver-walk threshold, shard pruning, the lookup job budget, and the
+decoded-shard LRU."""
 
 import os
 
@@ -14,9 +15,11 @@ from orchid_fst_spark.operators import (
     prefix_lookup,
     range_lookup,
 )
+from orchid_fst_spark.operators import index as index_mod
 from orchid_fst_spark.operators.index import (
     _TRIE_CACHE,
     build_index,
+    index_fuzzy_lookup_many,
     index_fuzzy_lookup,
     index_match_lookup,
     index_prefix_lookup,
@@ -25,6 +28,7 @@ from orchid_fst_spark.operators.index import (
 )
 from orchid_fst_spark.functions.distance import osa
 from orchid_fst_spark.sources.fixtures import gen_dict_kv, gen_dict_words
+from orchid_fst_spark.util.caches import LRUCache
 
 
 @pytest.fixture(scope="module")
@@ -40,43 +44,61 @@ def index_df(spark, kv_df, tmp_path_factory):
     return load_index(spark, path)
 
 
+@pytest.fixture
+def spark_path(monkeypatch):
+    """Force the executor (mapInPandas) path: no pruned shard set fits a
+    zero-byte driver LRU budget."""
+    monkeypatch.setattr(_TRIE_CACHE, "budget", 0)
+
+
 def _rows(df):
     return sorted((r.key, r.value) for r in df.collect())
+
+
+def _both(lookup):
+    """Rows of ``lookup()`` as tuples on the driver path, after asserting
+    the forced executor path returns the same rows in the same order."""
+    driver = lookup().collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_TRIE_CACHE, "budget", 0)
+        executor = lookup().collect()
+    assert driver == executor
+    return [tuple(r) for r in driver]
 
 
 def test_index_match_prefix_range_parity(spark, kv_df, index_df):
     keys = [r.key for r in kv_df.limit(5).collect()]
     for q in keys + ["definitely-not-a-key"]:
-        assert _rows(index_match_lookup(index_df, q)) == _rows(
+        assert _both(lambda: index_match_lookup(index_df, q)) == _rows(
             match_lookup(kv_df, q)
         ), q
     for p in ["a", "st", "zz", keys[0][:2]]:
-        assert _rows(index_prefix_lookup(index_df, p)) == _rows(
+        assert _both(lambda: index_prefix_lookup(index_df, p)) == _rows(
             prefix_lookup(kv_df, p)
         ), p
     for lo, hi, li, hi_ in [("c", "m", True, False), ("p", "t", False, True)]:
-        assert _rows(index_range_lookup(index_df, lo, hi, li, hi_)) == _rows(
-            range_lookup(kv_df, lo, hi, li, hi_)
-        )
+        assert _both(
+            lambda: index_range_lookup(index_df, lo, hi, li, hi_)
+        ) == _rows(range_lookup(kv_df, lo, hi, li, hi_))
 
 
 def test_index_fuzzy_parity(spark, kv_df, index_df):
     for q, k in [("scan", 2), ("table", 1)]:
         live = _rows(fuzzy_lookup(kv_df, q, k, impl="builtin"))
-        assert _rows(index_fuzzy_lookup(index_df, q, k)) == live, (q, k)
+        assert _both(lambda: index_fuzzy_lookup(index_df, q, k)) == live, (q, k)
     # pinned prefix narrows identically
     live = _rows(fuzzy_lookup(kv_df, "scan", 2, prefix_len=2, impl="builtin"))
-    assert _rows(index_fuzzy_lookup(index_df, "scan", 2, prefix_len=2)) == live
+    assert _both(lambda: index_fuzzy_lookup(index_df, "scan", 2, prefix_len=2)) == live
 
 
 def test_index_fuzzy_osa_parity(spark, index_df, kv_df):
-    got = _rows(index_fuzzy_lookup(index_df, "scan", 2, damerau=True))
+    got = _both(lambda: index_fuzzy_lookup(index_df, "scan", 2, damerau=True))
     keys = {r.key: r.value for r in kv_df.collect()}
     exp = sorted((k, v) for k, v in keys.items() if osa(k, "scan") <= 2)
     assert got == exp
 
 
-def test_index_shard_pruning(spark, index_df):
+def test_index_shard_pruning(spark, index_df, spark_path):
     # a point lookup must scan at most one shard: the key-range filter is
     # a plain parquet predicate on lo_key/hi_key
     plan = index_match_lookup(index_df, "scan")._jdf.queryExecution().toString()
@@ -90,7 +112,7 @@ def test_index_words_roundtrip(spark, tmp_path):
     build_index(df, path, n_shards=8)
     idx = load_index(spark, path)
     assert idx.agg(F.sum("n_keys")).collect()[0][0] == len(set(words))
-    got = [r.key for r in index_fuzzy_lookup(idx, "hair", 2).collect()]
+    got = [k for k, v in _both(lambda: index_fuzzy_lookup(idx, "hair", 2))]
     from orchid_fst_spark.functions.distance import levenshtein
 
     exp = sorted(w for w in set(words) if levenshtein(w, "hair") <= 2)
@@ -99,7 +121,6 @@ def test_index_words_roundtrip(spark, tmp_path):
 
 def test_index_fuzzy_many_parity(spark, kv_df, index_df):
     from orchid_fst_spark.operators.dictionary import fuzzy_lookup_many
-    from orchid_fst_spark.operators.index import index_fuzzy_lookup_many
 
     qs = ["scan", "table", "zzz"]
     exp = set()
@@ -110,12 +131,9 @@ def test_index_fuzzy_many_parity(spark, kv_df, index_df):
         (r.query, r.key, r.value)
         for r in fuzzy_lookup_many(kv_df, qs, k=2).collect()
     }
-    got_idx = {
-        (r.query, r.key, r.value)
-        for r in index_fuzzy_lookup_many(index_df, qs, k=2).collect()
-    }
+    got_idx = _both(lambda: index_fuzzy_lookup_many(index_df, qs, k=2))
     assert got_live == exp
-    assert got_idx == exp
+    assert got_idx == sorted(exp)
 
 
 def test_shard_cache_hits():
@@ -170,8 +188,85 @@ def test_prefix_lookup_no_synthetic_upper_bound(spark, tmp_path):
     path = str(tmp_path / "weird_idx")
     build_index(df, path, n_shards=2)
     idx = load_index(spark, path)
-    got = [r.key for r in index_prefix_lookup(idx, "pre").collect()]
+    got = [k for k, v in _both(lambda: index_prefix_lookup(idx, "pre"))]
     assert got == sorted(["pre", "prefab", weird])
     # pinned fuzzy with the same prefix must see it too
-    got_f = [r.key for r in index_fuzzy_lookup(idx, weird, 0, prefix_len=3).collect()]
+    got_f = [
+        k for k, v in _both(lambda: index_fuzzy_lookup(idx, weird, 0, prefix_len=3))
+    ]
     assert got_f == [weird]
+
+
+def test_index_lookup_job_budget(spark, kv_df, index_df):
+    """Under the LRU budget every lookup — an empty result included — is
+    a local relation: the lookup and its collect run no Spark job."""
+    key = kv_df.limit(1).collect()[0].key
+    lookups = {
+        "match": lambda: index_match_lookup(index_df, key),
+        "match_empty": lambda: index_match_lookup(index_df, "definitely-not-a-key"),
+        "prefix": lambda: index_prefix_lookup(index_df, key[:1]),
+        "range": lambda: index_range_lookup(index_df, key, key),
+        "fuzzy": lambda: index_fuzzy_lookup(index_df, key, 2),
+        "fuzzy_pinned": lambda: index_fuzzy_lookup(index_df, key, 2, prefix_len=1),
+        "fuzzy_many": lambda: index_fuzzy_lookup_many(index_df, [key, "zzz"], 2),
+    }
+    sc = spark.sparkContext
+    for name, lookup in lookups.items():
+        group = f"test_index_lookup_job_budget_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            rows = lookup().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, name
+        assert (len(rows) == 0) == (name == "match_empty"), name
+
+
+def test_driver_point_lookup_reads_one_shard(kv_df, index_df, monkeypatch):
+    """On a cold driver cache a point lookup reads exactly the one shard
+    its key range selects."""
+    key = kv_df.limit(1).collect()[0].key
+    reads = []
+    read = index_mod._read_shard_blob
+    monkeypatch.setattr(index_mod, "_TRIE_CACHE", LRUCache(_TRIE_CACHE.budget))
+    monkeypatch.setattr(
+        index_mod, "_read_shard_blob", lambda p, s: reads.append(s) or read(p, s)
+    )
+    assert [r.key for r in index_match_lookup(index_df, key).collect()] == [key]
+    assert len(reads) == 1
+
+
+def test_stale_index_handle_raises(spark, tmp_path, monkeypatch):
+    """A handle loaded before an in-place rebuild must not serve the new
+    blobs under the old metadata: a cold read refuses the changed md5."""
+    path = str(tmp_path / "stale_idx")
+    schema = "key string, value long"
+    build_index(spark.createDataFrame([("aa", 1), ("bb", 2)], schema), path, n_shards=1)
+    old = load_index(spark, path)
+    build_index(spark.createDataFrame([("cc", 3), ("dd", 4)], schema), path, n_shards=1)
+    monkeypatch.setattr(index_mod, "_TRIE_CACHE", LRUCache(_TRIE_CACHE.budget))
+    with pytest.raises(RuntimeError, match=r"shard 0.*call load_index again"):
+        index_match_lookup(old, "aa")
+    fresh = load_index(spark, path)
+    assert [tuple(r) for r in index_match_lookup(fresh, "cc").collect()] == [("cc", 3)]
+
+
+def test_build_index_values_exact_and_nulls_rejected(spark, tmp_path):
+    """Map-mode values round-trip exactly above 2**53; a null value is
+    refused by name instead of crashing on a NaN cast."""
+    schema = "key string, value long"
+    big = 2**53 + 1
+    path = str(tmp_path / "big_idx")
+    build_index(spark.createDataFrame([("aa", big), ("ac", 7)], schema), path, n_shards=1)
+    idx = load_index(spark, path)
+    assert _both(lambda: index_match_lookup(idx, "aa")) == [("aa", big)]
+    assert _both(lambda: index_prefix_lookup(idx, "a")) == [("aa", big), ("ac", 7)]
+    nulls = spark.createDataFrame([("aa", big), ("ab", None), ("ac", 7)], schema)
+    with pytest.raises(Exception, match=r"ValueError: build_index: the 'value' column"):
+        build_index(nulls, str(tmp_path / "null_idx"), n_shards=1)
+
+
+def test_load_index_rejects_uri_paths(spark):
+    with pytest.raises(ValueError, match="absolute local/NFS"):
+        load_index(spark, "hdfs://namenode/some/index")
