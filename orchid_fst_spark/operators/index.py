@@ -30,12 +30,14 @@ repeated-point-query analog:
   residency).  A blob is read from the artifact only on a miss, so
   repeated queries skip the dictionary scan, the sort and the DAG build.
 
-Where the walk runs: when the surviving shards' blob bytes fit the LRU
-budget, on the driver — the decoded shards stay resident there, and the
-result comes back as a local frame, so a lookup runs no Spark job.  A
-pruned shard set larger than the budget would thrash a driver cache, so
-it is walked by one mapInPandas instead: each executor task reads only
-the shards it owns, and no pruned shard is ever deserialized.
+Where the walk runs: on the driver, where the decoded shards stay
+resident and the result comes back as a local frame, so a lookup runs
+no Spark job.  The executors (one mapInPandas, each task reading only
+the shards it owns) take a lookup only where the driver would hold too
+much or be slower: pruned shards over the LRU budget (they would thrash
+a driver cache), a prefix/range whose pruned shards hold, or any result
+of, over ``_DRIVER_MAX_ROWS`` rows, or a batch of over
+``_DRIVER_MAX_QUERIES`` queries (the driver walk is single-threaded).
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ import hashlib
 import os
 import pickle
 import zlib
+from itertools import chain, islice
 from typing import Iterator
 
 import pandas as pd
@@ -75,8 +78,18 @@ INDEX_SCHEMA = StructType(
 # process-global decoded-shard cache (on the driver, and in each python
 # worker, where worker reuse keeps it warm across queries).  Budget ~256 MB
 # of *blob* bytes — decoded DAGs are larger, but blob size is the stable,
-# observable proxy.  The budget is also the driver-walk threshold (_query).
+# observable proxy.  The driver walks only pruned shard sets that fit it.
 _TRIE_CACHE = LRUCache(256 * 1024 * 1024)
+
+# Driver-vs-executor crossovers of warm lookups, local[4] on 4 vCPUs
+# (perfbench dictionaries of 60k and 480k keys, 32 shards).  Rows: a
+# range returning 150k rows took 2.0 s on either path; at 240k the
+# executors won (2.2 s vs 3.0 s), at 100k the driver (1.3 s vs 1.6 s).
+# Queries: a 240-query k=2 batch took 4.7 s vs 4.6 s over 480k keys; at
+# 960 queries the executors won (11.7 s vs 16.9 s).  Below both, the
+# driver path was as fast or faster, at under half the process-tree CPU.
+_DRIVER_MAX_ROWS = 150_000
+_DRIVER_MAX_QUERIES = 240
 
 
 _META_SCHEMA = StructType(
@@ -163,21 +176,23 @@ def _read_shard_blob(path: str, shard: int) -> bytes:
     except (OSError, FileNotFoundError) as exc:  # pragma: no cover
         raise RuntimeError(
             f"shard blob read failed for {path!r} (shard {shard}): "
-            "the artifact path must be absolute local/NFS storage every "
-            "executor can open with pyarrow; Spark-only URI schemes are "
-            "not supported on the warm read path"
+            "the artifact must stay readable at that absolute local/NFS "
+            "path from the driver and every executor"
         ) from exc
     return tbl.column("blob")[0].as_py()
 
 
 def _normalize_artifact_path(path: str) -> str:
-    """Absolute-ify local artifact paths: executors resolve relative
-    paths against their own cwd, so a relative path that works in
-    local[*] silently breaks on a cluster.  URI-scheme paths (hdfs://,
-    s3a://) pass through to the JVM writer; ``load_index`` refuses
-    them."""
+    """Absolute-ify the artifact path (executors resolve relative paths
+    against their own cwd, so a relative path that works in local[*]
+    silently breaks on a cluster), and refuse URI-scheme paths (hdfs://,
+    s3a://): shard blobs are read with pyarrow, not through Spark."""
     if "://" in path:
-        return path
+        raise ValueError(
+            f"index artifact path {path!r}: must be absolute local/NFS "
+            "storage the driver and every executor can open with pyarrow; "
+            "Spark-only URI schemes are not supported"
+        )
     return os.path.abspath(path)
 
 
@@ -254,13 +269,7 @@ def load_index(spark: SparkSession, path: str) -> DataFrame:
     an old frame raises)."""
     import pyarrow.dataset as ds
 
-    if "://" in path:
-        raise ValueError(
-            f"load_index({path!r}): the artifact path must be absolute "
-            "local/NFS storage the driver and every executor can open with "
-            "pyarrow; Spark-only URI schemes are not supported"
-        )
-    path = os.path.abspath(path)
+    path = _normalize_artifact_path(path)
     cols = ["shard", "lo_key", "hi_key", "n_keys", "blob_md5"]
     meta = ds.dataset(path, format="parquet", partitioning="hive").to_table(
         columns=cols + ["__filename"]
@@ -287,13 +296,20 @@ def _query(
     walker,
     schema: StructType = _KEY_VALUE,
     order: tuple = (),
+    queries: int = 1,
+    enumerates: bool = False,
 ) -> DataFrame:
     """Shard pruning + ``walker`` ((root, FlatDag) -> rows matching
     ``schema``) over every surviving shard, sorted by the ``order``
     columns.  The pruned metadata rows are collected (no job on
-    ``load_index``'s local relation); if their blob bytes fit the LRU,
-    the walk runs here and returns a local frame, else one mapInPandas
-    runs it on the executors."""
+    ``load_index``'s local relation).  The walk runs here, returning a
+    local frame, when their blob bytes fit the LRU, ``queries`` is at
+    most ``_DRIVER_MAX_QUERIES`` and the result has at most
+    ``_DRIVER_MAX_ROWS`` rows; otherwise one mapInPandas runs it on the
+    executors.  The row cap is checked before the walk for an
+    enumeration (prefix/range: at most the pruned shards' ``n_keys``
+    rows), and during it otherwise (no shard after the one that passes
+    the cap is walked)."""
     pruned = index_df if shard_filter is None else index_df.filter(shard_filter)
     cols = ["shard", "blob_md5", "index_path"]
     names = schema.fieldNames()
@@ -306,13 +322,19 @@ def _query(
             )
             yield walker(root, flat)
 
-    rows = pruned.select(*cols, "blob_bytes").collect()
-    if sum(r.blob_bytes for r in rows) <= _TRIE_CACHE.budget:
-        hits = [row for part in walk(r[:3] for r in rows) for row in part]
-        pdf = pd.DataFrame(hits, columns=names)
-        if order:
-            pdf = pdf.sort_values(list(order), kind="stable", ignore_index=True)
-        return _local_frame(index_df.sparkSession, pdf, schema)
+    rows = pruned.select(*cols, "blob_bytes", "n_keys").collect()
+    if (
+        queries <= _DRIVER_MAX_QUERIES
+        and sum(r.blob_bytes for r in rows) <= _TRIE_CACHE.budget
+        and not (enumerates and sum(r.n_keys for r in rows) > _DRIVER_MAX_ROWS)
+    ):
+        hits = chain.from_iterable(walk(r[:3] for r in rows))
+        hits = list(islice(hits, _DRIVER_MAX_ROWS + 1))
+        if len(hits) <= _DRIVER_MAX_ROWS:
+            pdf = pd.DataFrame(hits, columns=names)
+            if order:
+                pdf = pdf.sort_values(list(order), kind="stable", ignore_index=True)
+            return _local_frame(index_df.sparkSession, pdf, schema)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -348,6 +370,7 @@ def index_prefix_lookup(index_df: DataFrame, prefix: str) -> DataFrame:
         _prefix_shard_filter(prefix),
         lambda r, f: dag_enum(r, f, prefix, None, True, True, require_prefix=prefix),
         order=("key",),
+        enumerates=True,
     )
 
 
@@ -369,6 +392,7 @@ def index_range_lookup(
         sf,
         lambda r, f: dag_enum(r, f, lo, hi, lo_inclusive, hi_inclusive),
         order=("key",),
+        enumerates=True,
     )
 
 
@@ -381,15 +405,17 @@ def index_fuzzy_lookup_many(
     """Batch of fuzzy lookups off the persisted artifact in one shard
     loop: each shard DAG is decoded once (LRU) and walked once per
     query.  Returns (query, key, value) rows ordered by (query, key).
-    The driver walk is single-threaded; a batch only spreads over the
-    executors when the shards exceed the LRU budget."""
+    The driver walk is single-threaded; a batch of more than
+    ``_DRIVER_MAX_QUERIES`` distinct queries is walked on the executors."""
     dfas = [(q, compile_dfa(q, k, damerau)) for q in dict.fromkeys(queries)]
     schema = StructType([StructField("query", StringType())] + _KEY_VALUE.fields)
 
     def walker(root, flat):
         return [(q, kk, v) for q, dfa in dfas for kk, v in dag_dfa(root, flat, dfa)]
 
-    return _query(index_df, None, walker, schema, order=("query", "key"))
+    return _query(
+        index_df, None, walker, schema, order=("query", "key"), queries=len(dfas)
+    )
 
 
 def index_fuzzy_lookup(

@@ -262,10 +262,11 @@ def main() -> None:
         "a local relation, and the lo_key/hi_key shard filter is folded "
         "into it at planning — the FST bound-seek without a metadata scan. "
         "Shown here is the executor path, taken when the pruned shards "
-        "exceed the decoded-shard LRU budget: one mapInPandas over the "
-        "surviving shard rows decodes each shard worker-side through the "
-        "LRU.  Under the budget the walk runs on the driver and the "
-        "lookup runs no Spark job.",
+        "exceed the decoded-shard LRU budget, the result exceeds "
+        "`_DRIVER_MAX_ROWS` rows or a batch exceeds `_DRIVER_MAX_QUERIES` "
+        "queries: one mapInPandas over the surviving shard rows decodes "
+        "each shard worker-side through the LRU.  Otherwise the walk runs "
+        "on the driver and the lookup runs no Spark job.",
         lookup,
         must_contain=("LocalTableScan",),
         must_not=("CartesianProduct", "Scan parquet"),

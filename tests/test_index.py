@@ -99,10 +99,14 @@ def test_index_fuzzy_osa_parity(spark, index_df, kv_df):
 
 
 def test_index_shard_pruning(spark, index_df, spark_path):
-    # a point lookup must scan at most one shard: the key-range filter is
-    # a plain parquet predicate on lo_key/hi_key
-    plan = index_match_lookup(index_df, "scan")._jdf.queryExecution().toString()
-    assert "lo_key" in plan and "hi_key" in plan
+    # a point lookup must walk at most one shard: the lo_key/hi_key filter
+    # is folded into the metadata's local relation at planning, so the
+    # mapInPandas reads a relation of exactly the one surviving shard row
+    plan = index_match_lookup(index_df, "scan")._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    assert leaves.size() == 1
+    assert leaves.apply(0).getClass().getSimpleName() == "LocalRelation"
+    assert leaves.apply(0).data().size() == 1
 
 
 def test_index_words_roundtrip(spark, tmp_path):
@@ -197,6 +201,19 @@ def test_prefix_lookup_no_synthetic_upper_bound(spark, tmp_path):
     assert got_f == [weird]
 
 
+def _jobs(spark, name, lookup):
+    """(rows of ``lookup().collect()``, Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"test_index_jobs_{name}"
+    sc.setJobGroup(group, name)
+    try:
+        rows = [tuple(r) for r in lookup().collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_index_lookup_job_budget(spark, kv_df, index_df):
     """Under the LRU budget every lookup — an empty result included — is
     a local relation: the lookup and its collect run no Spark job."""
@@ -210,17 +227,43 @@ def test_index_lookup_job_budget(spark, kv_df, index_df):
         "fuzzy_pinned": lambda: index_fuzzy_lookup(index_df, key, 2, prefix_len=1),
         "fuzzy_many": lambda: index_fuzzy_lookup_many(index_df, [key, "zzz"], 2),
     }
-    sc = spark.sparkContext
     for name, lookup in lookups.items():
-        group = f"test_index_lookup_job_budget_{name}"
-        sc.setJobGroup(group, name)
-        try:
-            rows = lookup().collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, name
+        rows, jobs = _jobs(spark, name, lookup)
+        assert jobs == 0, name
         assert (len(rows) == 0) == (name == "match_empty"), name
+
+
+def test_driver_caps_send_lookups_to_executors(spark, kv_df, index_df, monkeypatch):
+    """Past a cap the lookup runs on the executors, with the same rows in
+    the same order as the driver walk: a prefix/range whose pruned shards
+    hold over _DRIVER_MAX_ROWS keys (checked before walking), any other
+    walk yielding over _DRIVER_MAX_ROWS rows, and a batch of over
+    _DRIVER_MAX_QUERIES queries."""
+    prefix = lambda: index_prefix_lookup(index_df, "s")
+    fuzzy = lambda: index_fuzzy_lookup(index_df, "scan", 2)
+    batch = lambda: index_fuzzy_lookup_many(index_df, ["scan", "table"], 2)
+    expected = {}
+    for name, lookup in (("prefix", prefix), ("fuzzy", fuzzy), ("batch", batch)):
+        expected[name], jobs = _jobs(spark, name, lookup)
+        assert jobs == 0 and len(expected[name]) > 1, name
+    pruned_keys = (
+        index_df.filter(index_mod._prefix_shard_filter("s"))
+        .agg(F.sum("n_keys"))
+        .collect()[0][0]
+    )
+    for name, lookup, cap, driver in (
+        ("prefix", prefix, pruned_keys - 1, False),
+        ("prefix", prefix, pruned_keys, True),
+        ("fuzzy", fuzzy, len(expected["fuzzy"]) - 1, False),
+        ("fuzzy", fuzzy, len(expected["fuzzy"]), True),
+    ):
+        monkeypatch.setattr(index_mod, "_DRIVER_MAX_ROWS", cap)
+        rows, jobs = _jobs(spark, f"{name}_cap_{cap}", lookup)
+        assert rows == expected[name] and (jobs == 0) == driver, (name, cap)
+    monkeypatch.undo()
+    monkeypatch.setattr(index_mod, "_DRIVER_MAX_QUERIES", 1)
+    rows, jobs = _jobs(spark, "batch_query_cap", batch)
+    assert rows == expected["batch"] and jobs > 0
 
 
 def test_driver_point_lookup_reads_one_shard(kv_df, index_df, monkeypatch):
@@ -267,6 +310,10 @@ def test_build_index_values_exact_and_nulls_rejected(spark, tmp_path):
         build_index(nulls, str(tmp_path / "null_idx"), n_shards=1)
 
 
-def test_load_index_rejects_uri_paths(spark):
+def test_index_rejects_uri_paths(spark, kv_df):
+    """Shard blobs are read with pyarrow: build and load both refuse a
+    Spark-only URI up front."""
     with pytest.raises(ValueError, match="absolute local/NFS"):
         load_index(spark, "hdfs://namenode/some/index")
+    with pytest.raises(ValueError, match="absolute local/NFS"):
+        build_index(kv_df, "hdfs://namenode/some/index")
