@@ -5,9 +5,11 @@ fst.cpp:530-553) *is* a blocking key: only keys sharing the prefix are
 compared.  At web scale a single prefix block is both too coarse (hot
 hosts) and too brittle (typos in the first chars escape the block), so
 the default candidate generator is segment/pigeonhole blocking
-(operators/passjoin): every key within edit distance k <= 2 of another
-shares one exactly-matching segment, found by a plain equi-join on O(1)
-signature rows per key; deletion-neighborhood signatures
+(operators/passjoin): every key within Levenshtein distance k <= 2 of
+another on its first ``max_len`` chars shares one exactly-matching
+segment, found by a plain equi-join on O(1) signature rows per key (an
+OSA transposition is two such edits, so the pigeonhole has holes, see
+``candidate_pairs``); deletion-neighborhood signatures
 (operators/dictionary.variant_sigs) remain as the high-precision option
 for short keys.  Both run through the one edit-distance self-join,
 ``operators.dictionary.fuzzy_self_pairs``.
@@ -31,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.normalize import HOST_RE, norm_key
-from ..operators.dictionary import _variants_df, fuzzy_self_pairs
+from ..operators.dictionary import fuzzy_self_pairs
 
 # path (title) part of a URL: everything between host and ?/#
 PATH_RE = "^[a-z][a-z0-9+.-]*://[^/?#]+/([^?#]*)"
@@ -72,7 +74,7 @@ def candidate_pairs(
     in-group pair explode over 8-byte key ids -> distinct id pairs ->
     id->key join-back -> vectorized banded-DP verify.
 
-    ``algo`` picks the blocking signature family (both exact for k<=2):
+    ``algo`` picks the blocking signature family:
       'passjoin'  segment/pigeonhole blocking (operators/passjoin):
                   ~40 signature rows per key *independent of key
                   length* — the default and the scheme that survives
@@ -82,11 +84,14 @@ def candidate_pairs(
                   tightest precision; right for short keys (word
                   dictionaries).
     A k beyond a family's ceiling warns and reroutes (see
-    ``fuzzy_self_pairs``); any other name is a ValueError.
+    ``fuzzy_self_pairs``); any other name is a ValueError.  Neither
+    family is complete for every pair within k: see the completeness
+    note of ``fuzzy_self_pairs`` (the default, 'passjoin' with
+    ``damerau``, misses OSA pairs whose transpositions straddle segment
+    boundaries).
 
     ``sig_cap`` drops signatures shared by more than cap keys (a
-    degenerate block would contribute O(cap²) pairs); block sizes are
-    observable via ``blocking_metrics``.  Returns
+    degenerate block would contribute O(cap²) pairs).  Returns
     (key_a, key_b, dist) over *keys*; join back to urls downstream so the
     quadratic work happens on distinct keys, not urls.
     """
@@ -100,21 +105,3 @@ def candidate_pairs(
         algo=algo,
     )
 
-
-def blocking_metrics(normalized: DataFrame, k: int = 2, max_len: int = 96) -> DataFrame:
-    """Per-signature block-size stats (keys per signature) — the skew
-    observability table (mirrors the reference sorter's line counters,
-    large_file_sorter.h:139-141)."""
-    return (
-        _variants_df(normalized, "norm_key", k, max_len)
-        .groupBy("sig")
-        .agg(F.count("*").alias("block_size"))
-        .agg(
-            F.count("*").alias("n_signatures"),
-            F.max("block_size").alias("max_block"),
-            F.avg("block_size").alias("avg_block"),
-            F.sum(F.col("block_size") * (F.col("block_size") - 1) / 2).alias(
-                "candidate_pairs_upper_bound"
-            ),
-        )
-    )

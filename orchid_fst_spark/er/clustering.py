@@ -5,8 +5,10 @@ Components in MapReduce and Beyond", SoCC'14 — public literature, see
 PAPERS.md): pure DataFrame groupBy/join rounds, converges in
 O(log n) rounds even for pathological chain graphs (hash-min label
 propagation needs O(diameter)).  Each round is one shuffle on node id;
-intermediate frames are checkpointed (localCheckpoint or parquet) to
-truncate lineage so the iteration count never bloats the plan.
+each round's edge set goes through ``util.storage.cut`` (localCheckpoint
+or parquet), which truncates lineage so the iteration count never bloats
+the plan, and whose job also observes the row count and digest that
+decide convergence.
 
 Node ids are kept as their natural strings (urls / norm_keys) and
 compared lexicographically — no id re-mapping pass, deterministic
@@ -47,38 +49,27 @@ def connected_components(
 
     Implementation: alternate large-star (every neighbor > v links to
     v's minimum neighborhood node) and small-star (neighbors <= v link to
-    the minimum) until the edge set stops changing.  Raises
-    ``RuntimeError`` if it still changes after ``_MAX_ROUNDS`` rounds:
-    the labelling read off an unconverged edge set would be wrong.
-    Under ``checkpoint_dir`` each round's edges are written to
+    the minimum) until the edge set stops changing: a round has
+    converged when its cut's ``(rows, digest)`` equals the previous
+    cut's (the count and xor-of-row-hashes the cut's own job observes,
+    so convergence costs no extra job; edges are distinct, so only a
+    64-bit collision could hide a change).  Raises ``RuntimeError`` if
+    it still changes after ``_MAX_ROUNDS`` rounds: the labelling read
+    off an unconverged edge set would be wrong.  Under
+    ``checkpoint_dir`` each round's edges are written to
     ``cc_edges_{round}``.
+
+    Neither star step drops a node of the input edge set, and at the
+    fixpoint every edge is ``(component min, member)``, so the members
+    plus the distinct roots are exactly one row per node (self loops
+    are dropped first: a node seen only in a self loop is absent).
     """
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
 
-    def _cut(df: DataFrame, i: int) -> DataFrame:
+    def _cut(df: DataFrame, i: int):
         return cut(df, f"{checkpoint_dir}/cc_edges_{i}" if checkpoint_dir else None)
 
-    e = _cut(e, 0)
-
-    def _fp(df: DataFrame):
-        # edge-set fingerprint: count + order-insensitive xor of row
-        # hashes — one aggregation job per iteration instead of two
-        # exceptAll passes (xor never overflows under ANSI mode; edges are
-        # distinct so xor cancellation cannot hide a change of the same
-        # cardinality except by 64-bit collision; _MAX_ROUNDS is the backstop)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    fp_prev = _fp(e)
-
+    e, *fp_prev = _cut(e, 0)
     for i in range(1, _MAX_ROUNDS + 1):
         # -- large-star --------------------------------------------------
         # neighborhood of v including v; m = min; link every neighbor > v to m
@@ -103,11 +94,7 @@ def connected_components(
             .select(F.col("m").alias("src"), F.col("u").alias("dst"))
             .union(mins2.select(F.col("m").alias("src"), F.col("v").alias("dst")))
         )
-        e2 = _canonical(small)
-        e2 = _cut(e2, i)
-
-        fp_new = _fp(e2)
-        e = e2
+        e, *fp_new = _cut(_canonical(small), i)
         if fp_new == fp_prev:
             break
         fp_prev = fp_new
@@ -117,17 +104,10 @@ def connected_components(
             f"{_MAX_ROUNDS} rounds"
         )
 
-    # after convergence every edge is (root, member)
-    comp = e.select(F.col("dst").alias("node"), F.col("src").alias("component"))
-    roots = e.select(F.col("src").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    )
-    singletons = nodes.join(
-        comp.select("node").union(roots.select("node")).distinct(), "node", "left_anti"
-    ).withColumn("component", F.col("node"))
-    return comp.union(roots).union(singletons).groupBy("node").agg(
-        F.min("component").alias("component")
-    )
+    # at the fixpoint every edge is (component min, member)
+    members = e.select(F.col("dst").alias("node"), F.col("src").alias("component"))
+    roots = e.select(F.col("src").alias("node")).distinct()
+    return members.union(roots.withColumn("component", F.col("node")))
 
 
 def star_clusters(
@@ -228,11 +208,9 @@ def _hash_local_minima(sym: DataFrame, pi) -> DataFrame:
     ``canopy_clusters`` (one neighbor-min aggregate + a filter;
     eagerly checkpointed since every consumer reads it >= twice)."""
     nbmin = sym.groupBy("v").agg(F.min(pi(F.col("u"))).alias("mn"))
-    return (
-        nbmin.filter(pi(F.col("v")) < F.col("mn"))
-        .select(F.col("v").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    return cut(
+        nbmin.filter(pi(F.col("v")) < F.col("mn")).select(F.col("v").alias("c"))
+    )[0]
 
 
 def pivot_clusters(
@@ -278,8 +256,10 @@ def pivot_clusters(
     Plan shape per round: one neighbor-min aggregate, one pivot
     equi-join + min_by aggregate, two anti-joins to shrink the edge
     frame — every shuffle on node id, no windows; ``sym`` and the
-    per-round output are ``localCheckpoint``-cut so the plan tree stays
-    constant-size across rounds (the pagerank-loop lesson).  Returns
+    per-round output go through ``cut`` so the plan tree stays
+    constant-size across rounds (the pagerank-loop lesson), and the
+    loop's emptiness test reads the row count that ``sym``'s cut
+    observed (no extra job).  Returns
     ``(node, cluster)`` for every node in the edge list; callers
     left-join the full record set and coalesce to self, exactly like
     ``connected_components`` / ``star_clusters`` consumers."""
@@ -290,16 +270,15 @@ def pivot_clusters(
         return F.md5(F.concat(F.lit(f"{seed}|"), c))
 
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    sym = (
+    sym, n_sym, _ = cut(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .select(F.col("src").alias("v"), F.col("dst").alias("u"))
-        .localCheckpoint(eager=True)
     )
-    all_nodes = sym.select("v").distinct().localCheckpoint(eager=True)
+    all_nodes = cut(sym.select("v").distinct())[0]
 
     clustered: list[DataFrame] = []
     for _ in range(rounds):
-        if sym.isEmpty():
+        if not n_sym:
             break
         pivots = _hash_local_minima(sym, _pi)
         assigned = (
@@ -310,17 +289,15 @@ def pivot_clusters(
             )
             .select("v", F.col("bc.c").alias("cluster"))
         )
-        this_round = (
+        this_round = cut(
             pivots.select(F.col("c").alias("node"), F.col("c").alias("cluster"))
             .unionByName(assigned.select(F.col("v").alias("node"), "cluster"))
-            .localCheckpoint(eager=True)
-        )
+        )[0]
         clustered.append(this_round)
         gone = this_round.select("node")
-        sym = (
+        sym, n_sym, _ = cut(
             sym.join(gone, sym["v"] == gone["node"], "left_anti")
             .join(gone, sym["u"] == gone["node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
 
     out = clustered[0] if clustered else None
@@ -762,7 +739,8 @@ def canopy_clusters(
     Blelloch/Fineman/Shun argument as ``pivot_clusters``, since removal
     is "adjacent to an earlier center in E2".  So: centers = pivot
     rounds on ``edges_tight`` (one neighbor-min aggregate + two
-    anti-joins per round, ``localCheckpoint``-cut), then ONE semi-join
+    anti-joins per round, ``cut`` each round, whose observed row count
+    is the emptiness test), then ONE semi-join
     of the symmetrized loose graph against the center set emits the
     overlapping memberships.  After ``rounds`` rounds any still-active
     node simply never centers: it keeps whatever memberships its loose
@@ -791,17 +769,15 @@ def canopy_clusters(
     tight = _canonical(
         edges_tight.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    lsym = (
+    lsym = cut(
         loose.select(F.col("src").alias("v"), F.col("dst").alias("u"))
         .union(loose.select(F.col("dst").alias("v"), F.col("src").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-    tsym = (
+    )[0]
+    tsym, n_sym, _ = cut(
         tight.select(F.col("src").alias("v"), F.col("dst").alias("u"))
         .union(tight.select(F.col("dst").alias("v"), F.col("src").alias("u")))
-        .localCheckpoint(eager=True)
     )
-    all_nodes = lsym.select("v").distinct().localCheckpoint(eager=True)
+    all_nodes = cut(lsym.select("v").distinct())[0]
 
     # tight-graph pivot rounds: centers + removal, no assignment
     sym = tsym
@@ -811,41 +787,37 @@ def canopy_clusters(
     isolated = all_nodes.join(
         tsym.select("v").distinct(), "v", "left_anti"
     ).select(F.col("v").alias("c"))
-    centers = isolated.localCheckpoint(eager=True)
+    centers = cut(isolated)[0]
     for _ in range(rounds):
-        if sym.isEmpty():
+        if not n_sym:
             break
         pivots = _hash_local_minima(sym, _pi)
         centers = centers.unionByName(pivots)
-        removed = (
-            pivots.select(F.col("c").alias("node"))
-            .unionByName(
+        removed = cut(
+            pivots.select(F.col("c").alias("node")).unionByName(
                 sym.join(pivots, sym["u"] == pivots["c"])
                 .select(F.col("v").alias("node"))
                 .distinct()
             )
-            .localCheckpoint(eager=True)
-        )
+        )[0]
         prev_nodes = sym.select("v").distinct()
-        sym = (
+        sym, n_sym, _ = cut(
             sym.join(removed, sym["v"] == removed["node"], "left_anti")
             .join(removed, sym["u"] == removed["node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         # a node whose every tight neighbor was just removed (without
         # being removed itself) can never be blocked again: sequential
         # canopy centers it when reached — add it now (removed nodes
         # never center, so these are mutually consistent)
-        newly_isolated = (
+        newly_isolated = cut(
             prev_nodes.join(
                 removed, prev_nodes["v"] == removed["node"], "left_anti"
             )
             .join(sym.select("v").distinct(), "v", "left_anti")
             .select(F.col("v").alias("c"))
-            .localCheckpoint(eager=True)
-        )
+        )[0]
         centers = centers.unionByName(newly_isolated)
-    centers = centers.localCheckpoint(eager=True)
+    centers = cut(centers)[0]
 
     member = lsym.join(
         centers, lsym["u"] == centers["c"]

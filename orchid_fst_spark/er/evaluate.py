@@ -48,10 +48,9 @@ def _canon_pairs(df: DataFrame, a: str, b: str) -> DataFrame:
 def _prf(tp: F.Column, fp: F.Column, fn: F.Column) -> list:
     """precision/recall/f1 columns from exact long counts, rounded 6dp.
 
-    Empty-side conventions match er.pipeline.pairwise_f1: an empty
-    predicted set has precision 1, an empty truth set has recall 1
-    (nothing was asserted / nothing was missed), and f1 is 0 when both
-    precision and recall are 0.
+    Empty-side conventions: an empty predicted set has precision 1, an
+    empty truth set has recall 1 (nothing was asserted / nothing was
+    missed), and f1 is 0 when both precision and recall are 0.
     """
     prec = F.when(tp + fp > 0, tp / (tp + fp)).otherwise(F.lit(1.0))
     rec = F.when(tp + fn > 0, tp / (tp + fn)).otherwise(F.lit(1.0))
@@ -113,15 +112,14 @@ def clustering_pair_metrics(
     """Pairwise P/R/F1 of a predicted CLUSTERING vs a truth clustering.
 
     One row: ``(tp, pred_pairs, true_pairs, precision, recall, f1)``.
-    The DataFrame twin of ``er.pipeline.pairwise_f1`` (same contingency-
-    table math, same empty-side conventions) for oracle checking and
-    per-run metric logging without a driver collect.
+    The one contingency-table definition: ``er.pipeline.pairwise_f1``
+    collects this row as a dict; as a frame it serves oracle checking
+    and per-run metric logging without a driver collect.
 
     Pair counts come from cluster-size histograms (sum of nC2) and the
     (pred, truth) contingency table — a 10M-member cluster contributes
     one histogram row, never 5*10^13 materialized pairs.  Records absent
-    from either side are ignored (inner join on the id), matching
-    pairwise_f1.
+    from either side are ignored (inner join on the id).
     """
     pred = predicted.select(
         F.col(id_col).alias("_id"), F.col(pred_col).alias("pc")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..util.storage import cut
 from .blocking import candidate_pairs, normalize_pages
 from .clustering import connected_components
+from .evaluate import clustering_pair_metrics
 from .scoring import match_edges, score_pairs
 
 
@@ -43,21 +44,27 @@ class _Checkpointer:
         self.metrics: list[dict] = []
 
     def run(self, stage: str, fn, params: dict) -> DataFrame:
-        """Materialize a stage.  Without a checkpoint directory it is
-        cut with ``localCheckpoint`` and nothing is recorded; with one,
-        resume from its parquet when complete, otherwise compute and
-        persist it, and record lineage metrics."""
+        """Build a stage.  Without a checkpoint directory the frame is
+        returned uncut (every stage is read exactly once downstream) and
+        nothing is recorded; with one, resume from its parquet when
+        complete, otherwise compute and persist it, and record lineage
+        metrics.  ``rows`` is the count the parquet write observed; only
+        a resumed stage runs a count."""
         if not self.dir:
-            return cut(fn())
+            return fn()
         t0 = time.time()
         path = _stage_path(self.dir, stage)
         resumed = self.resume and _complete(path)
-        out = self.spark.read.parquet(path) if resumed else cut(fn(), path)
+        if resumed:
+            out = self.spark.read.parquet(path)
+            rows = out.count()
+        else:
+            out, rows, _ = cut(fn(), path)
         self.metrics.append(
             {
                 "stage": stage,
                 "resumed": resumed,
-                "rows": out.count(),
+                "rows": rows,
                 "wall_sec": round(time.time() - t0, 3),
                 "params": json.dumps(params, sort_keys=True),
             }
@@ -135,6 +142,8 @@ def resolve(
         .withColumn("cluster_id", F.coalesce("cluster_id", "norm_key"))
         .select("url", "norm_key", "cluster_id")
     )
+    if not checkpoint_dir:
+        return cut(out)[0]
     result = ck.run("resolve", lambda: out, {"k": k})
     ck.write_metrics()
     return result
@@ -143,40 +152,17 @@ def resolve(
 def pairwise_f1(predicted: DataFrame, truth: DataFrame) -> dict:
     """Pairwise precision/recall/F1 of predicted clustering vs truth.
 
-    Both inputs: (url, cluster_id).  Pair counts are computed from
-    cluster-size histograms (sum nC2) and the intersection contingency
-    table — no quadratic pair materialization, scales to huge clusterings.
+    Both inputs: (url, cluster_id).  The one row of
+    ``er.evaluate.clustering_pair_metrics`` (cluster-size histograms
+    and the contingency table, no quadratic pair materialization) as a
+    dict; precision, recall and F1 are its 6dp-rounded values.
     """
-
-    def _pairs(df: DataFrame, col: str) -> int:
-        sizes = df.groupBy(col).agg(F.count("*").alias("n"))
-        row = sizes.agg(
-            F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p")
-        ).collect()[0]
-        return int(row.p or 0)
-
-    pred = predicted.select("url", F.col("cluster_id").alias("pc"))
-    tr = truth.select("url", F.col("cluster_id").alias("tc"))
-    joined = pred.join(tr, "url")
-    cont = joined.groupBy("pc", "tc").agg(F.count("*").alias("n"))
-    tp = int(
-        cont.agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p")).collect()[0].p
-        or 0
-    )
-    pred_pairs = _pairs(joined, "pc")
-    true_pairs = _pairs(joined, "tc")
-    precision = tp / pred_pairs if pred_pairs else 1.0
-    recall = tp / true_pairs if true_pairs else 1.0
-    f1 = (
-        2 * precision * recall / (precision + recall)
-        if (precision + recall)
-        else 0.0
-    )
+    m = clustering_pair_metrics(predicted, truth).first()
     return {
-        "tp_pairs": tp,
-        "pred_pairs": pred_pairs,
-        "true_pairs": true_pairs,
-        "precision": precision,
-        "recall": recall,
-        "f1": f1,
+        "tp_pairs": m.tp,
+        "pred_pairs": m.pred_pairs,
+        "true_pairs": m.true_pairs,
+        "precision": m.precision,
+        "recall": m.recall,
+        "f1": m.f1,
     }

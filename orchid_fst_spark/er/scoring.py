@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.normalize import tokens
 from ..functions.vectorized import jaro_winkler_sim
+from ..util.storage import cut
 
 
 def score_pairs(pairs: DataFrame, a: str = "key_a", b: str = "key_b") -> DataFrame:
@@ -991,8 +992,9 @@ def greedy_one_to_one(
     ``(-round(s,6), key_a, key_b)`` — pinned by test.  Each round is
     the ``mutual_best_pairs`` plan (one Exchange on the node id + a
     node-sized self-join) plus two anti-joins to drop matched
-    endpoints; per-round frames are ``localCheckpoint``-cut so the
-    plan tree stays constant-size (the pagerank-loop lesson).
+    endpoints; per-round frames go through ``cut`` so the plan tree
+    stays constant-size (the pagerank-loop lesson), and the residual
+    graph's observed row count is the emptiness test (no extra job).
 
     After ``rounds`` rounds (expected O(log n) suffice; the loop exits
     early the moment the residual graph drains) any residual edges are
@@ -1001,7 +1003,7 @@ def greedy_one_to_one(
     ``key_a < key_b``, at most one row per node anywhere."""
     if rounds < 1:
         raise ValueError("need rounds >= 1")
-    e = (
+    e, n_e, _ = cut(
         scored.filter(F.col(a) != F.col(b))
         .select(
             F.least(F.col(a), F.col(b)).alias("key_a"),
@@ -1010,22 +1012,20 @@ def greedy_one_to_one(
         )
         .groupBy("key_a", "key_b")
         .agg(F.max("s").alias("s"))
-        .localCheckpoint(eager=True)
     )
     matched: list[DataFrame] = []
     for _ in range(rounds):
-        if e.isEmpty():
+        if not n_e:
             break
-        mb = mutual_best_pairs(e, score_col="s").localCheckpoint(eager=True)
+        mb = cut(mutual_best_pairs(e, score_col="s"))[0]
         matched.append(mb)
         gone = (
             mb.select(F.col("key_a").alias("node"))
             .unionAll(mb.select(F.col("key_b").alias("node")))
         )
-        e = (
+        e, n_e, _ = cut(
             e.join(gone, e["key_a"] == gone["node"], "left_anti")
             .join(gone, e["key_b"] == gone["node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
     if not matched:
         return e.select("key_a", "key_b", F.col("s").alias("score")).limit(0)
@@ -1063,8 +1063,9 @@ def group_linkage(
     record key; each round is TWO ``min_by`` aggregates keyed
     (ga, gb, member) + an aliased self-join for mutuality + two
     anti-joins to drop matched members — all shuffles on (group pair,
-    member), no windows; per-round ``localCheckpoint`` cuts keep the
-    plan constant-size, and the loop exits early when no pairs remain.
+    member), no windows; per-round ``cut`` calls keep the plan
+    constant-size, and the loop exits early when the remaining pairs'
+    observed row count is 0.
     Determinism: sims are 6dp-fixed to INTEGER micro-units before any
     sum (exact BIGINT addition in any order), ties break on the
     partner id, and the single float division happens once at the
@@ -1098,7 +1099,7 @@ def group_linkage(
     # canonicalize the group pair; (l, r) = the member on the lesser /
     # greater group's side; duplicate (l, r) pairs keep the best score
     swap = F.col("ga") > F.col("gb")
-    remaining = (
+    remaining, n_rem, _ = cut(
         ann.select(
             F.least("ga", "gb").alias("ga"),
             F.greatest("ga", "gb").alias("gb"),
@@ -1108,11 +1109,10 @@ def group_linkage(
         )
         .groupBy("ga", "gb", "l", "r")
         .agg(F.max("s6").alias("s6"))
-        .localCheckpoint(eager=True)
     )
     matched_frames: list[DataFrame] = []
     for _ in range(rounds):
-        if remaining.isEmpty():
+        if not n_rem:
             break
         best_l = remaining.groupBy("ga", "gb", "l").agg(
             F.min_by(
@@ -1127,42 +1127,38 @@ def group_linkage(
             ).alias("br")
         )
         L, R = best_l.alias("L"), best_r.alias("R")
-        mutual = (
+        mutual = cut(
             L.join(
                 R,
                 (F.col("L.ga") == F.col("R.ga"))
                 & (F.col("L.gb") == F.col("R.gb"))
                 & (F.col("L.bl.r") == F.col("R.r"))
                 & (F.col("R.br.l") == F.col("L.l")),
-            )
-            .select(
+            ).select(
                 F.col("L.ga").alias("ga"),
                 F.col("L.gb").alias("gb"),
                 F.col("L.l").alias("l"),
                 F.col("L.bl.r").alias("r"),
                 F.col("L.bl.s6").alias("s6"),
             )
-            .localCheckpoint(eager=True)
-        )
+        )[0]
         matched_frames.append(mutual)
         lgone = mutual.select("ga", "gb", F.col("l").alias("m"))
         rgone = mutual.select("ga", "gb", F.col("r").alias("m"))
-        remaining = (
+        remaining, n_rem, _ = cut(
             remaining.join(
                 lgone,
                 (remaining["ga"] == lgone["ga"])
                 & (remaining["gb"] == lgone["gb"])
                 & (remaining["l"] == lgone["m"]),
                 "left_anti",
-            )
-            .join(
+            ).join(
                 rgone,
                 (remaining["ga"] == rgone["ga"])
                 & (remaining["gb"] == rgone["gb"])
                 & (remaining["r"] == rgone["m"]),
                 "left_anti",
             )
-            .localCheckpoint(eager=True)
         )
     if not matched_frames:
         # limit(0) keeps the non-empty path's exact column types (a

@@ -208,34 +208,6 @@ def fuzzy_lookup_many(
 # fuzzy join / self-pairs — the scale path (candidate generation)
 # ---------------------------------------------------------------------------
 
-def _variants_df(
-    df: DataFrame,
-    key_col: str,
-    k: int,
-    max_len: int,
-    scheme: str = "full",
-    window: int = 16,
-) -> DataFrame:
-    """(key, sig: long) deletion-signature frame — fully JVM-side.
-
-    Built as a UNION of three flat explode+project stages (0, 1, 2
-    deletions) instead of one nested higher-order-function expression:
-    the nested form generated pathological whole-stage code (~2.5 min of
-    one-time Janino/JIT compilation per JVM, profiled at sf0.1); the
-    flat form compiles instantly and runs at the same steady-state speed.
-
-    May emit duplicate (key, sig) rows when a key has repeated chars —
-    harmless: candidate pair-gen filters self-pairs and dedups pairs."""
-    par = df.sparkSession.sparkContext.defaultParallelism * 2
-    src = (
-        df.select(F.col(key_col).alias("key"))
-        .filter(F.col(key_col).isNotNull())
-        .distinct()
-        .repartition(par)
-    )
-    return variant_sigs(src, "key", k, max_len, scheme=scheme, window=window)
-
-
 def variant_sigs(
     src: DataFrame,
     key_col: str,
@@ -265,6 +237,10 @@ def variant_sigs(
     share a window signature.  Coarser than 'full' (keys agreeing on a
     window collide), so pair precision is lower; the exact DP verify
     downstream restores correctness and ``sig_cap`` bounds hot windows.
+
+    Built as a union of flat explode+project stages (0, 1, 2 deletions):
+    one nested higher-order-function expression generated pathological
+    whole-stage code (~2.5 min of Janino compilation per JVM at sf0.1).
     """
     if k > 2:
         raise ValueError("deletion signatures support k <= 2")
@@ -573,7 +549,16 @@ def fuzzy_self_pairs(
 
     k routing: deletes carries k<=2, passjoin k<=8; a larger k warns and
     falls back to the length-banded brute-force block (complete for any
-    k — mirrors the reference CLI's -d 0..100 range)."""
+    k — mirrors the reference CLI's -d 0..100 range).
+
+    Completeness: signatures see each key's first ``max_len`` chars
+    only, and 'passjoin' is a pigeonhole over Levenshtein edits, so it
+    misses (a) with ``damerau``, OSA pairs whose transpositions straddle
+    segment boundaries (one transposition is two Levenshtein edits; two
+    of them can edit all k+1 segments), and (b) keys longer than
+    ``max_len`` whose truncated prefixes are more than k apart (a
+    2-char insertion at the front of a 120-char key, at max_len 96).
+    Plain Levenshtein on keys no longer than ``max_len`` is exact."""
     algo = _banded_routing(algo, k)
     # a hash collision only ever costs extra verify work after the
     # join-back, since pairs are DP-verified on the strings

@@ -173,7 +173,7 @@ def hits(
     def _cut(df: DataFrame, name: str, i: int) -> DataFrame:
         if not truncate:  # plan-audit knob, same contract as pagerank's
             return df
-        return cut(df, f"{checkpoint_dir}/hits_{name}_{i}" if checkpoint_dir else None)
+        return cut(df, f"{checkpoint_dir}/hits_{name}_{i}" if checkpoint_dir else None)[0]
 
     hubs = _cut(
         nodes.crossJoin(n_df).select(
@@ -323,7 +323,7 @@ def pagerank(
     def _cut(df: DataFrame, i: int) -> DataFrame:
         if not truncate:
             return df
-        return cut(df, f"{checkpoint_dir}/pagerank_rank_{i}" if checkpoint_dir else None)
+        return cut(df, f"{checkpoint_dir}/pagerank_rank_{i}" if checkpoint_dir else None)[0]
 
     ranks = _cut(
         nodes.crossJoin(n_df).select(

@@ -41,6 +41,15 @@ ceiling sits at 8, not 100.
                  length len_i(l) starting within the shift window of
                  p_i(l) — O(n·k²) rows/key, independent of len.
 
+  The argument counts Levenshtein edits on the first ``max_len`` chars,
+  and two holes follow.  An OSA transposition is two Levenshtein edits,
+  so under ``damerau`` two transpositions that straddle segment
+  boundaries edit all k+1 segments and the pair is never a candidate
+  (abc|def|ghi vs abd|ceg|fhi).  And keys longer than ``max_len`` are
+  segmented after truncation, so a pair within k whose truncated
+  prefixes are further apart (an insertion near the front shifts the
+  cut tail) is missed too.
+
   Keys shorter than n chars can't carry n segments; they fall into a
   single "short band" bucket (their partners are all short too, also
   banded).  Hot signatures — e.g. the segment that equals a shared URL

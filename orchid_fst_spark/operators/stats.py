@@ -370,8 +370,7 @@ def skew_profile(
     The north rule requires skew handled EXPLICITLY — this is the
     observability half: run it on a key before shuffling on that key,
     and feed what it reports into salting / cap decisions (the same
-    discipline as ``bucket_profile`` for the LSH caps and
-    ``blocking_metrics`` for the ER blocks).
+    discipline as ``bucket_profile`` for the LSH caps).
 
     Plan: one hash aggregate over the corpus (map-side combined), a
     one-row total, and a TakeOrderedAndProject cut — the key-count

@@ -20,7 +20,7 @@ an unreleasable leak.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
 _PERSISTED: list[DataFrame] = []
@@ -38,14 +38,28 @@ def maybe_persist(df: DataFrame, storage: str | None) -> DataFrame:
     return df
 
 
-def cut(df: DataFrame, path: str | None = None) -> DataFrame:
+def cut(df: DataFrame, path: str | None = None) -> tuple[DataFrame, int, int | None]:
     """Truncate ``df``'s lineage: a parquet round trip under ``path``
     (the cluster-reliable form; a later run can read it back), else
-    ``localCheckpoint(eager=True)``."""
+    ``localCheckpoint(eager=True)``.
+
+    Returns ``(frame, rows, digest)``: the row count and the
+    order-insensitive ``bit_xor(xxhash64(row))`` digest (None when
+    empty) that the materialising job itself observed through an
+    unnamed ``Observation`` -- reading them runs no further job."""
+    obs = Observation()
+    df = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(F.xxhash64(*[F.col(f"`{c}`") for c in df.columns])).alias("digest"),
+    )
     if path is None:
-        return df.localCheckpoint(eager=True)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+        out = df.localCheckpoint(eager=True)
+    else:
+        df.write.mode("overwrite").parquet(path)
+        out = df.sparkSession.read.parquet(path)
+    m = obs.get
+    return out, m["rows"], m["digest"]
 
 
 def release_persisted() -> int:
