@@ -640,9 +640,10 @@ def near_dedup(
       2. ``minhash_lsh_pairs`` over the exact representatives only
          (banded equi-join + integer-exact Jaccard verify, hot buckets
          capped),
-      3. alternating-star ``connected_components`` over the verified
-         pairs (O(log n) rounds, checkpointed lineage; ``RuntimeError``
-         if it has not converged after ``clustering._MAX_ROUNDS``),
+      3. ``connected_components`` over the verified pairs (labelled
+         on the driver within ``clustering._DRIVER_MAX_EDGES``, else
+         O(log n) checkpointed star rounds; ``RuntimeError`` if those
+         have not converged after ``clustering._MAX_ROUNDS``),
       4. every doc labeled with its cluster representative
          (lexicographic-min id through BOTH collapses).
 

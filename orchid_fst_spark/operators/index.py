@@ -34,10 +34,11 @@ Where the walk runs: on the driver, where the decoded shards stay
 resident and the result comes back as a local frame, so a lookup runs
 no Spark job.  The executors (one mapInPandas, each task reading only
 the shards it owns) take a lookup only where the driver would hold too
-much or be slower: pruned shards over the LRU budget (they would thrash
-a driver cache), a prefix/range whose pruned shards hold, or any result
-of, over ``_DRIVER_MAX_ROWS`` rows, or a batch of over
-``_DRIVER_MAX_QUERIES`` queries (the driver walk is single-threaded).
+much or be slower: pruned shards whose estimated decoded size is over
+the LRU budget (they would thrash a driver cache), a prefix/range whose
+pruned shards hold, or any result of, over ``_DRIVER_MAX_ROWS`` rows, or
+a batch of over ``_DRIVER_MAX_QUERIES`` queries (the driver walk is
+single-threaded).
 """
 
 from __future__ import annotations
@@ -63,6 +64,7 @@ from pyspark.sql.types import (
 from ..automata.lev_dfa import compile_dfa
 from ..automata.trie import FlatDag, Trie, dag_dfa, dag_enum, minimize
 from ..util.caches import LRUCache
+from ..util.storage import local_frame
 
 INDEX_SCHEMA = StructType(
     [
@@ -76,10 +78,18 @@ INDEX_SCHEMA = StructType(
 )
 
 # process-global decoded-shard cache (on the driver, and in each python
-# worker, where worker reuse keeps it warm across queries).  Budget ~256 MB
-# of *blob* bytes — decoded DAGs are larger, but blob size is the stable,
-# observable proxy.  The driver walks only pruned shard sets that fit it.
+# worker, where worker reuse keeps it warm across queries).  Budget 256 MB
+# of decoded arrays: each shard is charged its FlatDag arrays' nbytes.
+# The driver walks only pruned shard sets that fit it.
 _TRIE_CACHE = LRUCache(256 * 1024 * 1024)
+
+# Decoded FlatDag bytes per byte of shard file, rounded up: the blobs of
+# the perfbench 60k- and 480k-key dictionaries decode 5.6x larger
+# (355,323 -> 1,981,378 and 1,648,689 -> 9,208,510 bytes), and a shard
+# file adds parquet framing to its blob.  The metadata knows only the
+# file sizes, so the driver-walk check estimates a pruned shard set's
+# decoded size with it.
+_DECODED_PER_BLOB_BYTE = 6
 
 # Driver-vs-executor crossovers of warm lookups, local[4] on 4 vCPUs
 # (perfbench dictionaries of 60k and 480k keys, 32 shards).  Rows: a
@@ -139,7 +149,8 @@ def _decode_blob(blob: bytes, shard) -> tuple:
 
 
 def _shard_dag(shard: int, blob_md5: str, read_blob) -> tuple:
-    """(root, FlatDag, has_value) for one shard via the decoded-DAG LRU;
+    """(root, FlatDag, has_value) for one shard via the decoded-DAG LRU,
+    which charges the shard its decoded arrays' ``nbytes``;
     ``read_blob()`` supplies the blob bytes only on a miss, and a blob
     whose md5 is not the metadata's (the artifact was rebuilt in place
     after ``load_index``) is refused rather than cached under the old
@@ -155,7 +166,8 @@ def _shard_dag(shard: int, blob_md5: str, read_blob) -> tuple:
             "again"
         )
     obj = _decode_blob(blob, shard)
-    _TRIE_CACHE.put(blob_md5, obj, cost=len(blob))
+    nbytes = sum(getattr(obj[1], a).nbytes for a in FlatDag.__slots__)
+    _TRIE_CACHE.put(blob_md5, obj, cost=nbytes)
     return obj
 
 
@@ -280,16 +292,6 @@ def load_index(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(pdf, _META_SCHEMA)
 
 
-def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema) -> DataFrame:
-    """``pdf`` as a local relation (collecting it runs no job).  An empty
-    pandas frame would bypass Arrow and plan as an RDD scan, so the
-    empty result is a one-row frame cut to zero rows."""
-    if pdf.empty:
-        pdf = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
-        return spark.createDataFrame(pdf, schema).limit(0)
-    return spark.createDataFrame(pdf, schema)
-
-
 def _query(
     index_df: DataFrame,
     shard_filter,
@@ -303,8 +305,10 @@ def _query(
     ``schema``) over every surviving shard, sorted by the ``order``
     columns.  The pruned metadata rows are collected (no job on
     ``load_index``'s local relation).  The walk runs here, returning a
-    local frame, when their blob bytes fit the LRU, ``queries`` is at
-    most ``_DRIVER_MAX_QUERIES`` and the result has at most
+    local frame, when their decoded size fits the LRU budget (a budget
+    of decoded bytes; the metadata has only each shard's file size, so
+    the check charges ``blob_bytes * _DECODED_PER_BLOB_BYTE``),
+    ``queries`` is at most ``_DRIVER_MAX_QUERIES`` and the result has at most
     ``_DRIVER_MAX_ROWS`` rows; otherwise one mapInPandas runs it on the
     executors.  The row cap is checked before the walk for an
     enumeration (prefix/range: at most the pruned shards' ``n_keys``
@@ -325,7 +329,8 @@ def _query(
     rows = pruned.select(*cols, "blob_bytes", "n_keys").collect()
     if (
         queries <= _DRIVER_MAX_QUERIES
-        and sum(r.blob_bytes for r in rows) <= _TRIE_CACHE.budget
+        and sum(r.blob_bytes for r in rows) * _DECODED_PER_BLOB_BYTE
+        <= _TRIE_CACHE.budget
         and not (enumerates and sum(r.n_keys for r in rows) > _DRIVER_MAX_ROWS)
     ):
         hits = chain.from_iterable(walk(r[:3] for r in rows))
@@ -334,7 +339,7 @@ def _query(
             pdf = pd.DataFrame(hits, columns=names)
             if order:
                 pdf = pdf.sort_values(list(order), kind="stable", ignore_index=True)
-            return _local_frame(index_df.sparkSession, pdf, schema)
+            return local_frame(index_df.sparkSession, pdf, schema)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

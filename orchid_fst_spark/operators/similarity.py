@@ -733,7 +733,7 @@ def _keep_one_dedup(
     group, ONE hash shuffle, before any candidate generation so
     mega-duplicate clusters never reach it) -> ``pairs_fn(reps)``
     produces the verified (id_a, id_b) near-dup pairs over the exact
-    representatives -> alternating-star connected components -> every
+    representatives -> connected components -> every
     input row labeled ``(id, rep_id, keep)`` with keep = 1 iff the row
     is its cluster's representative.  The candidate stage is the ONLY
     thing that differs between ``embedding_dedup`` (LSH bands) and
@@ -806,9 +806,9 @@ def semantic_dedup(
          with the engine's standard observable-cap discipline; the
          vector rides the expansion as the payload so there is no
          join-back),
-      4. exact cosine verify at ``threshold``, alternating-star
-         ``connected_components`` (``RuntimeError`` if it has not
-         converged after ``clustering._MAX_ROUNDS``), and every input
+      4. exact cosine verify at ``threshold``,
+         ``connected_components`` (``RuntimeError`` if its star rounds
+         have not converged after ``clustering._MAX_ROUNDS``), and every input
          row labeled ``(id, rep_id, keep)`` with keep=1 iff the row is
          its cluster's representative.
 
@@ -867,7 +867,7 @@ def embedding_dedup(
       2. ``cosine_lsh_pairs`` over the exact representatives only
          (hyperplane-signature band equi-join + exact cosine verify,
          hot buckets capped),
-      3. alternating-star connected components over the verified pairs,
+      3. connected components over the verified pairs,
       4. every input vector labeled with its cluster representative
          (lexicographic-min id through BOTH collapses).
 

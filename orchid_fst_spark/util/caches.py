@@ -60,8 +60,8 @@ class LRUCache(_StatsMixin):
 
     def put(self, key, value, cost: int | None = None) -> None:
         """``cost`` overrides the default byte estimate — callers caching
-        decoded objects charge the encoded size they can observe (e.g.
-        the pickled blob length in operators.index)."""
+        decoded objects charge what they hold (e.g. operators.index
+        charges a decoded shard its arrays' ``nbytes``)."""
         if key in self.data:
             old_cost = self.data[key][1]
             self.size_bytes -= old_cost

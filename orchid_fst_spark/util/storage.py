@@ -1,5 +1,6 @@
-"""Session-lifetime hygiene for operator-internal persists, and the
-one lineage cut the iterative operators share (:func:`cut`).
+"""Session-lifetime hygiene for operator-internal persists, the one
+lineage cut the iterative operators share (:func:`cut`), and the one
+way a driver-computed result becomes a frame (:func:`local_frame`).
 
 The dedup/similarity operators persist intermediates they scan more
 than once (band rows, signature frames, the mapped id frame of the
@@ -20,7 +21,8 @@ an unreleasable leak.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 _PERSISTED: list[DataFrame] = []
@@ -60,6 +62,16 @@ def cut(df: DataFrame, path: str | None = None) -> tuple[DataFrame, int, int | N
         out = df.sparkSession.read.parquet(path)
     m = obs.get
     return out, m["rows"], m["digest"]
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema) -> DataFrame:
+    """``pdf`` as a local relation (collecting it runs no job).  An empty
+    pandas frame would bypass Arrow and plan as an RDD scan, so the
+    empty result is a one-row frame cut to zero rows."""
+    if pdf.empty:
+        pdf = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
+        return spark.createDataFrame(pdf, schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
 
 
 def release_persisted() -> int:

@@ -171,12 +171,14 @@ def main() -> None:
     add(
         "End-to-end keep-one text dedup (`operators.dedup.near_dedup`)",
         "Final labeling plan: the persisted mapped frame (exact collapse "
-        "= ONE null-safe hash shuffle) left-joins the checkpointed "
-        "connected-components labels.  At execution time only the "
-        "InMemoryTableScan and the checkpoint scan run — the long "
-        "InMemoryRelation subtree printed below is the cached plan "
-        "echoed for transparency, and the CC iterations never appear "
-        "at all (lineage truncated per round at the checkpoint).  The "
+        "= ONE null-safe hash shuffle) left-joins the connected-components "
+        "labels — here a LocalTableScan, because a graph within "
+        "`clustering._DRIVER_MAX_EDGES` canonical edges is labelled on "
+        "the driver (above it, the last star round's checkpoint scan).  "
+        "At execution time only the InMemoryTableScan and the labels' "
+        "scan run — the long InMemoryRelation subtree printed below is "
+        "the cached plan echoed for transparency, and no CC work appears "
+        "at all (the edges were cut and labelled before planning).  The "
         "LSH/verify stages are the already-asserted minhash_lsh_pairs "
         "plan.  Every input row survives to the output (NULL texts "
         "included).",
@@ -187,10 +189,11 @@ def main() -> None:
         "End-to-end keep-one embedding dedup (`operators.similarity.embedding_dedup`)",
         "Vector twin of near_dedup: exact collapse groups on the raw "
         "vector (one shuffle), cosine-LSH pairs over representatives "
-        "only, checkpointed CC, NULL-vec rows re-enter as singleton "
+        "only, CC labels as a local relation (driver-labelled within "
+        "the edge budget), NULL-vec rows re-enter as singleton "
         "keeps via a union.  Execution reads the InMemoryTableScan + "
-        "checkpoint scan (the printed InMemoryRelation subtree is the "
-        "cached plan echoed, not re-executed).",
+        "the labels' LocalTableScan (the printed InMemoryRelation "
+        "subtree is the cached plan echoed, not re-executed).",
         embedding_dedup(emb, "vec_id", "embedding", 0.8, dim=64),
         must_contain=("InMemoryTableScan", "Union"),
     )

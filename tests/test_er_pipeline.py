@@ -15,13 +15,32 @@ from orchid_fst_spark.sources.fixtures import gen_pages
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 #: Spark jobs one ``resolve`` call may run on ``pages_and_truth``:
-#: measured 39 (once 40 of 8 runs) at local[4], 8 shuffle partitions
-RESOLVE_JOB_BUDGET = 40
+#: measured 21 in 8 of 8 calls at local[4], 8 shuffle partitions, plus
+#: the one job by which repeated calls were seen to differ
+RESOLVE_JOB_BUDGET = 22
 
 #: Spark jobs ``connected_components`` plus a collect may run on the
-#: shuffled 64-node path: measured 52 in 6 of 6 runs at local[4], 8
-#: shuffle partitions
-CC_JOB_BUDGET = 52
+#: shuffled 64-node path, finished on the driver (CC_JOB_BUDGET: the
+#: round-0 cut's shuffle and checkpoint jobs, and the collect; 3 in 3 of
+#: 3 calls) and in star rounds with the driver budget at 0
+#: (CC_SPARK_JOB_BUDGET: 52 in 6 of 6), at local[4], 8 shuffle partitions
+CC_JOB_BUDGET = 3
+CC_SPARK_JOB_BUDGET = 52
+
+
+@pytest.fixture
+def cc_budgets(monkeypatch):
+    """Iterate a connected-components check over both sides of the
+    driver budget: the default (small graphs finish on the driver),
+    then 0 (every graph takes the star rounds)."""
+    from orchid_fst_spark.er import clustering
+
+    def budgets():
+        for budget in (clustering._DRIVER_MAX_EDGES, 0):
+            monkeypatch.setattr(clustering, "_DRIVER_MAX_EDGES", budget)
+            yield budget
+
+    return budgets
 
 
 @pytest.fixture(scope="module")
@@ -32,28 +51,74 @@ def pages_and_truth(spark):
     return pdf, tdf
 
 
-def test_connected_components_chain_and_star(spark):
+def test_connected_components_chain_and_star(spark, cc_budgets):
     # chain a-b-c-d plus isolated pair x-y: CC must label by min node
     edges = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y"), ("d", "d")],
         "src string, dst string",
     )
-    got = {
-        (r.node, r.component) for r in connected_components(edges).collect()
-    }
-    assert got == {
-        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"), ("x", "x"), ("y", "x"),
-    }
+    for budget in cc_budgets():
+        got = {
+            (r.node, r.component) for r in connected_components(edges).collect()
+        }
+        assert got == {
+            ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"), ("x", "x"), ("y", "x"),
+        }, budget
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, cc_budgets):
     n = 64
     edges = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n)], "src string, dst string"
     )
-    comps = connected_components(edges).collect()
-    assert {r.component for r in comps} == {"n000"}
-    assert len(comps) == n + 1
+    for budget in cc_budgets():
+        comps = connected_components(edges).collect()
+        assert {r.component for r in comps} == {"n000"}, budget
+        assert len(comps) == n + 1, budget
+
+
+def test_connected_components_bigint_ids(spark, cc_budgets):
+    # dedup passes bigint ids: the node column keeps the input's type,
+    # and numeric order (not string order: 9 < 10) picks the label
+    edges = spark.createDataFrame(
+        [(10, 9), (9, 100), (7, 7), (-3, 2**40), (2**40, 5)], "src bigint, dst bigint"
+    )
+    for budget in cc_budgets():
+        out = connected_components(edges)
+        assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+        got = {(r.node, r.component) for r in out.collect()}
+        assert got == {
+            (9, 9), (10, 9), (100, 9), (-3, -3), (2**40, -3), (5, -3),
+        }, budget
+
+
+def test_connected_components_code_point_order(spark, cc_budgets):
+    # U+FFFF sorts below U+1F600 by code point (Spark's UTF-8 byte
+    # order) but above it in UTF-16 units; both paths pick U+FFFF
+    hi, astral = "a\uffff", "a\U0001F600"
+    edges = spark.createDataFrame(
+        [(astral, hi), (astral, "b"), ("c", astral + "x")], "src string, dst string"
+    )
+    for budget in cc_budgets():
+        got = {r.node: r.component for r in connected_components(edges).collect()}
+        assert got == {v: hi for v in (hi, astral, "b")} | {
+            "c": astral + "x", astral + "x": astral + "x"
+        }, budget
+
+
+def test_connected_components_long_shuffled_path(spark):
+    # the driver finish on one shuffled 12,000-node path: pointer
+    # jumping has to collapse a component whose ids are in random order
+    # along it (the case plain min-label propagation needs O(length)
+    # sweeps for)
+    import random
+
+    ids = [f"p{i:05d}" for i in range(12_000)]
+    random.Random(11).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+    rows = connected_components(edges).collect()
+    assert len(rows) == len(ids)
+    assert {r.component for r in rows} == {"p00000"}
 
 
 def _shuffled_path_edges(spark):
@@ -67,30 +132,36 @@ def _shuffled_path_edges(spark):
 def test_connected_components_unconverged_raises(spark, monkeypatch):
     # a shuffled 64-node path needs several star rounds; one round
     # leaves the edge set changing, and the labels read off it would
-    # split the single component, so the call must fail instead
+    # split the single component, so the call must fail instead (with
+    # the driver budget at 0, or the path would finish on the driver)
     from orchid_fst_spark.er import clustering
 
     edges = _shuffled_path_edges(spark)
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(clustering, "_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="after 1 rounds"):
         connected_components(edges)
 
 
-def test_connected_components_job_budget(spark):
-    # one job group around the call and its collect: each star round
-    # is its cut's jobs only (convergence reads the rows and digest the
-    # cut observed), and the labels need no closing aggregate
+def test_connected_components_job_budget(spark, cc_budgets):
+    # one job group around the call and its collect.  Under the driver
+    # budget: the round-0 cut and the edges' collect, and the labels
+    # come back as a local relation.  With the budget at 0: each star
+    # round is its cut's jobs only (convergence reads the rows and
+    # digest the cut observed), and the labels need no closing aggregate
     edges = _shuffled_path_edges(spark).localCheckpoint(eager=True)
     sc = spark.sparkContext
-    sc.setJobGroup("test_cc_job_budget", "connected_components")
-    try:
-        rows = connected_components(edges).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("test_cc_job_budget"))
-    assert n_jobs <= CC_JOB_BUDGET, n_jobs
-    assert {r.component for r in rows} == {"n000"} and len(rows) == 64
+    for budget, limit in zip(cc_budgets(), (CC_JOB_BUDGET, CC_SPARK_JOB_BUDGET)):
+        group = f"test_cc_job_budget_{budget}"
+        sc.setJobGroup(group, "connected_components")
+        try:
+            rows = connected_components(edges).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= limit, (budget, n_jobs)
+        assert {r.component for r in rows} == {"n000"} and len(rows) == 64
 
 
 def _random_graph(seed: int):
@@ -134,15 +205,17 @@ def _random_graph(seed: int):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_connected_components_matches_union_find(spark, tmp_path, seed):
+def test_connected_components_matches_union_find(spark, tmp_path, seed, cc_budgets):
     # exactly one row per endpoint, labelled by its component's
-    # lexicographic minimum; the second run takes the parquet cut path
+    # lexicographic minimum, on both sides of the driver budget; the
+    # second run of each takes the parquet cut path
     edges, expected = _random_graph(seed)
     df = spark.createDataFrame(edges, "src string, dst string")
-    for ck in (None, str(tmp_path / "cc")):
-        rows = connected_components(df, checkpoint_dir=ck).collect()
-        assert len(rows) == len(expected)
-        assert {r.node: r.component for r in rows} == expected
+    for budget in cc_budgets():
+        for ck in (None, str(tmp_path / f"cc{budget}")):
+            rows = connected_components(df, checkpoint_dir=ck).collect()
+            assert len(rows) == len(expected), (budget, ck)
+            assert {r.node: r.component for r in rows} == expected, (budget, ck)
 
 
 def test_star_clusters_hand_graph(spark):

@@ -165,6 +165,23 @@ def test_shard_cache_hits():
     assert a[0] == root and not a[2]
 
 
+def test_shard_cache_charges_decoded_bytes(index_df, monkeypatch):
+    """The LRU charges each decoded shard its arrays' nbytes (not its
+    blob's length), so its budget bounds what it holds."""
+    from orchid_fst_spark.automata.trie import FlatDag
+    from orchid_fst_spark.operators.index import _read_shard_blob, _shard_dag
+
+    cache = LRUCache(_TRIE_CACHE.budget)
+    monkeypatch.setattr(index_mod, "_TRIE_CACHE", cache)
+    flats = [
+        _shard_dag(r.shard, r.blob_md5, lambda r=r: _read_shard_blob(r.index_path, r.shard))[1]
+        for r in index_df.collect()
+    ]
+    assert len(cache) == len(flats) == 8
+    nbytes = sum(getattr(f, a).nbytes for f in flats for a in FlatDag.__slots__)
+    assert cache.size_bytes == nbytes
+
+
 def test_decode_blob_rejects_unknown_format():
     """Only the 'flat1' shard format decodes; anything else (e.g. the
     retired pickled list-of-dicts node table) names the shard and asks
