@@ -25,18 +25,19 @@ Node ids are kept as their natural values (urls / norm_keys / bigint
 ids) and compared in Spark's order — no id re-mapping pass,
 deterministic cluster representatives (min key in the component), no
 64-bit hash collision risk at 10^12 nodes.  Both paths give the same
-labels: numpy sorts strings by code point, which is Spark's UTF-8
+labels: Arrow sorts strings by their UTF-8 bytes, which is Spark's
 binary order.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..util.storage import cut, local_frame
+from ..util.storage import cut
 
 #: star rounds before ``connected_components`` gives up; O(log n)
 #: rounds suffice (a shuffled 64-node path converges in 6)
@@ -150,42 +151,48 @@ def connected_components(
 
 def _driver_components(e: DataFrame) -> DataFrame:
     """Label a canonical edge set on the driver: collect it (Arrow),
-    number its nodes in sorted order (``np.unique``), then hook roots
-    and jump pointers until every edge's endpoints share a root.
+    number its nodes in sorted order (``dictionary_encode``, then the
+    rank of each dictionary entry under ``sort_indices``), then hook
+    roots and jump pointers until every edge's endpoints share a root.
 
     ``parent[v] <= v`` always holds and stays inside v's component: a
     root is only ever hooked, through ``np.minimum.at``, to the smaller
     root of an edge's other endpoint, and pointer jumping only follows
     parents.  At the fixpoint a component has one root, and its minimum
     node, which has no smaller parent, is that root.  Node numbers
-    follow the ids' sort order: for strings Python's code-point order,
-    which is Spark's UTF-8 binary order, so the labels equal the star
-    rounds' lexicographic minimum."""
-    pdf = e.toPandas()
-    m = len(pdf)
-    nodes, idx = np.unique(
-        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
-        return_inverse=True,
+    follow the ids' sort order: for strings Arrow's byte order, which
+    is Spark's UTF-8 binary order, so the labels equal the star rounds'
+    lexicographic minimum.  The ids stay Arrow arrays throughout (no
+    Python object per id)."""
+    tbl = e.toArrow()
+    m = tbl.num_rows
+    ends = (
+        pa.chunked_array(tbl["src"].chunks + tbl["dst"].chunks, tbl["src"].type)
+        .combine_chunks()
+        .dictionary_encode()
     )
+    order = pc.sort_indices(ends.dictionary).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    idx = rank[ends.indices.to_numpy()]
+    nodes = ends.dictionary.take(order)
     a, b = idx[:m], idx[m:]
     parent = np.arange(len(nodes))
     while True:
-        pa, pb = parent[a], parent[b]
-        split = pa != pb
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
         if not split.any():
             break
-        pa, pb = pa[split], pb[split]
-        np.minimum.at(parent, np.maximum(pa, pb), np.minimum(pa, pb))
+        ra, rb = ra[split], rb[split]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
         jumped = parent[parent]
         while not np.array_equal(jumped, parent):
             parent, jumped = jumped, jumped[jumped]
     t = e.schema["src"].dataType
     schema = StructType([StructField("node", t), StructField("component", t)])
-    return local_frame(
-        e.sparkSession,
-        pd.DataFrame({"node": nodes, "component": nodes[parent]}),
-        schema,
-    )
+    labels = pa.table({"node": nodes, "component": nodes.take(parent)})
+    # a LocalRelation, empty or not (an empty pandas frame would not be)
+    return e.sparkSession.createDataFrame(labels, schema)
 
 
 def star_clusters(

@@ -6,9 +6,9 @@ structure grows, queries keep serving (fst.h:16-22); this module is the
 ER-pipeline form of that contract for the batch world (the streaming
 twin is ``streaming/stateful.streaming_fuzzy_match``).
 
-Semantics — exactly transitive, pinned by test: because the blocking
-candidate generators are complete (pigeonhole), the edge set of a full
-re-run over old ∪ new equals
+Semantics — exactly transitive when blocking is complete, pinned by
+test.  If every key pair within distance k is a blocking candidate, the
+edge set of a full re-run over old ∪ new equals
 
     old-old edges (already folded into ``resolved``)
   ∪ new-new edges (self pairs over the batch)
@@ -24,6 +24,15 @@ re-run's components AND labels:
 including the case where a new record BRIDGES two old clusters (both
 collapse into one component; all their members relabel to the smaller
 id).
+
+Blocking is complete when no key is longer than ``max_len``, no
+signature is shared by more than ``sig_cap`` keys (the caps count each
+side here, but old ∪ new in the full run), and no pair within k needs
+what passjoin's pigeonhole cannot see: it counts Levenshtein edits, so
+with the default ``algo="passjoin"`` and ``damerau=True`` an OSA pair
+whose two transpositions straddle segment boundaries is never a
+candidate (the strict xfails in tests/test_dictionary.py).  Outside
+these conditions the two results can differ.
 
 Scale shape: the old corpus is touched exactly twice — once as the
 fuzzy-join right side (distinct norm_keys through segment-signature

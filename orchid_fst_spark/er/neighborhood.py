@@ -28,8 +28,8 @@ Scale design (100 TB):
   (~b rows per bucket -> O(n*w) join work, no theta-join, no cartesian);
   bucket ids use true integral division (the recorded >2^53 double-div
   trap);
-* block-graph blocks are capped BEFORE the pair explode with the
-  constant-memory ``count() over (partition by block)`` idiom (same
+* block-graph blocks are capped BEFORE the pair explode with
+  ``dedup.drop_hot``'s ``count() over (partition by block)`` (same
   Exchange-reusing plan as dedup.grouped_bucket_pairs), so a degenerate
   block can never materialize O(cap^2) aggregation state;
 * both pruning rules compare with *integer cross-multiplication*
@@ -40,6 +40,8 @@ Scale design (100 TB):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..operators.dedup import drop_hot
 
 
 def ranked_records(
@@ -186,7 +188,7 @@ def block_graph(
     the pair co-occurs in (Papadakis' common-blocks scheme).
 
     Blocks larger than ``block_cap`` are dropped BEFORE the pair explode
-    via the constant-memory window-count idiom (the cap is the standard
+    by ``drop_hot``'s spillable window count (the cap is the standard
     meta-blocking block-purging step: an over-cap block carries almost
     no discriminative weight and quadratic cost).  One Exchange for the
     window+join on ``block`` (reused), one for the pair aggregation.
@@ -194,10 +196,7 @@ def block_graph(
     asg = blocks.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("block")
     ).distinct()
-    n_in_block = F.count("*").over(Window.partitionBy("block"))
-    capped = asg.withColumn("_n", n_in_block).filter(
-        F.col("_n") <= block_cap
-    ).drop("_n")
+    capped = drop_hot(asg, "block", block_cap)
     a = capped.select(F.col("block"), F.col("id").alias("id_a"))
     bside = capped.select(F.col("block"), F.col("id").alias("id_b"))
     return (
@@ -472,13 +471,7 @@ def grid_blocking_pairs(
     pts = pts.withColumn("cx", F.floor(F.col("x") / cell)).withColumn(
         "cy", F.floor(F.col("y") / cell)
     )
-    capped = (
-        pts.withColumn(
-            "_n", F.count("*").over(Window.partitionBy("cx", "cy"))
-        )
-        .filter(F.col("_n") <= cell_cap)
-        .drop("_n")
-    )
+    capped = drop_hot(pts, ["cx", "cy"], cell_cap)
     home = capped.select(
         F.col("_id").alias("id_a"),
         F.col("x").alias("xa"),
@@ -674,13 +667,8 @@ def learn_blocking_scheme(
         .filter(F.col("bk").isNotNull())
         .distinct()
     )
-    capped = (
-        keyed.withColumn(
-            "_n", F.count("*").over(Window.partitionBy("rule", "bk"))
-        )
-        .filter(F.col("_n") <= block_cap)
-        .drop("_n")
-        .localCheckpoint(eager=True)
+    capped = drop_hot(keyed, ["rule", "bk"], block_cap).localCheckpoint(
+        eager=True
     )
 
     ncomp = F.call_function("div", F.col("n") * (F.col("n") - 1), F.lit(2))

@@ -36,8 +36,10 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.dedup import drop_hot
 
 __all__ = [
     "clk_encode",
@@ -262,7 +264,7 @@ def clk_hlsh_pairs(
     Plan: one m_bits/64-row-per-id aggregate builds the packed word
     map; band keys are pure JVM bit arithmetic on map lookups; each
     band is an equi-join on (band, key) with over-``bucket_cap``
-    buckets purged by the constant-memory window-count idiom (a
+    buckets purged by ``drop_hot``'s spillable window count (a
     degenerate band key — e.g. all-zero positions over a skewed corpus
     — is capped, observable, and never quadratic); the verify joins
     candidate pairs back to the long-format words on (id, word).
@@ -300,12 +302,7 @@ def clk_hlsh_pairs(
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
-    n_in_bucket = F.count("*").over(Window.partitionBy("band", "bkey"))
-    capped = (
-        keyed.withColumn("_n", n_in_bucket)
-        .filter(F.col("_n") <= bucket_cap)
-        .drop("_n")
-    )
+    capped = drop_hot(keyed, ["band", "bkey"], bucket_cap)
     left = capped.select("band", "bkey", F.col("id").alias("id_a"))
     right = capped.select("band", "bkey", F.col("id").alias("id_b"))
     cand = (

@@ -48,9 +48,10 @@ every round plans a constant-size tree.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import drop_hot
 from .clustering import connected_components
 
 
@@ -75,18 +76,10 @@ def _overlap_pairs(vals: DataFrame, value_cap: int | None) -> DataFrame:
     """Distinct (e1 < e2) entity pairs sharing at least one value.
 
     ``value_cap`` drops values shared by more than cap entities BEFORE
-    the self-join (count-window then filter — the constant-memory cap
-    idiom; the window's hash partitioning is reused by the join build).
+    the self-join (``drop_hot``; the window's hash partitioning is
+    reused by the join build).
     """
-    v = vals
-    if value_cap is not None:
-        v = (
-            v.withColumn(
-                "_nv", F.count("*").over(Window.partitionBy("val"))
-            )
-            .filter(F.col("_nv") <= value_cap)
-            .drop("_nv")
-        )
+    v = vals if value_cap is None else drop_hot(vals, "val", value_cap)
     a = v.select(F.col("ent").alias("e1"), "val")
     b = v.select(F.col("ent").alias("e2"), "val")
     return (

@@ -49,43 +49,47 @@ def bucket_profile(stacked: DataFrame, bucket_cap: int) -> DataFrame:
     )
 
 
+def drop_hot(df: DataFrame, cols: str | list[str], cap: int) -> DataFrame:
+    """``df`` minus the rows whose key ``cols`` (one or more columns)
+    occurs more than ``cap`` times: the one hot-key cap every blocking
+    join applies before its O(n²) equi-join or in-group pair expansion
+    (an observable recall trade; the ``*_metrics`` profiles report the
+    dropped mass).
+
+    The count is ``count(1) over (partition by cols)``: WindowExec's
+    per-key buffer is an UnsafeExternalSorter that SPILLS, so a
+    10M-row boilerplate key costs disk, never an OOM; the input is
+    evaluated once; and the window's hash partitioning on ``cols`` is
+    what a following join or groupBy on the same key requires, so
+    EnsureRequirements adds no second Exchange for it.  Null keys count
+    as one key, so callers cap hashes or equi-join on the key next
+    (which drops nulls anyway)."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(cols))
+    return df.withColumn("_hot_n", n).filter(F.col("_hot_n") <= cap).drop("_hot_n")
+
+
 def grouped_bucket_pairs(
     stacked: DataFrame,
     bucket_cap: int,
     payload_col: str | None = None,
     distinct: bool = True,
-    precap: bool = True,
 ) -> DataFrame:
     """Candidate pairs from an (id[, payload], bucket) LSH band frame in
-    ONE shuffle: window-count cap -> groupBy(bucket) -> collect members
-    -> in-group pair expansion.  Replaces the previous three-stage
-    pipeline (hot-bucket count shuffle + broadcast anti-join + two-sided
-    band self-join), whose extra stages cost ~5 s of AQE driver
-    re-planning per query on this pipeline; the band frame is now
-    scanned exactly once, so callers no longer persist it.
+    ONE shuffle: ``drop_hot`` cap -> groupBy(bucket) -> collect members
+    -> in-group pair expansion.  The band frame is scanned exactly
+    once, so callers do not persist it.
 
     Cap semantics: buckets with more than ``bucket_cap`` members
-    contribute nothing.  The default
-    (``precap=True``) enforces the cap with a ``count() over
-    (partition by bucket)`` window BEFORE the collect: WindowExec's
-    per-group buffer is an UnsafeExternalSorter that SPILLS, and the
-    filtered rows never reach the collect_list aggregation buffer (which
-    cannot spill a single group's array) — so a near-identical 10M-member
-    boilerplate cluster costs disk, never an OOM.  The window's
-    hash-partitioning on ``bucket`` is exactly what the following
-    groupBy requires, so EnsureRequirements elides the second Exchange:
-    still ONE shuffle end-to-end (plan pinned in
-    tests/test_dedup_similarity.py).  ``precap=False`` skips the window
-    (and its partition-local sort) for callers that KNOW the bucket
-    domain is bounded — e.g. after exact-dup collapse on short keys —
-    accepting an aggregation buffer of ~8-16 bytes x the hottest
-    bucket's true size.  Measured sf0.1 cost of the default window cap:
-    within VM noise of the legacy in-buffer cap (minhash/simhash/cosine
-    LSH all within ±0.4 s of their r03 numbers).  The expansion itself is two
-    successive Generates — posexplode of the member array, then explode
-    of its position-sliced tail — so pairs stream through the pipeline
-    row-by-row (never one O(cap**2) array), each array referenced
-    outside any lambda (the CollapseProject HOF re-inline trap).
+    contribute nothing.  ``drop_hot`` enforces the cap BEFORE the
+    collect, so over-cap rows never reach the collect_list aggregation
+    buffer (which cannot spill a single group's array), and its
+    hash-partitioning on ``bucket`` is reused by the groupBy: still ONE
+    shuffle end-to-end (plan pinned in tests/test_dedup_similarity.py).
+    The expansion itself is two successive Generates — posexplode of
+    the member array, then explode of its position-sliced tail — so
+    pairs stream through the pipeline row-by-row (never one O(cap**2)
+    array), each array referenced outside any lambda (the
+    CollapseProject HOF re-inline trap).
 
     Returns (id_a, id_b) with id_a < id_b, plus ``<payload>_a`` /
     ``<payload>_b`` when ``payload_col`` is given (the payload rides
@@ -95,20 +99,14 @@ def grouped_bucket_pairs(
     ``id_a < id_b`` join predicate).  ``distinct=False`` skips the
     final pair dedup for callers that filter (e.g. Hamming-verify)
     first."""
-    if precap:
-        w = Window.partitionBy("bucket")
-        stacked = (
-            stacked.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= bucket_cap)
-            .drop("_bn")
-        )
+    stacked = drop_hot(stacked, "bucket", bucket_cap)
     member = (
         F.struct(F.col("id"), F.col(payload_col)) if payload_col else F.col("id")
     )
     grouped = (
         stacked.groupBy("bucket")
         .agg(F.collect_list(member).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= bucket_cap))
+        .filter(F.size("ms") >= 2)
     )
     e1 = grouped.select("ms", F.posexplode("ms").alias("i", "a"))
     e2 = e1.select(
@@ -210,13 +208,7 @@ def ngram_jaccard_pairs(
     )
     # union denominators from UNCAPPED sizes (true Jaccard for survivors)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    hot = (
-        sh.groupBy("shh")
-        .agg(F.count("*").alias("sh_df"))
-        .filter(F.col("sh_df") > df_cap)
-        .select("shh")
-    )
-    shc = sh.join(F.broadcast(hot), "shh", "left_anti")
+    shc = drop_hot(sh, "shh", df_cap)
     a = shc.select(F.col("id").alias("id_a"), "shh")
     b = shc.select(F.col("id").alias("id_b"), "shh")
     inter = (
@@ -283,13 +275,7 @@ def containment_pairs(
         storage,
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    hot = (
-        sh.groupBy("shh")
-        .agg(F.count("*").alias("sh_df"))
-        .filter(F.col("sh_df") > df_cap)
-        .select("shh")
-    )
-    shc = sh.join(F.broadcast(hot), "shh", "left_anti")
+    shc = drop_hot(sh, "shh", df_cap)
     a = shc.select(F.col("id").alias("id_a"), "shh")
     b = shc.select(F.col("id").alias("id_b"), "shh")
     inter = (
@@ -415,13 +401,7 @@ def winnow_pairs(
     pairs sharing >= ``min_shared`` selected hashes.  Returns
     (id_a, id_b, shared) — integer-exact."""
     fps = winnow_fingerprints(df, id_col, text_col, k, w)
-    hot = (
-        fps.groupBy("fp")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > df_cap)
-        .select("fp")
-    )
-    ok = fps.join(F.broadcast(hot), "fp", "left_anti")
+    ok = drop_hot(fps, "fp", df_cap)
     a = ok.select(F.col("id").alias("id_a"), "fp")
     b = ok.select(F.col("id").alias("id_b"), "fp")
     return (
@@ -496,10 +476,8 @@ def minhash_lsh_pairs(
     mass is observable via ``minhash_band_metrics``."""
     sh = _maybe_persist(shingle_df(df, id_col, text_col, n), storage)
     # the band frame is scanned exactly once by the grouped pair
-    # expansion (cap + pairs in one shuffle — the previous count
-    # shuffle + anti-join + two-sided self-join cost ~5 s of extra AQE
-    # stage re-planning at sf0.1), so it is NOT persisted; only the
-    # shingle frame is (re-scanned by the exact-Jaccard verify below)
+    # expansion (cap + pairs in one shuffle), so it is NOT persisted;
+    # only the shingle frame is (re-scanned by the exact-Jaccard verify)
     cand = grouped_bucket_pairs(
         _minhash_stacked(sh, num_hashes, bands), bucket_cap
     )
@@ -564,8 +542,7 @@ def minhash_lsh_join(
     union-then-self-pairs.
 
     Scale design: each side's band frame is capped independently at
-    ``bucket_cap`` with the constant-memory window-count idiom BEFORE
-    the bucket equi-join, so a boilerplate bucket hot on either side
+    ``bucket_cap`` with ``drop_hot`` BEFORE the bucket equi-join, so a boilerplate bucket hot on either side
     contributes at most cap x cap join rows and the aggregation buffers
     never hold an uncapped group.  At web scale the new batch is tiny
     next to the corpus; no broadcast hint on purpose — AQE broadcasts
@@ -578,12 +555,7 @@ def minhash_lsh_join(
 
     def _capped_bands(sh: DataFrame) -> DataFrame:
         stacked = _minhash_stacked(sh, num_hashes, bands)
-        w = Window.partitionBy("bucket")
-        return (
-            stacked.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bn") <= bucket_cap)
-            .drop("_bn")
-        )
+        return drop_hot(stacked, "bucket", bucket_cap)
 
     cand = (
         _capped_bands(sh_new)

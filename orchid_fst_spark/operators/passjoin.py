@@ -66,6 +66,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .dedup import drop_hot
+
 MAX_K = 8  # beyond k=8 segment blocking degenerates (see cost model above)
 
 
@@ -185,15 +187,8 @@ def passjoin_probe(keyed: DataFrame, k: int, max_len: int) -> DataFrame:
 def _capped_index(keyed: DataFrame, k: int, max_len: int, sig_cap: int) -> DataFrame:
     """``passjoin_index`` minus the entries of hot signatures (> sig_cap
     keys — e.g. a segment equal to a crawl-dominating host prefix),
-    dropped before the join."""
-    idx = passjoin_index(keyed, k, max_len)
-    hot = (
-        idx.groupBy("sig")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > sig_cap)
-        .select("sig")
-    )
-    return idx.join(F.broadcast(hot), "sig", "left_anti")
+    dropped by ``drop_hot`` before the join."""
+    return drop_hot(passjoin_index(keyed, k, max_len), "sig", sig_cap)
 
 
 def passjoin_self_candidates(

@@ -116,6 +116,7 @@ def incremental_er(
                 cross = fuzzy_join(
                     new_k, old_k, "norm_key", "norm_key",
                     k=k, damerau=damerau, max_len=max_len, algo="passjoin",
+                    sig_cap=sig_cap, assume_unique=True,
                 ).filter(F.col("key_a") != F.col("key_b"))
                 edges = within.unionAll(
                     cross.select(

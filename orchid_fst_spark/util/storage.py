@@ -1,6 +1,6 @@
 """Session-lifetime hygiene for operator-internal persists, the one
 lineage cut the iterative operators share (:func:`cut`), and the one
-way a driver-computed result becomes a frame (:func:`local_frame`).
+way a driver-computed pandas result becomes a frame (:func:`local_frame`).
 
 The dedup/similarity operators persist intermediates they scan more
 than once (band rows, signature frames, the mapped id frame of the

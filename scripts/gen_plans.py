@@ -62,26 +62,31 @@ def main() -> None:
         "ER candidate generation (`er.blocking.candidate_pairs`, passjoin)",
         "Segment blocking: Catalyst explodes emit O(1) signature rows per "
         "key; all blocking shuffles carry 8-byte xxhash64 ids; hot "
-        "signatures are removed with a BROADCAST anti-join before the "
-        "equi-join; the string keys rejoin only for the banded-DP verify "
-        "(single Arrow stage).  No cartesian products anywhere.",
+        "signatures are removed by `drop_hot`'s count window (one pass "
+        "over the index, its hash partitioning on sig reused by the "
+        "equi-join) before the join; the string keys rejoin only for the "
+        "banded-DP verify (single Arrow stage).  No cartesian products "
+        "anywhere.",
         candidate_pairs(normalize_pages(pages).select("url", "norm_key")),
-        must_contain=("xxhash64",),
+        must_contain=("xxhash64", "Window"),
+        must_not=("LeftAnti",),
     )
     add(
         "N-gram Jaccard near-dup (`operators.dedup.ngram_jaccard_pairs`)",
-        "Hot shingles (document frequency > df_cap) are dropped via a "
-        "broadcast anti-join BEFORE the O(df²) self equi-join; union "
-        "denominators come from the uncapped per-doc counts.",
+        "Hot shingles (document frequency > df_cap) are dropped by "
+        "`drop_hot`'s count window BEFORE the O(df²) self equi-join; "
+        "union denominators come from the uncapped per-doc counts.",
         ngram_jaccard_pairs(docs, "doc_id", "text"),
-        must_contain=("LeftAnti",),
+        must_contain=("Window",),
+        must_not=("LeftAnti",),
     )
     add(
         "SimHash near-dup (`operators.dedup.simhash_pairs`)",
         "Radius-derived bands (pigeonhole-complete) feed the grouped "
-        "single-shuffle pair expansion (groupBy(bucket) -> member "
-        "collect -> cap -> two successive Generates; no count shuffle, "
-        "no anti-join, no band self-join).  The signature long rides "
+        "single-shuffle pair expansion (`drop_hot` window cap -> "
+        "groupBy(bucket) reusing its partitioning -> member collect -> "
+        "two successive Generates; no band self-join).  The signature "
+        "long rides "
         "the expansion as a payload, so there is no per-side join-back; "
         "the bit_count(xor) Hamming verify runs BEFORE the distinct so "
         "the dedup shuffle carries only passing pairs.",
@@ -95,12 +100,11 @@ def main() -> None:
     add(
         "MinHash-LSH near-dup (`operators.dedup.minhash_lsh_pairs`)",
         "Band buckets go through the grouped single-shuffle pair "
-        "expansion (cap applied inside the ONE groupBy(bucket) "
-        "aggregate; pairs stream out of two successive Generates — no "
-        "hot-bucket count shuffle, no broadcast anti-join, no two-sided "
-        "band self-join, so the band frame is scanned once and is not "
-        "persisted); exact integer Jaccard verify touches candidates "
-        "only.",
+        "expansion (`drop_hot` window cap, whose hash partitioning the "
+        "ONE groupBy(bucket) aggregate reuses; pairs stream out of two "
+        "successive Generates — no two-sided band self-join, so the band "
+        "frame is scanned once and is not persisted); exact integer "
+        "Jaccard verify touches candidates only.",
         minhash_lsh_pairs(docs, "doc_id", "text"),
         must_contain=("Generate",),
         must_not=("CartesianProduct", "LeftAnti"),
@@ -108,7 +112,7 @@ def main() -> None:
     add(
         "Cosine hyperplane-LSH pairs (`operators.similarity.cosine_lsh_pairs`)",
         "Arrow-batched signature stage, then the grouped single-shuffle "
-        "band pair expansion (cap inside the aggregate, two Generates); "
+        "band pair expansion (window cap, one groupBy, two Generates); "
         "vectors are too wide for the O(m^2) pair fan-out, so the exact "
         "cosine verify joins them back per side on the DISTINCT "
         "candidate set.",
@@ -160,10 +164,11 @@ def main() -> None:
         "Rolling k-gram hashes posexploded once per doc, window-min over "
         "w grams (ONE hash exchange — never a nested HOF, which "
         "CollapseProject would inline into O(n²) hashing), hot "
-        "fingerprints removed with a broadcast anti-join before the "
+        "fingerprints removed by `drop_hot`'s count window before the "
         "equi-join.",
         winnow_pairs(docs, "doc_id", "text"),
-        must_contain=("Window", "LeftAnti"),
+        must_contain=("Window",),
+        must_not=("LeftAnti",),
     )
     from orchid_fst_spark.operators.dedup import near_dedup
     from orchid_fst_spark.operators.similarity import embedding_dedup
@@ -653,13 +658,13 @@ def main() -> None:
     add(
         "Containment near-dup pairs (`operators.dedup.containment_pairs`)",
         "Identical shuffle profile to ngram_jaccard_pairs (the asserted "
-        "plan above): hot shingles removed by a BROADCAST anti-join "
+        "plan above): hot shingles removed by `drop_hot`'s count window "
         "before the O(df²) self equi-join, 8-byte xxhash64 join keys, "
         "integer-exact threshold vs least(|A|,|B|) folded into codegen. "
         "No cartesian, no Python.",
         containment_pairs(docs, "doc_id", "text", storage=None),
-        must_contain=("BroadcastHashJoin", "xxhash64"),
-        must_not=("CartesianProduct", "BatchEvalPython",
+        must_contain=("BroadcastHashJoin", "xxhash64", "Window"),
+        must_not=("CartesianProduct", "LeftAnti", "BatchEvalPython",
                   "ArrowEvalPython", "MapInPandas"),
     )
 

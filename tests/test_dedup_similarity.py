@@ -888,15 +888,32 @@ def test_ivf_assign_partial_argmax_plan(spark, emb_df):
     assert "round(" in plan
 
 
-def test_grouped_bucket_pairs_precap_modes_agree(spark):
-    """Both cap paths (default window precap = constant-memory; legacy
-    in-aggregate cap) must produce the identical pair set on a planted
-    200-copy hot cluster, and the window path must stay ONE shuffle —
-    the count() window's hash-partitioning on bucket is reused by the
-    groupBy, so EnsureRequirements elides the second Exchange."""
-    import re
+def test_drop_hot_keeps_keys_at_cap(spark):
+    """A key with exactly ``cap`` rows is kept and one with ``cap + 1``
+    is dropped, for a one- and a two-column key; the columns are the
+    input's."""
+    from orchid_fst_spark.operators.dedup import drop_hot
 
-    from pyspark.sql import functions as F
+    cap = 3
+    rows = [("a", 1, i) for i in range(cap)]
+    rows += [("b", 1, i) for i in range(cap + 1)]
+    rows += [("b", 2, i) for i in range(cap)]
+    df = spark.createDataFrame(rows, "k1 string, k2 long, v long")
+
+    one = drop_hot(df, "k1", cap)
+    assert one.columns == df.columns
+    assert sorted(tuple(r) for r in one.collect()) == rows[:cap]
+    two = {tuple(r) for r in drop_hot(df, ["k1", "k2"], cap).collect()}
+    assert two == set(rows[:cap] + rows[2 * cap + 1 :])
+
+
+def test_grouped_bucket_pairs_caps_hot_bucket_in_one_shuffle(spark):
+    """A planted 200-member hot bucket (over the cap) contributes no
+    pair, the small buckets give all their pairs with their payloads,
+    and the pipeline stays ONE shuffle: the ``drop_hot`` window's
+    hash-partitioning on bucket is reused by the groupBy, so
+    EnsureRequirements elides the second Exchange."""
+    import re
 
     from orchid_fst_spark.operators.dedup import grouped_bucket_pairs
 
@@ -906,19 +923,21 @@ def test_grouped_bucket_pairs_precap_modes_agree(spark):
     rows += [(1000 + i, 1 + i % 7, i) for i in range(30)]
     df = spark.createDataFrame(rows, "id long, bucket long, sig long")
 
-    pre = {
+    small = {}
+    for i in range(30):
+        small.setdefault(1 + i % 7, []).append(1000 + i)
+    want = {
+        (a, b, a - 1000, b - 1000)
+        for ids in small.values()
+        for a in ids
+        for b in ids
+        if a < b
+    }
+    got = {
         tuple(r)
         for r in grouped_bucket_pairs(df, cap, payload_col="sig").collect()
     }
-    legacy = {
-        tuple(r)
-        for r in grouped_bucket_pairs(
-            df, cap, payload_col="sig", precap=False
-        ).collect()
-    }
-    assert pre == legacy
-    assert all(a < 1000 + 30 and a >= 1000 for a, b, *_ in pre)  # hot gone
-    assert len(pre) > 0
+    assert got == want
 
     plan = (
         grouped_bucket_pairs(df, cap, payload_col="sig", distinct=False)

@@ -15,9 +15,9 @@ from orchid_fst_spark.sources.fixtures import gen_pages
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 #: Spark jobs one ``resolve`` call may run on ``pages_and_truth``:
-#: measured 21 in 8 of 8 calls at local[4], 8 shuffle partitions, plus
+#: measured 16 in 8 of 8 calls at local[4], 8 shuffle partitions, plus
 #: the one job by which repeated calls were seen to differ
-RESOLVE_JOB_BUDGET = 22
+RESOLVE_JOB_BUDGET = 17
 
 #: Spark jobs ``connected_components`` plus a collect may run on the
 #: shuffled 64-node path, finished on the driver (CC_JOB_BUDGET: the
@@ -461,6 +461,22 @@ def test_resolve_job_budget(spark, pages_and_truth):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("test_resolve_job_budget"))
     assert n_jobs <= RESOLVE_JOB_BUDGET, n_jobs
     assert out.count() == pages.count()
+
+
+def test_candidate_pairs_caps_with_window(spark, pages_and_truth):
+    """The passjoin index drops hot signatures through ``drop_hot``'s
+    count window, not a hot-set aggregate and anti-join."""
+    from orchid_fst_spark.er.blocking import candidate_pairs, normalize_pages
+
+    pages, _ = pages_and_truth
+    plan = (
+        candidate_pairs(normalize_pages(pages))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Window" in plan
+    assert "LeftAnti" not in plan
 
 
 def test_sig_cap_observable_recall_loss(spark, pages_and_truth):

@@ -81,6 +81,56 @@ def test_incremental_er_matches_batch(spark, tmp_path):
     assert got == batch
 
 
+def test_incremental_er_cross_batch_join_uses_sig_cap(spark, tmp_path):
+    """The cross-batch join caps hot signatures at the caller's
+    ``sig_cap``: a batch's stored edges are exactly its self pairs plus
+    its join against the stored keys, both at that cap.  The 4-char keys
+    all share passjoin's short-band signature, which 3 keys per side
+    make hot at cap 2 (and not at the default 1000)."""
+    from orchid_fst_spark.operators.dictionary import fuzzy_join, fuzzy_self_pairs
+
+    src = str(tmp_path / "in")
+    state = str(tmp_path / "state")
+    os.makedirs(src)
+    cap, opts = 2, dict(k=2, damerau=True, max_len=96, algo="passjoin")
+    old_rows = [(f"http://ab/{c}", c) for c in "abc"]
+    old_rows.append(("http://ab/green-plastic-table", "green plastic table"))
+    new_rows = [(f"http://ab/{c}", c) for c in "def"]
+    new_rows.append(("http://ab/gren-plastic-table", "green plastic table"))
+    for name, rows in (("drop1", old_rows), ("drop2", new_rows)):
+        _mk_pages(spark, rows).write.mode("overwrite").parquet(
+            os.path.join(src, name)
+        )
+        q = incremental_er(
+            read_pages_stream(spark, src + "/*"), state, sig_cap=cap
+        )
+        q.awaitTermination(120)
+
+    keys = spark.read.parquet(os.path.join(state, "keys"))
+    last = keys.agg(F.max("batch_id")).collect()[0][0]
+    new = keys.filter(F.col("batch_id") == last).select("norm_key")
+    old = keys.filter(F.col("batch_id") < last).select("norm_key")
+
+    def pairs(df):
+        return {
+            (min(r.key_a, r.key_b), max(r.key_a, r.key_b))
+            for r in df.collect()
+            if r.key_a != r.key_b
+        }
+
+    def cross(sig_cap):
+        return pairs(
+            fuzzy_join(new, old, "norm_key", "norm_key", sig_cap=sig_cap, **opts)
+        )
+
+    within = pairs(fuzzy_self_pairs(new, "norm_key", sig_cap=cap, **opts))
+    assert cross(cap) != cross(1000)  # the cap drops the short-band pairs
+    assert ("ab/green-plastic-table", "ab/gren-plastic-table") in cross(cap)
+    edges = spark.read.parquet(os.path.join(state, "edges"))
+    got = pairs(edges.filter(F.col("batch_id") == last))
+    assert got == within | cross(cap)
+
+
 def test_stream_dedup_urls(spark, tmp_path):
     src = str(tmp_path / "in")
     state = str(tmp_path / "state")
